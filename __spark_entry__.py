@@ -4,31 +4,33 @@ entry(spark)      -> flagship query on /root/testdata/sf0.001
 queries()         -> {name: (spark, sf_dir) -> DataFrame} per SURVEY.md §2
 oracle_sql()      -> {name: DuckDB SQL} for every SQL-expressible query
 
-Implementations live in osmexpress_spark.queries (relational inventory
-+ events analytics), queries_data (LLM-pipeline operators),
-queries_osm (fixture-dataset OSM pipelines), and queries_update
-(update/diff family). EVERY registered query carries a DuckDB oracle —
-including the OSM-domain pipelines, whose oracles run over an
-independent pyarrow copy of the deterministic fixture.
+Every query registers in osmexpress_spark.registry from one of the
+query modules: queries (relational inventory + events analytics),
+queries_data (LLM-pipeline operators), queries_osm (fixture-dataset OSM
+pipelines) and queries_update (update/diff family). EVERY registered
+query carries a DuckDB oracle — including the OSM-domain pipelines,
+whose oracles run over an independent pyarrow copy of the
+deterministic fixture.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
+from osmexpress_spark import registry  # noqa: E402
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the star-join revenue rollup (Catalyst join ordering +
     broadcast dims + decimal-exact aggregation) at sf0.001."""
-    from osmexpress_spark import queries as Q
-
-    return Q.SPARK_QUERIES["q_star_join_revenue"](spark, "/root/testdata/sf0.001")
+    return registry.queries()["q_star_join_revenue"](
+        spark, "/root/testdata/sf0.001"
+    )
 
 
 # The driver validates the FIRST 50 entries of queries() in
@@ -75,43 +77,17 @@ def _latest_green_round() -> dict[str, int]:
     return latest
 
 
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
-
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    merged.update(Q.SPARK_QUERIES)
-    merged.update(QD.SPARK_QUERIES)
-    merged.update(QO.SPARK_QUERIES)
-    merged.update(QU.SPARK_QUERIES)
-    return merged
-
-
 def priority_order() -> list[str]:
     """Registry names, never-green first then oldest-evidence first;
     ties broken by registration order (stable sort)."""
-    merged = _registry()
     green = _latest_green_round()
-    names = list(merged)
-    return sorted(names, key=lambda n: green.get(n, -1))
+    return sorted(registry.queries(), key=lambda n: green.get(n, -1))
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged = _registry()
-    return {name: merged[name] for name in priority_order()}
+def queries() -> dict[str, registry.QueryFn]:
+    live = registry.queries()
+    return {name: live[name] for name in priority_order()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
-
-    out: dict[str, str] = {}
-    out.update(Q.ORACLE_SQL)
-    out.update(QD.ORACLE_SQL)
-    out.update(QO.oracle_sql())
-    out.update(QU.ORACLE_SQL)
-    return out
+    return registry.oracle_sql()

@@ -156,11 +156,11 @@ HEADLINE = [
     "q_audio_mp3_decode",
 ]
 
-# Staged-but-not-yet-promoted queries get their planned bench lines
-# listed here so promotion cannot silently drop perf coverage
-# (tests/test_bench_hygiene.py checks this list against the pending
-# registry). At the next promotion these move into HEADLINE with a
-# family assignment in tests/test_bench_hygiene.py FAMILIES.
+# Staged queries (registry.defq(..., pending=True)) get their planned
+# bench lines listed here so promotion cannot silently drop perf
+# coverage (tests/test_bench_hygiene.py checks this list against the
+# staged names). At promotion these move into HEADLINE with a family
+# assignment in tests/test_bench_hygiene.py FAMILIES.
 PENDING_HEADLINE: list[str] = [
     "q_psl_domain",
     "q_audio_mp3_pcm",
@@ -178,19 +178,65 @@ def _loadavg() -> list[float]:
         return []
 
 
+# The driver captures a bounded 2000-char tail of stdout and parses the
+# FINAL JSON line from it (r07: the full 119-entry map made the line
+# >2000 chars -> "parsed": null; r11: a top-10 line parsed but left PERF
+# with n_common=4 and six 2-11x wins mislabeled "dropped_from_bench").
+# So the final line packs as many per-query entries as fit a 1900-char
+# budget, slowest first — ~65 of the 120 lines, everything over roughly
+# a second — after seeding with the r11 parsed keys so no
+# previously-reported query can fall out of the summary ("queries"
+# entries are grow-only per the driver contract). The full 3-decimal
+# map still lands in the first stdout line and in bench_detail.json.
+ALWAYS_REPORT = [
+    # the r11 parsed top-10 (BENCH_r11.json "parsed"."queries")
+    "osm_osmx_roundtrip", "q_prefix_filter_pairs", "osm_pbf_sink",
+    "q_augmented_diff_analog", "q_image_near_dup", "q_bm25_store",
+    "q_frequent_tokens", "osm_extract_bbox", "q_ngram_jaccard",
+    "osm_update_batches",
+]
+
+
+def summary_line(detail: dict) -> str:
+    """The compact final JSON line for the full record ``detail``. An
+    ALWAYS_REPORT name that did not run is left out: a missing line
+    must not cost the whole summary."""
+    timings = detail["queries"]
+    order = [k for k in ALWAYS_REPORT if k in timings] + [
+        k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])
+        if k not in ALWAYS_REPORT
+    ]
+
+    def line(qs: dict[str, float]) -> str:
+        return json.dumps(
+            {
+                "metric": detail["metric"],
+                "value": detail["value"],
+                "unit": detail["unit"],
+                "queries": qs,
+                "n_queries": len(timings),
+                "detail": "bench_detail.json",
+                "sf": detail["sf"],
+                "loadavg_start": detail["loadavg_start"],
+                "loadavg_end": detail["loadavg_end"],
+            },
+            separators=(",", ":"),
+        )
+
+    packed: dict[str, float] = {}
+    for name in order:
+        trial = {**packed, name: round(timings[name], 2)}
+        if len(line(trial)) > 1900:
+            break
+        packed = trial
+    return line(packed)
+
+
 def main() -> None:
     load_start = _loadavg()
-    from osmexpress_spark import queries as Q
     from osmexpress_spark import queries_data as QD
     from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
-
-    registry = {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
+    from osmexpress_spark import registry
 
     spark = get_spark(
         app_name="osmx-bench",
@@ -198,43 +244,7 @@ def main() -> None:
         shuffle_partitions=int(CPUS),
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warmup: session/codegen startup + fixture materialization
-    Q.SPARK_QUERIES["q_projection"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    QO.SPARK_QUERIES["osm_stats"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # r12 warmup completion (measured; OPTIMIZATION_r12.md "bench
-    # contract"): the two warmup queries above never start a Python
-    # worker, never shuffle and never broadcast, so the FIRST timed
-    # query to do each used to absorb one-time session infrastructure —
-    # ~4.8 s of Python-worker pool spin-up (fork + pandas/pyarrow/numpy
-    # imports, 32 workers) landed on q_image_near_dup and ~2-3 s of
-    # first-shuffle/aggregate/broadcast codegen on q1_pricing_summary.
-    # Warm those runtime paths on SYNTHETIC range data: no fixture
-    # table is touched, no query result or intermediate is cached —
-    # every timed query still computes from its parquet inputs.
-    def _warm_workers(batches):
-        import hashlib  # noqa: F401
-        import numpy  # noqa: F401  (seam decoders import these lazily)
-        for pdf in batches:
-            yield pdf
-
-    slots = spark.sparkContext.defaultParallelism
-    spark.range(slots * 4).repartition(slots).mapInPandas(
-        _warm_workers, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    from pyspark.sql import functions as F
-
-    _rng = spark.range(100_000).select(
-        (F.col("id") % 97).alias("k"), F.col("id").alias("v")
-    )
-    _agg = _rng.groupBy("k").agg(F.sum("v").alias("s"), F.count("*").alias("c"))
-    _agg.join(F.broadcast(_agg.select("k", "s")), "k").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    registry.warm_up(spark, SF_DIR)
 
     timings: dict[str, float] = {}
 
@@ -252,14 +262,7 @@ def main() -> None:
     QD._osmx_fixture_path()
     timings["osm_osmx_build"] = round(time.monotonic() - t0, 3)
     for name in HEADLINE:
-        # time build + execute: DataFrame construction is part of the
-        # query cost (some operators run planning jobs, e.g. the
-        # closure's driver probe), so excluding it would reward moving
-        # work into the untimed phase.
-        t0 = time.monotonic()
-        df = registry[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.monotonic() - t0, 3)
+        timings[name] = round(registry.run(spark, name, SF_DIR), 3)
 
     # the 100 TB form of the profile contract: HLL++ approx distinct
     # replaces the exact multi-DISTINCT (whose Catalyst Expand
@@ -385,55 +388,7 @@ def main() -> None:
             json.dump(detail, f, indent=1, sort_keys=True)
     except OSError:
         pass  # read-only checkout: stdout already carries the map
-    # The driver captures a bounded 2000-char tail of stdout and parses
-    # the FINAL JSON line from it (r07: the full 119-entry map made the
-    # line >2000 chars -> "parsed": null; r11: a top-10 line parsed but
-    # left PERF with n_common=4 and six 2-11x wins mislabeled
-    # "dropped_from_bench").  Fix (VERDICT r11 next-round #1a): pack the
-    # final line with as many per-query entries as fit a 1900-char
-    # budget, slowest first — ~65 of the 120 lines, everything over
-    # roughly a second — after seeding with the r11 parsed keys so no
-    # previously-reported query can ever fall out of the summary
-    # ("queries" entries are grow-only per the driver contract).  The
-    # full 3-decimal map still lands in the first stdout line and in
-    # bench_detail.json.
-    always_report = [
-        # the r11 parsed top-10 (BENCH_r11.json "parsed"."queries")
-        "osm_osmx_roundtrip", "q_prefix_filter_pairs", "osm_pbf_sink",
-        "q_augmented_diff_analog", "q_image_near_dup", "q_bm25_store",
-        "q_frequent_tokens", "osm_extract_bbox", "q_ngram_jaccard",
-        "osm_update_batches",
-    ]
-    order = always_report + [
-        k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])
-        if k not in always_report
-    ]
-    summary_queries: dict[str, float] = {}
-    budget = 1900
-
-    def _line(qs: dict[str, float]) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": qs,
-                "n_queries": len(timings),
-                "detail": "bench_detail.json",
-                "sf": sf_val,
-                "loadavg_start": load_start,
-                "loadavg_end": detail["loadavg_end"],
-            },
-            separators=(",", ":"),
-        )
-
-    for name in order:
-        trial = dict(summary_queries)
-        trial[name] = round(timings[name], 2)
-        if len(_line(trial)) > budget:
-            break
-        summary_queries = trial
-    print(_line(summary_queries))
+    print(summary_line(detail))
     spark.stop()
 
 

@@ -1931,7 +1931,7 @@ def embedding_gram(
     # dim*(dim+1)/2 interpreted structs per row and exploded them
     # (2,080 decimal rows/doc) into the aggregate; lambda HOFs never
     # enter whole-stage codegen, so per-row cost was the plan's wall.
-    # The A/B (tools/ab_gram_arrow.py, results identical row-for-row):
+    # The A/B (OPTIMIZATION_r12.md §10, results identical row-for-row):
     # mapInArrow + integer numpy matmul is ~equal at sf0.1 (0.84 vs
     # 0.96 s warm) and 10x at 32x rows (0.7 vs 7.3 s) — each Arrow
     # batch emits ONE 2,080-row int partial (better-than-map-side

@@ -33,8 +33,6 @@ pivot) the reference lacks but our SQL surface exposes for free.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -43,20 +41,7 @@ from pyspark.sql import types as T
 
 from .operators.asof import asof_join
 from .operators.closure import transitive_closure
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def defq(name: str, oracle: str | None = None):
-    def wrap(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
-
+from .registry import defq
 
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     """Normalize TIMESTAMP_NTZ columns to TIMESTAMP (LTZ).
@@ -952,10 +937,9 @@ def q_cohort_retention(spark, sf_dir):
 def q_grouping_sets(spark, sf_dir):
     """GROUPING SETS with grouping_id — the general form under rollup/
     cube (one Expand + one aggregate in Catalyst; DuckDB plans the
-    same shape). Declared via Spark SQL over a temp view: grouping
-    sets have no DataFrame-API spelling."""
-    li = t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("q_gs_lineitem")
+    same shape). The frame is passed to spark.sql as a parameter, not
+    registered as a view: a fixed-name view is session state that
+    concurrent runs would race on."""
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
@@ -964,10 +948,11 @@ def q_grouping_sets(spark, sf_dir):
                count(*) AS n,
                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
                  AS sum_qty
-        FROM q_gs_lineitem
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                                 (l_returnflag), ())
-        """
+        """,
+        li=t(spark, sf_dir, "lineitem"),
     )
 
 

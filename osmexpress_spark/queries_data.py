@@ -16,34 +16,20 @@ double products). Parity rules beyond queries.py:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import (
     dedup, multimodal, profile, retrieval, sample, similarity, skew, text,
 )
 from .queries import t
+from .registry import defq
 from .streaming import stateful, watermark_ops
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_SQL: dict[str, str] = {}
 
 EMB_DIM = 64
 N_HASHES = 8
 N_BANDS = 4
 SHINGLE_K = 2
-
-
-def defq(name: str, oracle: str | None = None):
-    def wrap(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
 
 
 # --- text analysis ---------------------------------------------------------
@@ -923,7 +909,11 @@ def _drain(df, mode):
         q.processAllAvailable()
     finally:
         q.stop()
-    return df.sparkSession.table(name)
+    out = df.sparkSession.table(name)
+    # the frame holds the resolved sink; the view the sink registered
+    # would otherwise stay in the session catalog, one per call
+    df.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 @defq(
@@ -1196,11 +1186,7 @@ def q_domain_mix(spark, sf_dir):
 
 
 _CONTAM_K = 3
-
-
-@defq(
-    "q_contamination",
-    f"""
+_CONTAMINATION_SQL = f"""
     WITH ws AS (
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), sh AS (
@@ -1218,8 +1204,10 @@ _CONTAM_K = 3
     WHERE i.doc_id <> b.bench_id
     GROUP BY i.doc_id, b.bench_id
     HAVING COUNT(*) >= 2
-    """,
-)
+    """
+
+
+@defq("q_contamination", _CONTAMINATION_SQL)
 def q_contamination(spark, sf_dir):
     """Benchmark decontamination: corpus docs sharing >= 2 word
     3-grams with any "benchmark" doc (doc_id % 97 == 0 stands in for
@@ -2198,10 +2186,7 @@ def q_ivfpq_topk(spark, sf_dir):
     )
 
 
-@defq(
-    "q_contamination_bloom",
-    ORACLE_SQL["q_contamination"],
-)
+@defq("q_contamination_bloom", _CONTAMINATION_SQL)
 def q_contamination_bloom(spark, sf_dir):
     """Bloom-pruned decontamination (dedup.py:
     contamination_pairs_bloom): a deterministic Bloom filter over the
@@ -3035,34 +3020,10 @@ def q_incremental_dedup(spark, sf_dir):
     )
 
 
-# --- staging area for new contract queries ---------------------------------
-# A never-green entry sorts to the head of priority_order() and evicts
-# an aged row from the driver's 50-slot window, so when the window must
-# stay stable for a round, new queries register here via defq_pending
-# instead of defq; tests/test_oracle_parity.py runs them through the
-# SAME strict gate, and the following round promotes them with the
-# SPARK_QUERIES.update(...) merge at the bottom of this file.
-# Round-5 staged nine queries (quantile sketch family, exact quantiles,
-# k-means training, CMS-pruned frequent items, BPE pair counts,
-# streaming sketch); round 6 promoted all nine — see the merge below.
-PENDING_SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-PENDING_ORACLE_SQL: dict[str, str] = {}
-
-
-def defq_pending(name: str, oracle: str | None = None):
-    def wrap(fn):
-        PENDING_SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            PENDING_ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
-
-
 _QSK_QUANTILES = [(50, 100), (90, 100), (99, 100), (999, 1000)]
 
 
-@defq_pending(
+@defq(
     "q_quantile_sketch",
     f"""
     WITH b AS (
@@ -3119,7 +3080,7 @@ _KMT_K = 8
 _KMT_DIM = 64
 
 
-@defq_pending(
+@defq(
     "q_kmeans_train",
     f"""
     WITH qv AS (
@@ -3181,7 +3142,7 @@ def q_kmeans_train(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_quantile_by_group",
     f"""
     WITH b AS (
@@ -3236,7 +3197,7 @@ def q_quantile_by_group(spark, sf_dir):
     return sketch.quantile_sketch_query_by(sk, [(50, 100), (99, 100)])
 
 
-@defq_pending(
+@defq(
     "q_exact_quantiles",
     f"""
     WITH ranked AS (
@@ -3268,7 +3229,7 @@ def q_exact_quantiles(spark, sf_dir):
     return sketch.exact_quantiles(d, F.col("n_chars"), _QSK_QUANTILES)
 
 
-@defq_pending(
+@defq(
     "q_bpe_pair_counts",
     """
     WITH w AS (
@@ -3322,7 +3283,7 @@ def q_bpe_pair_counts(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_stream_quantile_sketch",
     """
     SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) AS win_start,
@@ -3358,7 +3319,7 @@ def q_stream_quantile_sketch(spark, sf_dir):
 _QSM_QUANTILES = [(25, 100), (75, 100)]
 
 
-@defq_pending(
+@defq(
     "q_quantile_sketch_merge",
     f"""
     WITH b AS (
@@ -3416,7 +3377,7 @@ def q_quantile_sketch_merge(spark, sf_dir):
     return sketch.quantile_sketch_query(merged, _QSM_QUANTILES)
 
 
-@defq_pending(
+@defq(
     "q_exact_quantiles_by",
     """
     WITH ranked AS (
@@ -3455,7 +3416,7 @@ def q_exact_quantiles_by(spark, sf_dir):
 _FREQ_MIN = 200
 
 
-@defq_pending(
+@defq(
     "q_frequent_tokens",
     f"""
     SELECT item, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3477,23 +3438,6 @@ def q_frequent_tokens(spark, sf_dir):
     toks = d.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
     return sketch.exact_frequent_items(toks, F.col("tok"), _FREQ_MIN)
 
-
-# --- round-6 promotion ------------------------------------------------------
-# Merge the round-5 staging set into the live registry (VERDICT r05 ask
-# #1). The nine queries are never-green in the committed CORRECTNESS
-# evidence, so priority_order() serves them in the first window slots,
-# followed by the 40 r03-aged rows + the oldest r04 row — exactly 50.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-6 staged queries (promote in round 7) ----------------------------
-# defq_pending now appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-6 driver window must stay exactly
-# the 9 promoted + 40 r03-aged + 1 r04 rows (VERDICT r05 ask #2).
 
 _BPE_N_MERGES = 8
 
@@ -3581,7 +3525,7 @@ _BPE_MERGES_ORACLE = (
 )
 
 
-@defq_pending("q_bpe_merges", _BPE_MERGES_ORACLE)
+@defq("q_bpe_merges", _BPE_MERGES_ORACLE)
 def q_bpe_merges(spark, sf_dir):
     """The BPE training LOOP behind the driver gate (VERDICT r05 ask
     #3): 8 full merge iterations of operators/bpe.py:bpe_train over the
@@ -3599,9 +3543,6 @@ def q_bpe_merges(spark, sf_dir):
     merges = bpe.bpe_train(words, n_merges=_BPE_N_MERGES)
     rows = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
     return spark.createDataFrame(rows, "rank int, a string, b string")
-
-
-# --- round-6 session additions (stay PENDING until the r07 promotion) -------
 
 
 def _qsk_bucket_sql(col: str) -> str:
@@ -3633,7 +3574,7 @@ def _qsk_bounds_sql(bucket: str) -> tuple[str, str]:
 _DRIFT_LO, _DRIFT_HI = _qsk_bounds_sql("bucket")
 
 
-@defq_pending(
+@defq(
     "q_dist_drift",
     f"""
     WITH ob AS (SELECT {_qsk_bucket_sql('n_chars')} AS bucket
@@ -3673,7 +3614,7 @@ def q_dist_drift(spark, sf_dir):
 _MAD_SCALE = (2, 1)
 
 
-@defq_pending(
+@defq(
     "q_mad_outliers",
     f"""
     WITH v AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS v
@@ -3708,7 +3649,7 @@ def q_mad_outliers(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_winsorized_stats",
     """
     WITH v AS (SELECT lang, CAST(n_chars AS BIGINT) AS v
@@ -3747,7 +3688,7 @@ _RRF_TERMS = ["hash", "join", "spark"]
 _RRF_QID = 7
 
 
-@defq_pending(
+@defq(
     "q_rrf_fusion",
     retrieval.rrf_oracle_sql(
         _RRF_TERMS, query_vec_id=_RRF_QID, dim=EMB_DIM, k=10, k_each=20
@@ -3782,7 +3723,7 @@ _HTML_DOC_SQL = (
 )
 
 
-@defq_pending(
+@defq(
     "q_html_strip",
     f"""
     SELECT doc_id,
@@ -3816,7 +3757,7 @@ def q_html_strip(spark, sf_dir):
 _BUDGET_TOKENS = 1500
 
 
-@defq_pending(
+@defq(
     "q_token_budget",
     f"""
     WITH v AS (
@@ -3853,7 +3794,7 @@ def q_token_budget(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_dist_drift_by",
     f"""
     WITH ob AS (SELECT lang AS key, {_qsk_bucket_sql('n_chars')} AS bucket
@@ -3938,7 +3879,7 @@ _NB_FINALS_SQL = """
                FROM scored s JOIN prior_micro p USING(label))"""
 
 
-@defq_pending(
+@defq(
     "q_nb_token_counts",
     f"""
     WITH {_NB_TOKS_SQL}
@@ -3958,7 +3899,7 @@ def q_nb_token_counts(spark, sf_dir):
     return classify.nb_token_counts(d, F.col("lang"), F.col("text"))
 
 
-@defq_pending(
+@defq(
     "q_nb_confusion",
     f"""
     WITH {_NB_TOKS_SQL},
@@ -3990,7 +3931,7 @@ def q_nb_confusion(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_shard_manifest",
     f"""
     SELECT {sample.hash_bucket_sql('doc_id', 8)} AS shard,
@@ -4026,7 +3967,7 @@ _SHINGLE_JOIN_EXPR = " || ' ' || ".join(
 )
 
 
-@defq_pending(
+@defq(
     "q_source_overlap",
     f"""
     WITH sh AS (
@@ -4130,7 +4071,7 @@ _KC_ORACLE = (
 )
 
 
-@defq_pending("q_kcenter_select", _KC_ORACLE)
+@defq("q_kcenter_select", _KC_ORACLE)
 def q_kcenter_select(spark, sf_dir):
     """Greedy farthest-point k-center coreset selection
     (similarity.py:kcenter_select, Gonzalez 1985): five maximally
@@ -4155,7 +4096,7 @@ _NB_MARGIN_BUCKET_SQL = """
                  >> greatest(length(bin(mg)) - 1 - 4, 0)) END AS INTEGER)"""
 
 
-@defq_pending(
+@defq(
     "q_nb_reliability",
     f"""
     WITH {_NB_TOKS_SQL},
@@ -4199,7 +4140,7 @@ def q_nb_reliability(spark, sf_dir):
 _ED_K = 8
 
 
-@defq_pending(
+@defq(
     "q_embedding_drift",
     f"""
     WITH qv AS (
@@ -4244,7 +4185,7 @@ def q_embedding_drift(spark, sf_dir):
     return similarity.embedding_drift_census(old, new, k=_ED_K)
 
 
-@defq_pending(
+@defq(
     "q_hard_negatives",
     f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv
@@ -4285,7 +4226,7 @@ def q_hard_negatives(spark, sf_dir):
     ).withColumn("neg_rank", F.col("neg_rank").cast("int"))
 
 
-@defq_pending(
+@defq(
     "q_manifest_merge",
     f"""
     SELECT {sample.hash_bucket_sql('doc_id', 8)} AS shard,
@@ -4317,7 +4258,7 @@ def q_manifest_merge(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_event_spikes",
     """
     WITH c AS (
@@ -4354,7 +4295,7 @@ def q_event_spikes(spark, sf_dir):
     return events.rate_spikes(d)
 
 
-@defq_pending(
+@defq(
     "q_split_leakage",
     f"""
     WITH {_minhash_pairs_ctes()},
@@ -4387,29 +4328,7 @@ def q_split_leakage(spark, sf_dir):
     )
 
 
-# --- round-7 promotion ------------------------------------------------------
-# Merge the round-6 staging set into the live registry (VERDICT r06 ask
-# #1). The nineteen queries are never-green in the committed
-# CORRECTNESS evidence, so priority_order() serves them in the first
-# window slots, followed by the 31 oldest r04-aged rows — exactly 50.
-# The registry holds at 168 for the round (ask #2): new round-7 work
-# stages through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-7 staged queries (promote in round 8) ----------------------------
-# defq_pending now appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-7 driver window must stay exactly
-# the 19 promoted + 31 oldest-r04 rows (VERDICT r06 asks #1/#2), and
-# round 8 keeps the registry frozen so the remaining ~18 r04 rows
-# rotate through (ask #3).
-
-
-@defq_pending(
+@defq(
     "q_stream_drift",
     f"""
     WITH ref AS (SELECT {_qsk_bucket_sql('n_chars')} AS bucket
@@ -4503,7 +4422,7 @@ def _stream_drift_impl(spark, sf_dir, max_files_per_trigger):
     )
 
 
-@defq_pending(
+@defq(
     "q_hard_negatives_ivf",
     f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv
@@ -4548,7 +4467,7 @@ def q_hard_negatives_ivf(spark, sf_dir):
     ).withColumn("neg_rank", F.col("neg_rank").cast("int"))
 
 
-@defq_pending(
+@defq(
     "q_embedding_gram",
     f"""
     WITH qv AS (
@@ -4588,7 +4507,7 @@ def q_embedding_gram(spark, sf_dir):
     ).withColumn("gram", F.col("gram").cast("string"))
 
 
-@defq_pending(
+@defq(
     "q_softdedup_weights",
     f"""
     WITH RECURSIVE {_dup_cluster_ctes()},
@@ -4620,7 +4539,7 @@ def q_softdedup_weights(spark, sf_dir):
 _VG_BUCKETS = 10
 
 
-@defq_pending(
+@defq(
     "q_vocab_growth",
     f"""
     WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS m FROM documents),
@@ -4654,7 +4573,7 @@ def q_vocab_growth(spark, sf_dir):
     return text_ops.vocab_growth(d, "text", "doc_id", _VG_BUCKETS)
 
 
-@defq_pending(
+@defq(
     "q_ngram_novelty",
     f"""
     WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 != 0),
@@ -4712,7 +4631,7 @@ def q_ngram_novelty(spark, sf_dir):
 _RB_TOKENS = "CAST(len(string_split(text, ' ')) AS BIGINT)"
 
 
-@defq_pending(
+@defq(
     "q_rank_blend",
     f"""
     WITH v AS (
@@ -4762,7 +4681,7 @@ def q_rank_blend(spark, sf_dir):
 _BSB_BUDGETS = {"src0": 40_000, "src1": 25_000, "src2": 15_000}
 
 
-@defq_pending(
+@defq(
     "q_budget_by_domain",
     f"""
     WITH v AS (
@@ -4805,7 +4724,7 @@ def q_budget_by_domain(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_modality_alignment",
     """
     WITH d AS (SELECT doc_id AS id FROM documents WHERE doc_id % 7 != 0),
@@ -4909,7 +4828,7 @@ def _profile_diff_oracle() -> str:
     """
 
 
-@defq_pending("q_profile_diff", _profile_diff_oracle())
+@defq("q_profile_diff", _profile_diff_oracle())
 def q_profile_diff(spark, sf_dir):
     """Epoch-over-epoch profile gate (operators/profile.py:
     profile_diff): diff the even-half profile against the odd-half
@@ -5019,7 +4938,7 @@ _IMAGE_BANDS_SQL = """
     ),"""
 
 
-@defq_pending(
+@defq(
     "q_image_near_dup",
     _IMAGE_BANDS_SQL + _banded_hamming_tail_sql("bands"),
 )
@@ -5087,7 +5006,7 @@ _AUDIO_BANDS_SQL = """
     ),"""
 
 
-@defq_pending(
+@defq(
     "q_audio_fingerprint",
     _AUDIO_BANDS_SQL + _banded_hamming_tail_sql("bands"),
 )
@@ -5114,7 +5033,7 @@ def q_audio_fingerprint(spark, sf_dir):
     return multimodal.near_dup_by_bands(bands, max_hamming=3)
 
 
-@defq_pending(
+@defq(
     "q_distinctive_terms",
     """
     WITH tf AS (
@@ -5162,7 +5081,7 @@ def q_distinctive_terms(spark, sf_dir):
     return text.distinctive_terms(d, "source", "text", top_k=10)
 
 
-@defq_pending(
+@defq(
     "q_mix_plan",
     """
     WITH avail AS (
@@ -5216,7 +5135,7 @@ def q_mix_plan(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_image_ingest_dedup",
     _IMAGE_BANDS_SQL
     + _banded_hamming_tail_sql(
@@ -5257,7 +5176,7 @@ def q_image_ingest_dedup(spark, sf_dir):
     return multimodal.near_dup_against_store(new, ref, max_hamming=3)
 
 
-@defq_pending(
+@defq(
     "q_format_census",
     """
     WITH split AS (
@@ -5290,7 +5209,7 @@ def q_format_census(spark, sf_dir):
     return multimodal.format_census(blobs)
 
 
-@defq_pending(
+@defq(
     "q_quota_fill",
     """
     WITH req AS (
@@ -5348,7 +5267,7 @@ def q_quota_fill(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_flac_stats",
     """
     WITH blocks AS (
@@ -5402,7 +5321,7 @@ def q_audio_flac_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_ingest_dedup",
     _AUDIO_BANDS_SQL
     + _banded_hamming_tail_sql(
@@ -5461,7 +5380,7 @@ _IMG_CLUSTER_FINAL = """,
     """
 
 
-@defq_pending(
+@defq(
     "q_image_dup_clusters",
     "WITH RECURSIVE"
     + _IMAGE_BANDS_SQL[len("\n    WITH"):]
@@ -5497,7 +5416,7 @@ _IMA_STEP_SQL = (
 )
 
 
-@defq_pending(
+@defq(
     "q_audio_g711_stats",
     """
     WITH blocks AS (
@@ -5564,7 +5483,7 @@ def q_audio_g711_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_adpcm_stats",
     """
     WITH RECURSIVE
@@ -5657,7 +5576,7 @@ def q_audio_adpcm_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_image_jpeg_stats",
     """
     WITH prows AS (
@@ -5708,7 +5627,7 @@ def q_image_jpeg_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_bm25_store",
     retrieval.bm25_oracle_sql(["hash", "join", "spark"], k=10),
 )
@@ -5732,7 +5651,7 @@ def q_bm25_store(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_kmv_distinct_by",
     f"""
     WITH kw AS (
@@ -5784,7 +5703,7 @@ def q_kmv_distinct_by(spark, sf_dir):
     return sketch.kmv_distinct_estimate_by(sh, "source", F.col("s"), k=KMV_K)
 
 
-@defq_pending(
+@defq(
     "q_dedup_masks",
     f"""
     WITH mws AS (
@@ -5836,7 +5755,7 @@ def q_dedup_masks(spark, sf_dir):
     return dedup.dedup_span_masks(d, "doc_id", "text", k=SPAN_K)
 
 
-@defq_pending(
+@defq(
     "q_bitext_mine",
     f"""
     WITH bs AS (
@@ -5918,7 +5837,7 @@ _G711_MAG_SQL = """
              END"""
 
 
-@defq_pending(
+@defq(
     "q_wav_segments_stats",
     f"""
     WITH vblocks AS (
@@ -6019,7 +5938,7 @@ def q_wav_segments_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_rollup_store",
     """
     WITH rr AS (
@@ -6067,7 +5986,7 @@ def q_rollup_store(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_hashed_features",
     """
     WITH tk AS (
@@ -6115,7 +6034,7 @@ def q_hashed_features(spark, sf_dir):
     return text.hashed_features_stats(d, dim=64)
 
 
-@defq_pending(
+@defq(
     "q_image_webp_stats",
     """
     WITH wrows AS (
@@ -6175,7 +6094,7 @@ def q_image_webp_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_stream_rollup",
     """
     WITH rr AS (
@@ -6256,26 +6175,6 @@ def _stream_rollup_impl(spark, sf_dir, max_files_per_trigger):
     )
 
 
-# --- round-8 promotion ------------------------------------------------------
-# Merge the round-7 staging set into the live registry (VERDICT r07 ask
-# #1). The thirty-two queries are never-green in the committed
-# CORRECTNESS evidence, so priority_order() serves them in the first
-# window slots, followed by the 18 remaining r04-aged rows — exactly
-# 50. The registry holds at 200 for the round (ask #2): new round-8
-# work stages through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-8 staged queries (promote in round 9) ----------------------------
-# defq_pending appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-8 driver window must stay exactly
-# the 32 promoted + 18 oldest-r04 rows (VERDICT r07 asks #1/#2).
-
-
 def _osmx_fixture_path() -> str:
     """The fixture dataset serialized as a literal `.osmx` (LMDB) file
     through sources/osmx.write_osmx — built once, marker-cached beside
@@ -6341,7 +6240,7 @@ SELECT * FROM (
 ) ORDER BY type"""
 
 
-@defq_pending("osm_osmx_roundtrip", oracle=_osmx_oracle())
+@defq("osm_osmx_roundtrip", oracle=_osmx_oracle)
 def osm_osmx_roundtrip(spark, sf_dir):
     """The literal `.osmx` migration path (VERDICT r07 missing #1):
     the fixture dataset serialized into a real LMDB file our writer
@@ -6380,7 +6279,7 @@ def osm_osmx_roundtrip(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_join_size_estimate",
     f"""
     WITH cj AS (SELECT unnest(range({CMS_D})) AS j),
@@ -6446,27 +6345,6 @@ def q_join_size_estimate(spark, sf_dir):
     )
 
 
-# --- round-9 promotion ------------------------------------------------------
-# Merge the round-8 staging set — osm_osmx_roundtrip (the .osmx LMDB
-# migration gate) and q_join_size_estimate (the CMS join-size gate) —
-# into the live registry (PERF.md "Round 9 must" #1). Both are
-# never-green in the committed CORRECTNESS evidence, so
-# priority_order() serves them in the first window slots, followed by
-# 48 of the 50 r05-aged rows. The registry holds at 202 for the round
-# (#3): new round-9 work stages through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-9 staged queries (promote in round 10) ---------------------------
-# defq_pending appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-9 driver window must stay exactly
-# the 2 promoted + 48 oldest-r05 rows (PERF.md "Round 9 must" #2).
-
-
 # generated from SHINGLE_K so the oracle's shingle width can never
 # silently diverge from the engine's (it used to hardcode the bigram)
 _SHINGLE_CONCAT_SQL = " || ' ' || ".join(
@@ -6474,7 +6352,7 @@ _SHINGLE_CONCAT_SQL = " || ' ' || ".join(
 )
 
 
-@defq_pending(
+@defq(
     "q_prefix_filter_pairs",
     f"""
     WITH d AS (
@@ -6533,7 +6411,7 @@ _BPE_CENSUS_ORACLE = (
 )
 
 
-@defq_pending("q_bpe_token_census", _BPE_CENSUS_ORACLE)
+@defq("q_bpe_token_census", _BPE_CENSUS_ORACLE)
 def q_bpe_token_census(spark, sf_dir):
     """The tokenizer APPLY half behind a driver gate: train 8 merges
     (the q_bpe_merges loop), replay them over the vocabulary with the
@@ -6619,7 +6497,7 @@ _JOIN_ORDER_ORACLE = (
 )
 
 
-@defq_pending("q_join_order_advice", _JOIN_ORDER_ORACLE)
+@defq("q_join_order_advice", _JOIN_ORDER_ORACLE)
 def q_join_order_advice(spark, sf_dir):
     """Sketch-driven join ORDERING for the customer-orders-lineitem
     chain (operators/sketch.py:chain_join_order): both adjacent join
@@ -6656,7 +6534,7 @@ def q_join_order_advice(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_au_stats",
     """
     WITH blocks AS (
@@ -6718,7 +6596,7 @@ def q_audio_au_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_mp3_census",
     """
     WITH fr AS (
@@ -6781,31 +6659,7 @@ def q_audio_mp3_census(spark, sf_dir):
     )
 
 
-# --- round-10 promotion -----------------------------------------------------
-# Merge the round-9 staging set — q_prefix_filter_pairs (exact PPJoin
-# similarity join), q_bpe_token_census (tokenizer apply census),
-# q_join_order_advice (CMS System-R join ordering), q_audio_au_stats
-# (Sun AU container) and q_audio_mp3_census (MPEG-1 L3 frame walk) —
-# into the live registry (PERF.md round-10 checklist #1). All five are
-# never-green in the committed CORRECTNESS evidence, so
-# priority_order() serves them in the first window slots, followed by
-# the 45 oldest aged rows (the 2 remaining r05 rows first, then r06).
-# The registry holds at 207 for the round: new round-10 work stages
-# through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-10 staged queries (promote in round 11) --------------------------
-# defq_pending appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-10 driver window must stay
-# exactly the 5 promoted + 45 oldest rows.
-
-
-# --- round-10 staged gates: web-crawl ingestion surface ---------------------
+# --- web-crawl ingestion surface --------------------------------------------
 # The five operators a Common-Crawl-shaped pipeline runs FIRST, before
 # any operator the registry already gates: decompress the archive
 # (zstd), split + parse the container (WARC), canonicalize the key
@@ -6815,7 +6669,7 @@ PENDING_ORACLE_SQL = {}
 # census column recomputed by the oracle from the ORIGINAL text/hex.
 
 
-@defq_pending(
+@defq(
     "q_zstd_census",
     """
     SELECT doc_id AS item_id,
@@ -6862,7 +6716,7 @@ def q_zstd_census(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_warc_census",
     """
     WITH st AS (
@@ -6922,7 +6776,7 @@ def q_warc_census(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_url_parse",
     """
     SELECT doc_id AS item_id,
@@ -6981,7 +6835,7 @@ def q_url_parse(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_charset_decode",
     """
     SELECT doc_id AS item_id,
@@ -7035,7 +6889,7 @@ def q_charset_decode(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_ogg_census",
     """
     WITH hx AS (
@@ -7123,7 +6977,7 @@ _ROBOTS_FIXTURE_TXT = (
 )
 
 
-@defq_pending(
+@defq(
     "q_robots_admit",
     """
     SELECT doc_id AS item_id,
@@ -7261,7 +7115,7 @@ WHERE levenshtein(a.name, b.name) <= 2
 """
 
 
-@defq_pending("q_record_linkage", _RECORD_LINKAGE_ORACLE)
+@defq("q_record_linkage", _RECORD_LINKAGE_ORACLE)
 def q_record_linkage(spark, sf_dir):
     """Record linkage behind a driver gate (VERDICT r09 ask #6): the
     distinct part names spawn three deterministic spelling variants
@@ -7311,7 +7165,7 @@ def q_record_linkage(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_mp3_decode",
     """
     WITH p AS (SELECT doc_id FROM documents WHERE doc_id % 7 != 0),
@@ -7429,20 +7283,7 @@ def q_audio_mp3_decode(spark, sf_dir):
     )
 
 
-# --- round-11 promotion: the eight round-10 staged gates go live ------------
-# (six crawl-surface gates + record linkage + mp3 bitstream decode;
-# registry 207 -> 215).  New round-11 work stages through the fresh
-# pending dicts below, exactly like every prior promotion.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-11 session additions (stay PENDING until the r12 promotion) ------
-
-
-@defq_pending(
+@defq(
     "q_psl_domain",
     """
     WITH f AS (
@@ -7507,6 +7348,7 @@ PENDING_ORACLE_SQL = {}
            (m != 5) AS is_registrable
     FROM f
     """,
+    pending=True,
 )
 def q_psl_domain(spark, sf_dir):
     """Public Suffix List registrable domains behind a driver gate
@@ -7566,7 +7408,7 @@ def q_psl_domain(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_mp3_pcm",
     """
     WITH docs AS (
@@ -7654,6 +7496,7 @@ def q_psl_domain(spark, sf_dir):
                 ELSE st.chk END AS pcm_checksum
     FROM docs d LEFT JOIN st ON d.doc_id = st.doc_id
     """,
+    pending=True,
 )
 def q_audio_mp3_pcm(spark, sf_dir):
     """MPEG-1 Layer III FULL-PCM decode behind a driver gate (VERDICT
@@ -7691,7 +7534,7 @@ def q_audio_mp3_pcm(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_vorbis_setup",
     """
     WITH h AS (
@@ -7837,6 +7680,7 @@ def q_audio_mp3_pcm(spark, sf_dir):
          JOIN fx USING (doc_id)
          JOIN rc USING (doc_id)
     """,
+    pending=True,
 )
 def q_vorbis_setup(spark, sf_dir):
     """Vorbis setup-header codebook census behind a driver gate
@@ -7885,7 +7729,7 @@ def q_vorbis_setup(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_vorbis_pcm",
     """
     WITH docs AS (SELECT doc_id FROM documents),
@@ -7956,6 +7800,7 @@ def q_vorbis_setup(spark, sf_dir):
                 ELSE st.chk END AS pcm_checksum
     FROM docs d LEFT JOIN st ON d.doc_id = st.doc_id
     """,
+    pending=True,
 )
 def q_vorbis_pcm(spark, sf_dir):
     """Vorbis FULL-PCM decode behind a driver gate — the second half
@@ -7995,7 +7840,7 @@ def q_vorbis_pcm(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_aac_census",
     """
     WITH h AS (
@@ -8034,6 +7879,7 @@ def q_vorbis_pcm(spark, sf_dir):
            END AS payload_hash
     FROM p
     """,
+    pending=True,
 )
 def q_audio_aac_census(spark, sf_dir):
     """AAC/ADTS container census behind a driver gate — the triage

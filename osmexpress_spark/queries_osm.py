@@ -4,15 +4,15 @@ These exercise the reference-specific pipelines — spatial extract,
 fixpoint closure, WKT assembly, point lookup — over the deterministic
 fixture dataset (seeded; built lazily under .fixtures/).
 
-All carry full DuckDB oracles (oracle_sql() below): the fixture is
-pure-Python deterministic, so `oracle_sql()` writes an independent
-pyarrow copy of it and emits self-contained SQL over `read_parquet`,
-with the (deterministic, driver-side) covering ranges inlined as
-literal BETWEEN predicates, the super-relation fixpoint expressed as a
-recursive CTE, and the relation-member descent as a level-unrolled BFS
-carrying the operator's visited set. The GeoJSON Feature text itself
-is pinned by tests/test_functions.py as a deterministic serialization
-of the oracled leaves.
+All carry full DuckDB oracles (each `defq`'s `_oracle(...)`): the
+fixture is pure-Python deterministic, so the first oracle asked for
+writes an independent pyarrow copy of it, and each emits self-contained
+SQL over `read_parquet`, with the (deterministic, driver-side) covering
+ranges inlined as literal BETWEEN predicates, the super-relation
+fixpoint expressed as a recursive CTE, and the relation-member descent
+as a level-unrolled BFS carrying the operator's visited set. The
+GeoJSON Feature text itself is pinned by tests/test_functions.py as a
+deterministic serialization of the oracled leaves.
 """
 
 from __future__ import annotations
@@ -26,9 +26,8 @@ from pyspark.sql import functions as F
 from . import functions as fn
 from . import testing
 from .api import Dataset
+from .registry import defq
 from .spatial import Region
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            ".fixtures", "osm_small")
@@ -42,15 +41,18 @@ def _dataset(spark: SparkSession) -> Dataset:
     return Dataset(spark, FIXTURE_DIR)
 
 
-def defq(name: str):
-    def wrap(fn_):
-        SPARK_QUERIES[name] = fn_
-        return fn_
-
-    return wrap
+def _oracle(sql: Callable[[str], str]) -> Callable[[], str]:
+    """A registry oracle: ``sql(d)`` over the pyarrow fixture copy in
+    ``d``, which is written on first use rather than at import."""
+    return lambda: sql(_ensure_oracle_fixture())
 
 
-@defq("osm_extract_bbox")
+@defq("osm_extract_bbox", _oracle(lambda d: f"""WITH RECURSIVE {_extract_ctes(d, exact=False)}
+SELECT * FROM (
+  SELECT 1 AS type_rank, 'node' AS type, id FROM node_all
+  UNION ALL SELECT 2, 'way', id FROM way_all
+  UNION ALL SELECT 3, 'relation', id FROM rel_closure
+) ORDER BY type_rank, id"""))
 def osm_extract_bbox(spark, sf_dir):
     """Flagship OSM pipeline: bbox extract -> typed ordered id output
     (extract.cpp:69-426; O3 ordering).  cache_ids: the output union
@@ -66,7 +68,8 @@ def osm_extract_bbox(spark, sf_dir):
     return out.orderBy("type_rank", "id")
 
 
-@defq("osm_extract_exact")
+@defq("osm_extract_exact", _oracle(lambda d: f"""WITH RECURSIVE {_extract_ctes(d, exact=True)}
+SELECT id FROM node_all ORDER BY id"""))
 def osm_extract_exact(spark, sf_dir):
     """Extract with the exact containment refinement (P5) the reference
     defines but never wires up (src/region.cpp:122-127)."""
@@ -74,7 +77,19 @@ def osm_extract_exact(spark, sf_dir):
     return res.node_ids.orderBy("id")
 
 
-@defq("osm_way_wkt")
+@defq("osm_way_wkt", _oracle(lambda d: f"""WITH RECURSIVE {_extract_ctes(d, exact=False)},
+verts AS (
+  SELECT id AS way_id, unnest(nodes) AS node_id,
+         generate_subscripts(nodes, 1) AS pos
+  FROM ways WHERE id IN (SELECT id FROM way_all)
+),
+pts AS (
+  SELECT v.way_id, v.pos, l.lon, l.lat
+  FROM verts v JOIN locations l ON v.node_id = l.id
+)
+SELECT way_id AS id,
+       'LINESTRING (' || string_agg({_COORD_SQL}, ', ' ORDER BY pos) || ')' AS wkt
+FROM pts GROUP BY way_id ORDER BY id"""))
 def osm_way_wkt(spark, sf_dir):
     """G6: WKT LineString assembly for every way in a bbox extract
     (examples/way_wkt.cpp:34-43)."""
@@ -82,7 +97,10 @@ def osm_way_wkt(spark, sf_dir):
     return fn.way_linestrings(res.ways, res.locations).orderBy("id")
 
 
-@defq("osm_lookup")
+@defq("osm_lookup", _oracle(lambda d: f"""WITH ways AS (SELECT * FROM read_parquet('{d}/ways.parquet'))
+SELECT id, CAST(len(nodes) AS INTEGER) AS n_nodes,
+       CAST(len(tags_kv) AS INTEGER) AS n_tag_kv
+FROM ways WHERE id = (SELECT min(id) FROM ways)"""))
 def osm_lookup(spark, sf_dir):
     """S3: point lookup of one way (src/cmd.cpp:61-73)."""
     ds = _dataset(spark)
@@ -92,7 +110,14 @@ def osm_lookup(spark, sf_dir):
     )
 
 
-@defq("osm_stats")
+@defq("osm_stats", _oracle(lambda d: f"""SELECT * FROM (
+  SELECT 0 AS rank, 'locations' AS tbl,
+         (SELECT count(*) FROM read_parquet('{d}/locations.parquet')) AS n
+  UNION ALL SELECT 1, 'nodes', (SELECT count(*) FROM read_parquet('{d}/nodes.parquet'))
+  UNION ALL SELECT 2, 'ways', (SELECT count(*) FROM read_parquet('{d}/ways.parquet'))
+  UNION ALL SELECT 3, 'relations',
+         (SELECT count(*) FROM read_parquet('{d}/relations.parquet'))
+) ORDER BY rank"""))
 def osm_stats(spark, sf_dir):
     """S6: per-table cardinality report (src/cmd.cpp:96-109)."""
     ds = _dataset(spark)
@@ -105,7 +130,7 @@ def osm_stats(spark, sf_dir):
     return out.orderBy("rank")
 
 
-@defq("osm_augmented_diff")
+@defq("osm_augmented_diff", _oracle(lambda d: _augdiff_oracle_sql(d)))
 def osm_augmented_diff(spark, sf_dir):
     """U6 capstone: classify a deterministic OsmChange batch against the
     fixture snapshot and propagate node moves to parent ways/relations
@@ -307,6 +332,9 @@ def _fmt_coord_sql(col: str) -> str:
     )
 
 
+_COORD_SQL = f"{_fmt_coord_sql('lon')} || ' ' || {_fmt_coord_sql('lat')}"
+
+
 def _augdiff_oracle_sql(d: str) -> str:
     """The full U6 augmented diff as one SQL statement: the change
     batch inlined as VALUES (deterministic generate_changes output),
@@ -479,7 +507,20 @@ def _augdiff_oracle_sql(d: str) -> str:
 RADIUS_PAIRS = 100000  # deg*1e7 units ~ 0.01 degrees ~ 1.1 km
 
 
-@defq("osm_radius_pairs")
+@defq("osm_radius_pairs", _oracle(lambda d: f"""
+WITH locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
+cand AS (
+  SELECT a.id AS id_a, b.id AS id_b,
+         least(abs(CAST(b.lon AS BIGINT) - a.lon), {RADIUS_PAIRS}) AS dx,
+         least(abs(CAST(b.lat AS BIGINT) - a.lat), {RADIUS_PAIRS}) AS dy,
+         abs(CAST(b.lon AS BIGINT) - a.lon) AS adx,
+         abs(CAST(b.lat AS BIGINT) - a.lat) AS ady
+  FROM locations a JOIN locations b ON a.id < b.id
+)
+SELECT id_a, id_b, CAST(dx*dx + dy*dy AS BIGINT) AS d2
+FROM cand
+WHERE adx <= {RADIUS_PAIRS} AND ady <= {RADIUS_PAIRS}
+  AND dx*dx + dy*dy <= CAST({RADIUS_PAIRS} AS BIGINT) * {RADIUS_PAIRS}"""))
 def osm_radius_pairs(spark, sf_dir):
     """Proximity self-join over the fixture nodes (operators/
     spatial_join.py:radius_pairs): every pair within ~1.1 km planar
@@ -492,7 +533,28 @@ def osm_radius_pairs(spark, sf_dir):
     return radius_pairs(ds.table("locations"), RADIUS_PAIRS)
 
 
-@defq("osm_nearest_neighbors")
+@defq("osm_nearest_neighbors", _oracle(lambda d: f"""
+WITH locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
+cand AS (
+  SELECT a.id AS id, b.id AS neighbor_id,
+         least(abs(CAST(b.lon AS BIGINT) - a.lon), {RADIUS_PAIRS}) AS dx,
+         least(abs(CAST(b.lat AS BIGINT) - a.lat), {RADIUS_PAIRS}) AS dy,
+         abs(CAST(b.lon AS BIGINT) - a.lon) AS adx,
+         abs(CAST(b.lat AS BIGINT) - a.lat) AS ady
+  FROM locations a JOIN locations b ON a.id != b.id
+),
+inr AS (
+  SELECT id, neighbor_id, CAST(dx*dx + dy*dy AS BIGINT) AS d2
+  FROM cand
+  WHERE adx <= {RADIUS_PAIRS} AND ady <= {RADIUS_PAIRS}
+    AND dx*dx + dy*dy <= CAST({RADIUS_PAIRS} AS BIGINT) * {RADIUS_PAIRS}
+)
+SELECT id, neighbor_id, d2, nn_rank FROM (
+  SELECT id, neighbor_id, d2,
+         CAST(row_number() OVER (
+           PARTITION BY id ORDER BY d2, neighbor_id) AS INTEGER) AS nn_rank
+  FROM inr
+) WHERE nn_rank <= 3"""))
 def osm_nearest_neighbors(spark, sf_dir):
     """Radius-bounded kNN join over the fixture nodes (spatial_join.py:
     nearest_neighbors): each node's 3 closest neighbors within ~1.1 km,
@@ -503,7 +565,36 @@ def osm_nearest_neighbors(spark, sf_dir):
     return nearest_neighbors(ds.table("locations"), k=3, radius=RADIUS_PAIRS)
 
 
-@defq("osm_way_lengths")
+@defq("osm_way_lengths", _oracle(lambda d: f"""
+WITH ways AS (SELECT * FROM read_parquet('{d}/ways.parquet')),
+locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
+verts AS (
+  SELECT id AS way_id, unnest(nodes) AS node_id,
+         generate_subscripts(nodes, 1) AS pos
+  FROM ways
+),
+pts AS (
+  SELECT v.way_id, v.pos, l.lon, l.lat
+  FROM verts v JOIN locations l ON v.node_id = l.id
+),
+ordered AS (
+  SELECT way_id, list({{'lon': lon, 'lat': lat}} ORDER BY pos) AS ps
+  FROM pts GROUP BY way_id
+),
+segs AS (
+  SELECT way_id, CAST(len(ps) - 1 AS INTEGER) AS n_segments,
+         list_transform(range(len(ps) - 1), i ->
+           CAST(round(sqrt(
+             (CAST(ps[i+2].lon AS DOUBLE) - ps[i+1].lon)
+             * (CAST(ps[i+2].lon AS DOUBLE) - ps[i+1].lon)
+             + (CAST(ps[i+2].lat AS DOUBLE) - ps[i+1].lat)
+             * (CAST(ps[i+2].lat AS DOUBLE) - ps[i+1].lat)) * 1e6, 0)
+           AS BIGINT)) AS seg
+  FROM ordered
+)
+SELECT way_id AS id, n_segments,
+       CAST(COALESCE(list_sum(seg), 0) AS BIGINT) AS length_micro
+FROM segs"""))
 def osm_way_lengths(spark, sf_dir):
     """Per-way planar polyline length (functions/__init__.py:
     way_lengths): segment lengths round to integer micro-units BEFORE
@@ -518,7 +609,25 @@ def osm_way_lengths(spark, sf_dir):
 TILE_ZOOM = 8
 
 
-@defq("osm_tile_counts")
+@defq("osm_tile_counts", _oracle(lambda d: f"""
+WITH locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
+t AS (
+  SELECT
+    greatest(0, least(CAST(floor((CAST(lon AS DOUBLE)/1e7/360.0e0 + 0.5e0)
+                         * {1 << TILE_ZOOM}) AS BIGINT), {(1 << TILE_ZOOM) - 1}))
+      AS tile_x,
+    greatest(0, least(CAST(floor((0.5e0 -
+        ln(tan(radians(greatest(-85.05112877980659e0,
+              least(CAST(lat AS DOUBLE)/1e7, 85.05112877980659e0))))
+           + 1.0e0/cos(radians(greatest(-85.05112877980659e0,
+              least(CAST(lat AS DOUBLE)/1e7, 85.05112877980659e0)))))
+        / (2.0e0 * 3.141592653589793e0)) * {1 << TILE_ZOOM}) AS BIGINT),
+        {(1 << TILE_ZOOM) - 1}))
+      AS tile_y
+  FROM locations
+)
+SELECT tile_x, tile_y, CAST(count(*) AS BIGINT) AS n_nodes
+FROM t GROUP BY tile_x, tile_y"""))
 def osm_tile_counts(spark, sf_dir):
     """Slippy-map tile census (spatial/cells.py:tile_xy): node count
     per web-mercator z8 tile — the partitioning key of every tile
@@ -536,7 +645,18 @@ def osm_tile_counts(spark, sf_dir):
     )
 
 
-@defq("osm_user_edit_stats")
+@defq("osm_user_edit_stats", _oracle(lambda d: f"""
+WITH el AS (
+  SELECT muser AS "user", 'node' AS type, mts AS ts
+  FROM read_parquet('{d}/nodes.parquet')
+  UNION ALL
+  SELECT muser, 'way', mts FROM read_parquet('{d}/ways.parquet')
+  UNION ALL
+  SELECT muser, 'relation', mts FROM read_parquet('{d}/relations.parquet')
+)
+SELECT "user", type, CAST(count(*) AS BIGINT) AS n_elements,
+       strftime(max(ts), '%Y-%m-%dT%H:%M:%S') AS latest_edit
+FROM el GROUP BY "user", type"""))
 def osm_user_edit_stats(spark, sf_dir):
     """Contributor analytics (the OSMCha/taginfo-style workload): per
     user, how many tagged elements of each type they last touched and
@@ -578,142 +698,7 @@ ge AS (
 )"""
 
 
-def oracle_sql() -> dict[str, str]:
-    d = _ensure_oracle_fixture()
-    coord = f"{_fmt_coord_sql('lon')} || ' ' || {_fmt_coord_sql('lat')}"
-    return {
-        "osm_extract_bbox": f"""WITH RECURSIVE {_extract_ctes(d, exact=False)}
-SELECT * FROM (
-  SELECT 1 AS type_rank, 'node' AS type, id FROM node_all
-  UNION ALL SELECT 2, 'way', id FROM way_all
-  UNION ALL SELECT 3, 'relation', id FROM rel_closure
-) ORDER BY type_rank, id""",
-        "osm_extract_exact": f"""WITH RECURSIVE {_extract_ctes(d, exact=True)}
-SELECT id FROM node_all ORDER BY id""",
-        "osm_way_wkt": f"""WITH RECURSIVE {_extract_ctes(d, exact=False)},
-verts AS (
-  SELECT id AS way_id, unnest(nodes) AS node_id,
-         generate_subscripts(nodes, 1) AS pos
-  FROM ways WHERE id IN (SELECT id FROM way_all)
-),
-pts AS (
-  SELECT v.way_id, v.pos, l.lon, l.lat
-  FROM verts v JOIN locations l ON v.node_id = l.id
-)
-SELECT way_id AS id,
-       'LINESTRING (' || string_agg({coord}, ', ' ORDER BY pos) || ')' AS wkt
-FROM pts GROUP BY way_id ORDER BY id""",
-        "osm_radius_pairs": f"""
-WITH locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
-cand AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         least(abs(CAST(b.lon AS BIGINT) - a.lon), {RADIUS_PAIRS}) AS dx,
-         least(abs(CAST(b.lat AS BIGINT) - a.lat), {RADIUS_PAIRS}) AS dy,
-         abs(CAST(b.lon AS BIGINT) - a.lon) AS adx,
-         abs(CAST(b.lat AS BIGINT) - a.lat) AS ady
-  FROM locations a JOIN locations b ON a.id < b.id
-)
-SELECT id_a, id_b, CAST(dx*dx + dy*dy AS BIGINT) AS d2
-FROM cand
-WHERE adx <= {RADIUS_PAIRS} AND ady <= {RADIUS_PAIRS}
-  AND dx*dx + dy*dy <= CAST({RADIUS_PAIRS} AS BIGINT) * {RADIUS_PAIRS}""",
-        "osm_nearest_neighbors": f"""
-WITH locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
-cand AS (
-  SELECT a.id AS id, b.id AS neighbor_id,
-         least(abs(CAST(b.lon AS BIGINT) - a.lon), {RADIUS_PAIRS}) AS dx,
-         least(abs(CAST(b.lat AS BIGINT) - a.lat), {RADIUS_PAIRS}) AS dy,
-         abs(CAST(b.lon AS BIGINT) - a.lon) AS adx,
-         abs(CAST(b.lat AS BIGINT) - a.lat) AS ady
-  FROM locations a JOIN locations b ON a.id != b.id
-),
-inr AS (
-  SELECT id, neighbor_id, CAST(dx*dx + dy*dy AS BIGINT) AS d2
-  FROM cand
-  WHERE adx <= {RADIUS_PAIRS} AND ady <= {RADIUS_PAIRS}
-    AND dx*dx + dy*dy <= CAST({RADIUS_PAIRS} AS BIGINT) * {RADIUS_PAIRS}
-)
-SELECT id, neighbor_id, d2, nn_rank FROM (
-  SELECT id, neighbor_id, d2,
-         CAST(row_number() OVER (
-           PARTITION BY id ORDER BY d2, neighbor_id) AS INTEGER) AS nn_rank
-  FROM inr
-) WHERE nn_rank <= 3""",
-        "osm_way_lengths": f"""
-WITH ways AS (SELECT * FROM read_parquet('{d}/ways.parquet')),
-locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
-verts AS (
-  SELECT id AS way_id, unnest(nodes) AS node_id,
-         generate_subscripts(nodes, 1) AS pos
-  FROM ways
-),
-pts AS (
-  SELECT v.way_id, v.pos, l.lon, l.lat
-  FROM verts v JOIN locations l ON v.node_id = l.id
-),
-ordered AS (
-  SELECT way_id, list({{'lon': lon, 'lat': lat}} ORDER BY pos) AS ps
-  FROM pts GROUP BY way_id
-),
-segs AS (
-  SELECT way_id, CAST(len(ps) - 1 AS INTEGER) AS n_segments,
-         list_transform(range(len(ps) - 1), i ->
-           CAST(round(sqrt(
-             (CAST(ps[i+2].lon AS DOUBLE) - ps[i+1].lon)
-             * (CAST(ps[i+2].lon AS DOUBLE) - ps[i+1].lon)
-             + (CAST(ps[i+2].lat AS DOUBLE) - ps[i+1].lat)
-             * (CAST(ps[i+2].lat AS DOUBLE) - ps[i+1].lat)) * 1e6, 0)
-           AS BIGINT)) AS seg
-  FROM ordered
-)
-SELECT way_id AS id, n_segments,
-       CAST(COALESCE(list_sum(seg), 0) AS BIGINT) AS length_micro
-FROM segs""",
-        "osm_tile_counts": f"""
-WITH locations AS (SELECT * FROM read_parquet('{d}/locations.parquet')),
-t AS (
-  SELECT
-    greatest(0, least(CAST(floor((CAST(lon AS DOUBLE)/1e7/360.0e0 + 0.5e0)
-                         * {1 << TILE_ZOOM}) AS BIGINT), {(1 << TILE_ZOOM) - 1}))
-      AS tile_x,
-    greatest(0, least(CAST(floor((0.5e0 -
-        ln(tan(radians(greatest(-85.05112877980659e0,
-              least(CAST(lat AS DOUBLE)/1e7, 85.05112877980659e0))))
-           + 1.0e0/cos(radians(greatest(-85.05112877980659e0,
-              least(CAST(lat AS DOUBLE)/1e7, 85.05112877980659e0)))))
-        / (2.0e0 * 3.141592653589793e0)) * {1 << TILE_ZOOM}) AS BIGINT),
-        {(1 << TILE_ZOOM) - 1}))
-      AS tile_y
-  FROM locations
-)
-SELECT tile_x, tile_y, CAST(count(*) AS BIGINT) AS n_nodes
-FROM t GROUP BY tile_x, tile_y""",
-        "osm_user_edit_stats": f"""
-WITH el AS (
-  SELECT muser AS "user", 'node' AS type, mts AS ts
-  FROM read_parquet('{d}/nodes.parquet')
-  UNION ALL
-  SELECT muser, 'way', mts FROM read_parquet('{d}/ways.parquet')
-  UNION ALL
-  SELECT muser, 'relation', mts FROM read_parquet('{d}/relations.parquet')
-)
-SELECT "user", type, CAST(count(*) AS BIGINT) AS n_elements,
-       strftime(max(ts), '%Y-%m-%dT%H:%M:%S') AS latest_edit
-FROM el GROUP BY "user", type""",
-        "osm_lookup": f"""WITH ways AS (SELECT * FROM read_parquet('{d}/ways.parquet'))
-SELECT id, CAST(len(nodes) AS INTEGER) AS n_nodes,
-       CAST(len(tags_kv) AS INTEGER) AS n_tag_kv
-FROM ways WHERE id = (SELECT min(id) FROM ways)""",
-        "osm_stats": f"""SELECT * FROM (
-  SELECT 0 AS rank, 'locations' AS tbl,
-         (SELECT count(*) FROM read_parquet('{d}/locations.parquet')) AS n
-  UNION ALL SELECT 1, 'nodes', (SELECT count(*) FROM read_parquet('{d}/nodes.parquet'))
-  UNION ALL SELECT 2, 'ways', (SELECT count(*) FROM read_parquet('{d}/ways.parquet'))
-  UNION ALL SELECT 3, 'relations',
-         (SELECT count(*) FROM read_parquet('{d}/relations.parquet'))
-) ORDER BY rank""",
-        "osm_augmented_diff": _augdiff_oracle_sql(d),
-        "osm_relation_geojson": f"""
+@defq("osm_relation_geojson", _oracle(lambda d: f"""
 -- level-unrolled BFS with a per-root visited set: mirrors
 -- relation_member_leaves EXACTLY (a (root, relation) pair is
 -- descended only at its first-reached level; within-level
@@ -808,123 +793,7 @@ UNION ALL
 SELECT root, path, mtype, ref FROM x4 WHERE mtype <> 'relation'
 UNION ALL
 SELECT root, path, mtype, ref FROM x5 WHERE mtype <> 'relation'
-ORDER BY id, path""",
-        "osm_tag_stats": f"""
-WITH el AS (
-  SELECT 'node' AS type, tags_kv FROM read_parquet('{d}/nodes.parquet')
-  UNION ALL
-  SELECT 'way', tags_kv FROM read_parquet('{d}/ways.parquet')
-  UNION ALL
-  SELECT 'relation', tags_kv FROM read_parquet('{d}/relations.parquet')
-),
-kv AS (
-  SELECT type, tags_kv[2*i+1] AS key, tags_kv[2*i+2] AS value
-  FROM el, unnest(range(len(tags_kv) // 2)) AS u(i)
-)
-SELECT type, key, value, CAST(count(*) AS BIGINT) AS n
-FROM kv GROUP BY type, key, value""",
-        "osm_way_areas": f"""
-WITH wa AS (
-  SELECT id, nodes FROM read_parquet('{d}/ways.parquet')
-  WHERE len(nodes) >= 4 AND nodes[1] = nodes[len(nodes)]
-),
-wv AS (
-  SELECT id, unnest(nodes) AS node_id,
-         generate_subscripts(nodes, 1) AS pos
-  FROM wa
-),
-wp AS (
-  SELECT wv.id, wv.pos, l.lon, l.lat
-  FROM wv JOIN read_parquet('{d}/locations.parquet') l ON wv.node_id = l.id
-),
-wl AS (
-  SELECT id,
-         list(struct_pack(pos := pos, lon := lon, lat := lat)
-              ORDER BY pos) AS pts
-  FROM wp GROUP BY id
-)
-SELECT id, CAST(len(pts) AS INTEGER) AS n_vertices,
-       CAST(COALESCE(list_sum(list_transform(range(len(pts) - 1), i ->
-         (CAST(pts[i+1].lon AS BIGINT) - pts[1].lon)
-           * (CAST(pts[i+2].lat AS BIGINT) - pts[1].lat)
-         - (CAST(pts[i+2].lon AS BIGINT) - pts[1].lon)
-           * (CAST(pts[i+1].lat AS BIGINT) - pts[1].lat))), 0)
-         AS BIGINT) AS area2
-FROM wl""",
-        "osm_way_intersections": f"""
-WITH e AS (
-  SELECT DISTINCT node_id, way_id FROM (
-    SELECT unnest(nodes) AS node_id, id AS way_id
-    FROM read_parquet('{d}/ways.parquet')
-  )
-)
-SELECT a.way_id AS way_a, b.way_id AS way_b,
-       CAST(count(*) AS BIGINT) AS n_shared_nodes
-FROM e a JOIN e b ON a.node_id = b.node_id AND a.way_id < b.way_id
-GROUP BY a.way_id, b.way_id""",
-        "osm_integrity_audit": f"""
-WITH locs AS (SELECT id FROM read_parquet('{d}/locations.parquet')),
-wayt AS (SELECT id, nodes FROM read_parquet('{d}/ways.parquet')),
-relt AS (SELECT id, members FROM read_parquet('{d}/relations.parquet')),
-wrefs AS (SELECT unnest(nodes) AS ref FROM wayt),
-mem AS (
-  SELECT struct_extract(unnest(members), 'type') AS mtype,
-         struct_extract(unnest(members), 'ref') AS ref
-  FROM relt
-)
-SELECT 'way_node' AS category, CAST(count(*) AS BIGINT) AS n_refs,
-       CAST(sum(CASE WHEN l.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_dangling
-FROM wrefs r LEFT JOIN locs l ON r.ref = l.id
-UNION ALL
-SELECT 'relation_node', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN l.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM (SELECT ref FROM mem WHERE mtype = 'node') r
-LEFT JOIN locs l ON r.ref = l.id
-UNION ALL
-SELECT 'relation_way', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN w.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM (SELECT ref FROM mem WHERE mtype = 'way') r
-LEFT JOIN wayt w ON r.ref = w.id
-UNION ALL
-SELECT 'relation_relation', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN t.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM (SELECT ref FROM mem WHERE mtype = 'relation') r
-LEFT JOIN relt t ON r.ref = t.id""",
-        "osm_pagerank": f"""
-WITH {_WAY_GRAPH_SQL.format(d=d)},
-deg AS (SELECT src, count(*) AS deg FROM ge GROUP BY src),
-verts AS (SELECT DISTINCT src AS id FROM ge),
-pr0 AS (SELECT id, CAST(1000000 AS BIGINT) AS pr FROM verts),
-c1 AS (
-  SELECT ge.dst AS id, CAST(sum(pr0.pr // deg.deg) AS BIGINT) AS s
-  FROM ge JOIN pr0 ON ge.src = pr0.id JOIN deg ON ge.src = deg.src
-  GROUP BY ge.dst
-),
-pr1 AS (
-  SELECT v.id, CAST(150000 + (17 * COALESCE(c1.s, 0)) // 20 AS BIGINT) AS pr
-  FROM verts v LEFT JOIN c1 ON v.id = c1.id
-),
-c2 AS (
-  SELECT ge.dst AS id, CAST(sum(pr1.pr // deg.deg) AS BIGINT) AS s
-  FROM ge JOIN pr1 ON ge.src = pr1.id JOIN deg ON ge.src = deg.src
-  GROUP BY ge.dst
-),
-pr2 AS (
-  SELECT v.id, CAST(150000 + (17 * COALESCE(c2.s, 0)) // 20 AS BIGINT) AS pr
-  FROM verts v LEFT JOIN c2 ON v.id = c2.id
-)
-SELECT id, pr AS pr_micro FROM pr2""",
-        "osm_triangle_count": f"""
-WITH {_WAY_GRAPH_SQL.format(d=d)}
-SELECT CAST(count(*) AS BIGINT) AS n_triangles
-FROM pairs x
-JOIN pairs y ON x.wb = y.wa
-JOIN pairs z ON z.wa = x.wa AND z.wb = y.wb""",
-    }
-
-
-@defq("osm_relation_geojson")
+ORDER BY id, path"""))
 def osm_relation_geojson(spark, sf_dir):
     """G7: the recursive member descent behind relation GeoJSON
     assembly (python/examples/web_server.py:52-71), distributed as a
@@ -954,7 +823,20 @@ def osm_relation_geojson(spark, sf_dir):
     ).orderBy("id", "path")
 
 
-@defq("osm_tag_stats")
+@defq("osm_tag_stats", _oracle(lambda d: f"""
+WITH el AS (
+  SELECT 'node' AS type, tags_kv FROM read_parquet('{d}/nodes.parquet')
+  UNION ALL
+  SELECT 'way', tags_kv FROM read_parquet('{d}/ways.parquet')
+  UNION ALL
+  SELECT 'relation', tags_kv FROM read_parquet('{d}/relations.parquet')
+),
+kv AS (
+  SELECT type, tags_kv[2*i+1] AS key, tags_kv[2*i+2] AS value
+  FROM el, unnest(range(len(tags_kv) // 2)) AS u(i)
+)
+SELECT type, key, value, CAST(count(*) AS BIGINT) AS n
+FROM kv GROUP BY type, key, value"""))
 def osm_tag_stats(spark, sf_dir):
     """Taginfo-style key/value census over all three element types
     (the reference's tag inventory workload; taginfo.openstreetmap.org
@@ -974,7 +856,34 @@ def osm_tag_stats(spark, sf_dir):
     )
 
 
-@defq("osm_way_areas")
+@defq("osm_way_areas", _oracle(lambda d: f"""
+WITH wa AS (
+  SELECT id, nodes FROM read_parquet('{d}/ways.parquet')
+  WHERE len(nodes) >= 4 AND nodes[1] = nodes[len(nodes)]
+),
+wv AS (
+  SELECT id, unnest(nodes) AS node_id,
+         generate_subscripts(nodes, 1) AS pos
+  FROM wa
+),
+wp AS (
+  SELECT wv.id, wv.pos, l.lon, l.lat
+  FROM wv JOIN read_parquet('{d}/locations.parquet') l ON wv.node_id = l.id
+),
+wl AS (
+  SELECT id,
+         list(struct_pack(pos := pos, lon := lon, lat := lat)
+              ORDER BY pos) AS pts
+  FROM wp GROUP BY id
+)
+SELECT id, CAST(len(pts) AS INTEGER) AS n_vertices,
+       CAST(COALESCE(list_sum(list_transform(range(len(pts) - 1), i ->
+         (CAST(pts[i+1].lon AS BIGINT) - pts[1].lon)
+           * (CAST(pts[i+2].lat AS BIGINT) - pts[1].lat)
+         - (CAST(pts[i+2].lon AS BIGINT) - pts[1].lon)
+           * (CAST(pts[i+1].lat AS BIGINT) - pts[1].lat))), 0)
+         AS BIGINT) AS area2
+FROM wl"""))
 def osm_way_areas(spark, sf_dir):
     """Closed-ring shoelace areas (functions/__init__.py:way_areas):
     exact signed integer 2A per closed way, translated to the first
@@ -984,7 +893,17 @@ def osm_way_areas(spark, sf_dir):
     return fn.way_areas(ds.table("ways"), ds.table("locations"))
 
 
-@defq("osm_way_intersections")
+@defq("osm_way_intersections", _oracle(lambda d: f"""
+WITH e AS (
+  SELECT DISTINCT node_id, way_id FROM (
+    SELECT unnest(nodes) AS node_id, id AS way_id
+    FROM read_parquet('{d}/ways.parquet')
+  )
+)
+SELECT a.way_id AS way_a, b.way_id AS way_b,
+       CAST(count(*) AS BIGINT) AS n_shared_nodes
+FROM e a JOIN e b ON a.node_id = b.node_id AND a.way_id < b.way_id
+GROUP BY a.way_id, b.way_id"""))
 def osm_way_intersections(spark, sf_dir):
     """Topological way-intersection pairs over the node_way edge table
     (operators/spatial_join.py:way_intersections): the routing-graph
@@ -996,7 +915,35 @@ def osm_way_intersections(spark, sf_dir):
     return way_intersections(ds.table("node_way"))
 
 
-@defq("osm_integrity_audit")
+@defq("osm_integrity_audit", _oracle(lambda d: f"""
+WITH locs AS (SELECT id FROM read_parquet('{d}/locations.parquet')),
+wayt AS (SELECT id, nodes FROM read_parquet('{d}/ways.parquet')),
+relt AS (SELECT id, members FROM read_parquet('{d}/relations.parquet')),
+wrefs AS (SELECT unnest(nodes) AS ref FROM wayt),
+mem AS (
+  SELECT struct_extract(unnest(members), 'type') AS mtype,
+         struct_extract(unnest(members), 'ref') AS ref
+  FROM relt
+)
+SELECT 'way_node' AS category, CAST(count(*) AS BIGINT) AS n_refs,
+       CAST(sum(CASE WHEN l.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_dangling
+FROM wrefs r LEFT JOIN locs l ON r.ref = l.id
+UNION ALL
+SELECT 'relation_node', CAST(count(*) AS BIGINT),
+       CAST(sum(CASE WHEN l.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM (SELECT ref FROM mem WHERE mtype = 'node') r
+LEFT JOIN locs l ON r.ref = l.id
+UNION ALL
+SELECT 'relation_way', CAST(count(*) AS BIGINT),
+       CAST(sum(CASE WHEN w.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM (SELECT ref FROM mem WHERE mtype = 'way') r
+LEFT JOIN wayt w ON r.ref = w.id
+UNION ALL
+SELECT 'relation_relation', CAST(count(*) AS BIGINT),
+       CAST(sum(CASE WHEN t.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM (SELECT ref FROM mem WHERE mtype = 'relation') r
+LEFT JOIN relt t ON r.ref = t.id"""))
 def osm_integrity_audit(spark, sf_dir):
     """Referential-integrity census (operators/audit.py): dangling
     reference counts per category — the QA report the reference's
@@ -1023,7 +970,30 @@ def _way_graph(spark) -> DataFrame:
     )
 
 
-@defq("osm_pagerank")
+@defq("osm_pagerank", _oracle(lambda d: f"""
+WITH {_WAY_GRAPH_SQL.format(d=d)},
+deg AS (SELECT src, count(*) AS deg FROM ge GROUP BY src),
+verts AS (SELECT DISTINCT src AS id FROM ge),
+pr0 AS (SELECT id, CAST(1000000 AS BIGINT) AS pr FROM verts),
+c1 AS (
+  SELECT ge.dst AS id, CAST(sum(pr0.pr // deg.deg) AS BIGINT) AS s
+  FROM ge JOIN pr0 ON ge.src = pr0.id JOIN deg ON ge.src = deg.src
+  GROUP BY ge.dst
+),
+pr1 AS (
+  SELECT v.id, CAST(150000 + (17 * COALESCE(c1.s, 0)) // 20 AS BIGINT) AS pr
+  FROM verts v LEFT JOIN c1 ON v.id = c1.id
+),
+c2 AS (
+  SELECT ge.dst AS id, CAST(sum(pr1.pr // deg.deg) AS BIGINT) AS s
+  FROM ge JOIN pr1 ON ge.src = pr1.id JOIN deg ON ge.src = deg.src
+  GROUP BY ge.dst
+),
+pr2 AS (
+  SELECT v.id, CAST(150000 + (17 * COALESCE(c2.s, 0)) // 20 AS BIGINT) AS pr
+  FROM verts v LEFT JOIN c2 ON v.id = c2.id
+)
+SELECT id, pr AS pr_micro FROM pr2"""))
 def osm_pagerank(spark, sf_dir):
     """Integer-exact PageRank over the way-intersection graph
     (operators/graph.py:pagerank_micro, 2 damped power iterations):
@@ -1034,7 +1004,12 @@ def osm_pagerank(spark, sf_dir):
     return pagerank_micro(_way_graph(spark), iterations=2)
 
 
-@defq("osm_triangle_count")
+@defq("osm_triangle_count", _oracle(lambda d: f"""
+WITH {_WAY_GRAPH_SQL.format(d=d)}
+SELECT CAST(count(*) AS BIGINT) AS n_triangles
+FROM pairs x
+JOIN pairs y ON x.wb = y.wa
+JOIN pairs z ON z.wa = x.wa AND z.wb = y.wb"""))
 def osm_triangle_count(spark, sf_dir):
     """Triangle census of the way-intersection graph (operators/
     graph.py:triangle_count): rank-oriented wedge join + closing

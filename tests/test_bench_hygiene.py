@@ -7,24 +7,14 @@ coverage for a query family.
 
 from __future__ import annotations
 
+import json
+
 import bench
-from osmexpress_spark import queries as Q
-from osmexpress_spark import queries_data as QD
-from osmexpress_spark import queries_osm as QO
-from osmexpress_spark import queries_update as QU
-
-
-def _registry():
-    return {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
+from osmexpress_spark import registry
 
 
 def test_every_headline_name_is_registered():
-    reg = _registry()
+    reg = registry.queries()
     missing = [n for n in bench.HEADLINE if n not in reg]
     assert not missing, f"bench HEADLINE names not in registry: {missing}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicates"
@@ -112,7 +102,7 @@ FAMILIES = {
 
 
 def test_every_family_keeps_a_bench_line():
-    reg = _registry()
+    reg = registry.queries()
     head = set(bench.HEADLINE)
     for fam, members in FAMILIES.items():
         stale = [m for m in members if m not in reg]
@@ -123,9 +113,8 @@ def test_every_family_keeps_a_bench_line():
 def test_scaling_subset_is_registered():
     import scaling
 
-    # staged round-6 queries participate in the scaling sweep before
-    # promotion (scaling.py merges the pending registry)
-    reg = {**_registry(), **QD.PENDING_SPARK_QUERIES}
+    # staged queries participate in the scaling sweep before promotion
+    reg = registry.queries(include_staged=True)
     missing = [n for n in scaling.SUBSET if n not in reg]
     assert not missing, f"scaling.py SUBSET names not in registry: {missing}"
     # all scaling lines read sf-scaled tables (no fixed-size OSM fixture
@@ -137,21 +126,47 @@ def test_family_map_covers_headline_registry_queries():
     # every HEADLINE registry query belongs to some family, so a new
     # bench line must be classified (keeps the map from rotting)
     classified = {m for members in FAMILIES.values() for m in members}
-    reg = set(_registry())
+    reg = set(registry.queries())
     unclassified = [n for n in bench.HEADLINE
                     if n in reg and n not in classified]
     assert not unclassified, f"bench lines missing a family: {unclassified}"
 
 
 def test_pending_headline_names_are_staged():
-    """PENDING_HEADLINE (the bench lines round 6 adds at promotion)
-    must reference actual staged queries — a rename before promotion
-    would otherwise silently drop the planned perf coverage."""
-    import bench
-
-    missing = [
-        n for n in bench.PENDING_HEADLINE
-        if n not in QD.PENDING_SPARK_QUERIES
-    ]
-    assert not missing, f"PENDING_HEADLINE not in pending registry: {missing}"
+    """PENDING_HEADLINE (the bench lines added at promotion) must
+    reference actual staged queries — a rename before promotion would
+    otherwise silently drop the planned perf coverage."""
+    missing = [n for n in bench.PENDING_HEADLINE if n not in registry.staged()]
+    assert not missing, f"PENDING_HEADLINE not staged: {missing}"
     assert len(set(bench.PENDING_HEADLINE)) == len(bench.PENDING_HEADLINE)
+
+
+def _detail(timings):
+    return {
+        "metric": "headline_queries_total_wall", "value": 1.0, "unit": "sec",
+        "queries": timings, "sf": 0.001,
+        "loadavg_start": [0.1, 0.2, 0.3], "loadavg_end": [0.1, 0.2, 0.3],
+    }
+
+
+def test_summary_line_skips_always_report_names_that_did_not_run():
+    """A bench run that lost an ALWAYS_REPORT line (its stage raised
+    or was cut) must still print a parseable final line."""
+    timings = {"q1_pricing_summary": 2.5, bench.ALWAYS_REPORT[0]: 1.25}
+    out = json.loads(bench.summary_line(_detail(timings)))
+    assert out["queries"] == {bench.ALWAYS_REPORT[0]: 1.25,
+                              "q1_pricing_summary": 2.5}
+    assert out["n_queries"] == 2
+
+
+def test_summary_line_fits_the_tail_budget():
+    """With far more lines than fit, the final line stays under the
+    driver's 2000-char tail, ALWAYS_REPORT names first, then the
+    slowest lines."""
+    timings = {f"q_line_{i:03d}": float(i) for i in range(300)}
+    timings.update({name: 0.01 for name in bench.ALWAYS_REPORT})
+    line = bench.summary_line(_detail(timings))
+    assert len(line) <= 1900
+    packed = list(json.loads(line)["queries"])
+    assert packed[:len(bench.ALWAYS_REPORT)] == bench.ALWAYS_REPORT
+    assert packed[len(bench.ALWAYS_REPORT)] == "q_line_299"

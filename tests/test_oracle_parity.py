@@ -12,15 +12,12 @@ import os
 import duckdb
 import pytest
 
-from osmexpress_spark import queries as Q
-from osmexpress_spark import queries_data as QD
-from osmexpress_spark import queries_osm as QO
-from osmexpress_spark import queries_update as QU
+from osmexpress_spark import registry
 
-ALL_QUERIES = {
-    **Q.SPARK_QUERIES, **QD.SPARK_QUERIES, **QO.SPARK_QUERIES, **QU.SPARK_QUERIES
-}
-ALL_ORACLES = {**Q.ORACLE_SQL, **QD.ORACLE_SQL, **QO.oracle_sql(), **QU.ORACLE_SQL}
+# live and staged alike: staged queries are proven before promotion
+ALL_QUERIES = registry.queries(include_staged=True)
+ALL_ORACLES = registry.oracle_sql(include_staged=True)
+STAGED = registry.staged()
 
 SF_DIR = os.environ.get("OSMX_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
@@ -119,10 +116,10 @@ def test_all_queries_match_oracle_bulk(spark, con):
     items = [
         (name, ALL_QUERIES[name], ALL_ORACLES[name])
         for name in sorted(ALL_ORACLES)
-    ] + [
-        (name, QD.PENDING_SPARK_QUERIES[name], QD.PENDING_ORACLE_SQL[name])
-        for name in sorted(QD.PENDING_ORACLE_SQL)
     ]
+    # queries run 4 at a time in one session, so none may leave session
+    # state behind: a fixed-name temp view is a race between them
+    tables_before = spark.catalog.listTables()
 
     def one(item):
         name, fn, sql = item
@@ -135,32 +132,30 @@ def test_all_queries_match_oracle_bulk(spark, con):
     with ThreadPoolExecutor(max_workers=4) as pool:
         failures = [r for r in pool.map(one, items) if r]
     assert not failures, "\n".join(failures)
+    assert spark.catalog.listTables() == tables_before
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", sorted(ALL_ORACLES))
+@pytest.mark.parametrize("name", sorted(set(ALL_ORACLES) - STAGED))
 def test_query_matches_oracle(spark, con, name):
     _assert_driver_gate(spark, con, name, ALL_QUERIES[name], ALL_ORACLES[name])
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", sorted(QD.PENDING_ORACLE_SQL))
+@pytest.mark.parametrize("name", sorted(STAGED))
 def test_pending_query_matches_oracle(spark, con, name):
-    """Round-6 staged contract queries (queries_data.py
-    PENDING_SPARK_QUERIES) run through the SAME strict gate as the
-    registered 140 — the round-5 registry must stay frozen so the
-    driver's evidence-age window re-greens the r02-aged rows, but the
-    staged queries are already proven before promotion."""
-    _assert_driver_gate(
-        spark, con, name,
-        QD.PENDING_SPARK_QUERIES[name], QD.PENDING_ORACLE_SQL[name],
-    )
+    """Staged contract queries (registry.defq(..., pending=True)) run
+    through the SAME strict gate as the live ones: they stay out of the
+    driver's evidence-age window until promoted, but are proven
+    before promotion."""
+    _assert_driver_gate(spark, con, name, ALL_QUERIES[name], ALL_ORACLES[name])
 
 
 def test_pending_not_registered():
-    """Staged queries must NOT leak into the live registry this round
-    (they would evict aged rows from the driver's 50-slot window)."""
-    assert not set(QD.PENDING_SPARK_QUERIES) & set(ALL_QUERIES)
+    """Staged queries must NOT leak into the live registry (they would
+    evict aged rows from the driver's 50-slot window)."""
+    assert not STAGED & set(registry.queries())
+    assert not STAGED & set(registry.oracle_sql())
 
 
 def test_simplify_ways_golden_fixture(spark):

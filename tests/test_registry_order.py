@@ -24,7 +24,10 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import pytest  # noqa: E402
+
 import __spark_entry__ as entry  # noqa: E402
+from osmexpress_spark import registry  # noqa: E402
 
 # Queries whose semantics are not expressible as deterministic ANSI SQL;
 # each carries a pointer to the golden test that pins it instead.
@@ -154,3 +157,27 @@ def test_every_query_oracled_or_justified():
     assert not stale, f"rows-only allowlist references unknown queries: {stale}"
     double = ROWS_ONLY_JUSTIFIED & oracles
     assert not double, f"allowlisted queries now have oracles, remove: {double}"
+
+
+def test_duplicate_query_name_raises():
+    first = registry.queries()["q_projection"]
+    with pytest.raises(ValueError, match="q_projection"):
+        registry.defq("q_projection")(lambda spark, sf_dir: None)
+    assert registry.queries()["q_projection"] is first
+
+
+def test_staged_queries_are_oracled_and_kept_out_of_the_contract():
+    """What promotion relies on: every staged query already carries an
+    oracle (the parity test proves it before promotion), none is in the
+    driver contract, and none has driver evidence yet — so each one
+    sorts to the head of the window the round it is promoted."""
+    staged = registry.staged()
+    assert staged <= set(registry.oracle_sql(include_staged=True))
+    assert not staged & set(entry.queries())
+    assert not staged & set(entry.oracle_sql())
+    assert not staged & set(entry._latest_green_round())
+
+
+def test_run_times_a_registered_query(spark):
+    wall = registry.run(spark, "q_projection", "/root/testdata/sf0.001")
+    assert wall > 0

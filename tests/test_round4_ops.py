@@ -480,11 +480,11 @@ def test_store_time_travel_rebuilds_partial_store(spark, tmp_path, monkeypatch):
         os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__))),
         ".fixtures", "store_tt_sf0.001",
     )
-    full = {tuple(r) for r in Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+    full = {tuple(r) for r in Q.q_store_time_travel(spark, sf).collect()}
     # simulate the crash: drop v1 and v2 manifests, keep v0
     for v in (1, 2):
         os.remove(os.path.join(root, "_versions", f"v{v:012d}.json"))
-    again = {tuple(r) for r in Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+    again = {tuple(r) for r in Q.q_store_time_travel(spark, sf).collect()}
     assert again == full
     shutil.rmtree(root)  # leave no half-state for other tests
 
@@ -673,12 +673,12 @@ def test_store_time_travel_rebuilds_in_place_on_stale_fingerprint(spark):
         ".fixtures",
     )
     full = {tuple(r) for r in
-            Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+            Q.q_store_time_travel(spark, sf).collect()}
     root = os.path.join(fixtures, "store_tt_sf0.001")
     with open(os.path.join(root, "src.fp"), "w") as f:
         f.write("stale-from-last-round")
     again = {tuple(r) for r in
-             Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+             Q.q_store_time_travel(spark, sf).collect()}
     assert again == full
     with open(os.path.join(root, "src.fp")) as f:
         assert f.read().strip() == Q._tt_fingerprint(sf)  # refreshed

@@ -922,31 +922,6 @@ def test_exact_frequent_items_drops_null_items(spark):
     assert sorted(map(tuple, got.collect())) == [("a", 5)]
 
 
-def test_pending_promotion_mechanics():
-    """Simulates the round-6 promotion (merge PENDING_* into the live
-    dicts) without mutating anything: every staged query would be
-    never-green and sort to the head of the evidence-age window, every
-    one has an oracle, and no name collides with the live registry."""
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
-
-    live = {
-        **Q.SPARK_QUERIES, **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES, **QU.SPARK_QUERIES,
-    }
-    assert not set(QD.PENDING_SPARK_QUERIES) & set(live)
-    assert set(QD.PENDING_ORACLE_SQL) == set(QD.PENDING_SPARK_QUERIES)
-    promoted = {**live, **QD.PENDING_SPARK_QUERIES}
-    assert len(promoted) == len(live) + len(QD.PENDING_SPARK_QUERIES)
-    # evidence files know nothing of the staged names -> never-green
-    import __spark_entry__ as e
-
-    green = e._latest_green_round()
-    assert not set(QD.PENDING_SPARK_QUERIES) & set(green)
-
-
 @pytest.mark.slow
 def test_exact_quantiles_degenerate_distributions(spark):
     from pyspark.sql import functions as F

@@ -87,7 +87,7 @@ def test_bpe_merges_query_matches_train_loop(spark):
     got = sorted(
         map(
             tuple,
-            QD.SPARK_QUERIES["q_bpe_merges"](spark, sf).collect(),
+            QD.q_bpe_merges(spark, sf).collect(),
         )
     )
     d = spark.read.parquet(sf + "/documents.parquet")

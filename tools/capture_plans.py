@@ -26,20 +26,11 @@ def main() -> None:
     names = sys.argv[2:]
 
     import bench
-    from osmexpress_spark import get_spark
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark import get_spark, registry
 
-    registry = {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
+    live = registry.queries()
     if not names:
-        names = [n for n in bench.HEADLINE if n in registry]
+        names = [n for n in bench.HEADLINE if n in live]
 
     spark = get_spark(app_name="osmx-plans", cpus="32",
                       shuffle_partitions=32)
@@ -47,7 +38,7 @@ def main() -> None:
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
         try:
-            df = registry[name](spark, SF_DIR)
+            df = live[name](spark, SF_DIR)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )

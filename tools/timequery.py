@@ -1,6 +1,8 @@
 #!/usr/bin/env python
-"""Time named registry queries through the noop sink (bench
-methodology: build + execute timed together) in a fresh session.
+"""Time named registry queries in a fresh session with bench.py's
+method: the same warm-up, then build + execute through the noop sink
+(osmexpress_spark.registry.warm_up / run). Use it for isolated medians
+of a few lines without a full bench run.
 
 Usage: python tools/timequery.py [-n REPS] name [name ...]
 Prints one JSON line {"name": [t1, t2, ...], ...}.
@@ -11,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,36 +28,19 @@ def main() -> None:
         args = args[2:]
     names = args
 
-    from osmexpress_spark import get_spark
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark import get_spark, registry
 
-    registry = {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
     spark = get_spark(app_name="osmx-timequery", cpus=CPUS,
                       shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup (bench.py does the same): session/codegen startup
-    Q.SPARK_QUERIES["q_projection"](spark, SF_DIR).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    registry.warm_up(spark, SF_DIR)
 
     out: dict[str, list[float]] = {}
     for name in names:
-        ts = []
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"timequery:{name}")
-            t0 = time.monotonic()
-            df = registry[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            ts.append(round(time.monotonic() - t0, 3))
-        out[name] = ts
+        spark.sparkContext.setJobDescription(f"timequery:{name}")
+        out[name] = [
+            round(registry.run(spark, name, SF_DIR), 3) for _ in range(reps)
+        ]
     print(json.dumps(out))
     spark.stop()
 
