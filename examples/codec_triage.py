@@ -49,7 +49,7 @@ def main() -> None:
         mp3_blobs, decoder=mp3l3.decode_stats, modality="audio"
     )
     ogg_census = M.extract_features(
-        ogg_blobs, decoder=M.vorbis_setup_census, modality="audio"
+        ogg_blobs, decoder=V.vorbis_setup_census, modality="audio"
     )
     aac_census = M.extract_features(
         aac_blobs, decoder=M.adts_census, modality="audio"

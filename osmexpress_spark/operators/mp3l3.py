@@ -67,6 +67,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import MsbReader, MsbWriter, PrefixCode
+
 # --------------------------------------------------------------- tables
 # ISO 11172-3 Table B.7 Huffman code tables, row-major (x, y).  Only
 # tables that pass the completeness check (tests/test_mp3l3.py) ship;
@@ -205,37 +207,16 @@ def _build_decode_map(hlen, hcod):
     return out
 
 
-def _build_decode_lut(dec: dict, maxlen: int, width: int = 10):
-    """r12 §4.2: first-level LUT over the next min(maxlen, width) bits
-    — every codeword of length <= the LUT width decodes in ONE peek
-    instead of a per-bit dict walk.  Entries are (symbol, length);
-    None falls back to the exact walk (longer codewords, invalid
-    prefixes).  Built once per table at import time (the tables are
-    module-level singletons), so the build cost never lands on a
-    payload."""
-    lb = min(maxlen, width)
-    lut: list[tuple | None] = [None] * (1 << lb)
-    for (ln, code), sym in dec.items():
-        if ln <= lb:
-            base = code << (lb - ln)
-            entry = (sym, ln)
-            for i in range(1 << (lb - ln)):
-                lut[base + i] = entry
-    return lut, lb
-
-
 class HuffTable:
-    """One big_values Huffman table: encode map (x,y)->(len,code),
-    decode map (len,code)->(x,y), and the linbits escape width."""
+    """One big_values Huffman table: encode maps hlen/hcod indexed
+    [x][y], the linbits escape width, and the decoding PrefixCode."""
 
     def __init__(self, dim, hlen, hcod, linbits=0):
         self.dim = dim
         self.linbits = linbits
         self.hlen = hlen
         self.hcod = hcod
-        self.dec = _build_decode_map(hlen, hcod)
-        self.maxlen = max(max(r) for r in hlen)
-        self.lut, self.lut_bits = _build_decode_lut(self.dec, self.maxlen)
+        self.code = PrefixCode(_build_decode_map(hlen, hcod), lsb=False)
 
 
 # Verified big_values tables.  None = table exists in the standard but
@@ -262,8 +243,7 @@ BIG_VALUE_TABLES: dict[int, HuffTable | None] = {
     **{n: None for n in range(16, 32)},
 }
 
-_C1A_DEC = _build_decode_map(_HLEN_C1A, _HCOD_C1A)
-_C1A_LUT, _C1A_LUT_BITS = _build_decode_lut(_C1A_DEC, 6)
+_C1A_CODE = PrefixCode(_build_decode_map(_HLEN_C1A, _HCOD_C1A), lsb=False)
 
 # Scalefactor band partitions (MPEG-1), indexed by sample rate.
 SFB_LONG = {
@@ -293,101 +273,6 @@ _SAMPLE_RATE = (44100, 48000, 32000)
 _SCFSI_BANDS = ((0, 6), (6, 11), (11, 16), (16, 21))
 
 
-# ------------------------------------------------------------- bit io
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        end = self.pos + n
-        if end > len(self.data) * 8:
-            raise ValueError("mp3 bitstream truncated")
-        v = 0
-        pos = self.pos
-        while n:
-            byte = self.data[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, n)
-            shift = avail - take
-            v = (v << take) | ((byte >> shift) & ((1 << take) - 1))
-            pos += take
-            n -= take
-        self.pos = pos
-        return v
-
-    def bits_left(self) -> int:
-        return len(self.data) * 8 - self.pos
-
-    def peek(self, n: int) -> int:
-        """Next n bits without advancing (caller guarantees n <=
-        bits_left); consuming via peek + pos += len is bit-identical
-        to the per-bit walk."""
-        v = 0
-        pos = self.pos
-        while n:
-            byte = self.data[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, n)
-            shift = avail - take
-            v = (v << take) | ((byte >> shift) & ((1 << take) - 1))
-            pos += take
-            n -= take
-        return v
-
-
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        if n == 0:
-            return
-        if value < 0 or value >= (1 << n):
-            raise ValueError(f"value {value} does not fit in {n} bits")
-        self.acc = (self.acc << n) | value
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def bit_length(self) -> int:
-        return len(self.buf) * 8 + self.nbits
-
-    def getvalue(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write(0, pad)
-        return bytes(self.buf)
-
-
-def _decode_symbol(br: _BitReader, dec: dict, maxlen: int,
-                   lut=None, lut_bits: int = 0):
-    """Walk the bitstream one bit at a time until a codeword of the
-    prefix-free table matches (bounded by maxlen).  With a LUT
-    (r12 §4.2), codewords of length <= lut_bits classify in one peek;
-    the walk remains both the long-code and the end-of-stream path
-    (peeking needs lut_bits buffered bits — near the end the per-bit
-    walk preserves the exact truncation error)."""
-    if lut is not None and br.bits_left() >= lut_bits:
-        hit = lut[br.peek(lut_bits)]
-        if hit is not None:
-            br.pos += hit[1]
-            return hit[0]
-    code = 0
-    for length in range(1, maxlen + 1):
-        code = (code << 1) | br.read(1)
-        sym = dec.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in mp3 stream")
-
-
 # ------------------------------------------------------- side info
 class GranuleInfo:
     __slots__ = (
@@ -402,7 +287,7 @@ class GranuleInfo:
 def _parse_side_info(data: bytes, nch: int):
     """MPEG-1 side info: 17 bytes mono / 32 bytes stereo.  Returns
     (main_data_begin, scfsi[ch][4], granules[2][ch])."""
-    br = _BitReader(data)
+    br = MsbReader(data)
     main_data_begin = br.read(9)
     br.read(5 if nch == 1 else 3)  # private_bits
     scfsi = [[br.read(1) for _ in range(4)] for _ in range(nch)]
@@ -461,7 +346,7 @@ def _region_boundaries(g: GranuleInfo, sample_rate: int):
 
 
 # --------------------------------------------------------- decoding
-def _decode_scalefactors(br: _BitReader, g: GranuleInfo, scfsi_ch,
+def _decode_scalefactors(br: MsbReader, g: GranuleInfo, scfsi_ch,
                          gr_index: int, prev_long):
     """Returns (sf_long[21], sf_short[12][3], part2_bits)."""
     slen1, slen2 = _SLEN1[g.scalefac_compress], _SLEN2[g.scalefac_compress]
@@ -498,7 +383,7 @@ def _decode_scalefactors(br: _BitReader, g: GranuleInfo, scfsi_ch,
     return sf_long, sf_short, br.pos - start
 
 
-def _decode_huffman(br: _BitReader, g: GranuleInfo, sample_rate: int,
+def _decode_huffman(br: MsbReader, g: GranuleInfo, sample_rate: int,
                     part2_3_end: int, tables=None):
     """Decode big_values pairs + count1 quadruples into 576 lines."""
     tabs = BIG_VALUE_TABLES if tables is None else tables
@@ -523,8 +408,7 @@ def _decode_huffman(br: _BitReader, g: GranuleInfo, sample_rate: int,
             xs[line + 1] = 0
             line += 2
             continue
-        x, y = _decode_symbol(br, table.dec, table.maxlen,
-                              table.lut, table.lut_bits)
+        x, y = table.code.decode(br)
         if x == 15 and table.linbits:
             x += br.read(table.linbits)
         if x:
@@ -544,8 +428,7 @@ def _decode_huffman(br: _BitReader, g: GranuleInfo, sample_rate: int,
         if g.count1table_select:
             quad = br.read(4) ^ 0xF
         else:
-            quad = _decode_symbol(br, _C1A_DEC, 6,
-                                  _C1A_LUT, _C1A_LUT_BITS)
+            quad = _C1A_CODE.decode(br)
         vals = [(quad >> 3) & 1, (quad >> 2) & 1, (quad >> 1) & 1,
                 quad & 1]
         for v in vals:
@@ -687,7 +570,7 @@ def parse_frames(payload: bytes, tables=None):
             reservoir[len(reservoir) - main_data_begin:] + main_part
             if main_data_begin else main_part
         )
-        brd = _BitReader(main_data)
+        brd = MsbReader(main_data)
         frame = {
             "sample_rate": sr, "bitrate_kbps": bitrate,
             "mode": mode, "mode_ext": mode_ext, "nch": nch,
@@ -758,7 +641,7 @@ def decode_stats(payload: bytes) -> list[float]:
 
 
 # --------------------------------------------------------- writing
-def _encode_value(bw: _BitWriter, table: HuffTable, x: int, y: int):
+def _encode_value(bw: MsbWriter, table: HuffTable, x: int, y: int):
     ax, ay = abs(x), abs(y)
     lx = ly = 0
     if table.linbits:
@@ -812,7 +695,7 @@ def write_frames(frame_specs, tables=None):
         hdr |= (br_idx << 12) | (sr_idx << 10) | (pad << 9) | (3 << 6)
         flen = (144000 * bitrate) // sr + pad
         # encode both granules' main data first to learn part2_3_length
-        main = _BitWriter()
+        main = MsbWriter()
         p23 = []
         for gr in range(2):
             g = spec["granules"][gr][0]
@@ -857,7 +740,7 @@ def write_frames(frame_specs, tables=None):
                         main.write(1 if s < 0 else 0, 1)
             p23.append(main.bit_length() - start)
         main_bytes = main.getvalue()
-        side = _BitWriter()
+        side = MsbWriter()
         side.write(0, 9)   # main_data_begin
         side.write(0, 5)   # private (mono)
         for _ in range(4):

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import lineage
+from .bitio import LsbReader, LsbWriter, MsbReader, PrefixCode, reverse_bits
+from .vorbis import _lookup1_values, _ogg_crc, _vorbis_ilog
 
 FEATURE_SCHEMA = (
     "item_id long, n_bytes long, modality string, "
@@ -1010,7 +1012,7 @@ class _JpegBits:
             self.acc = ((self.acc << 8) | b) & 0xFFFFFFFF
             self.nbits += 8
 
-    def get(self, n: int) -> int:
+    def read(self, n: int) -> int:
         if n == 0:
             return 0
         self._fill()
@@ -1024,12 +1026,10 @@ class _JpegBits:
                 )
         return v
 
-    # r12 §4.2: peek/skip split so the Huffman LUT can classify a whole
-    # code in one buffered read instead of 1-16 get(1) round-trips.
     # peek pads with zeros past a terminating marker exactly like
     # _fill's EOB-completion path, and skip applies the same real_bits
-    # truncation accounting as get — consuming via peek+skip is
-    # bit-for-bit the same stream state as the per-bit walk.
+    # truncation accounting as read, so PrefixCode.decode's peek + skip
+    # leaves the same stream state as its per-bit walk.
     def peek(self, n: int) -> int:
         self._fill()
         return (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
@@ -1066,66 +1066,20 @@ class _JpegBits:
         self.real_bits = None
 
 
-class _JpegHuff:
-    """Canonical Huffman table (T.81 Annex C): per-length min/max codes
-    + symbol offsets; decode walks one length at a time."""
-
-    def __init__(self, counts: list[int], symbols: bytes):
-        self.symbols = symbols
-        self.mincode = [0] * 17
-        self.maxcode = [-1] * 17
-        self.valptr = [0] * 17
-        code, k = 0, 0
-        for ln in range(1, 17):
-            if counts[ln - 1]:
-                self.valptr[ln] = k
-                self.mincode[ln] = code
-                code += counts[ln - 1]
-                k += counts[ln - 1]
-                self.maxcode[ln] = code - 1
-            code <<= 1
-        if k != len(symbols):
-            raise ValueError("JPEG Huffman table count/symbol mismatch")
-        # r12 §4.2 decode constant: first-level LUT over the next
-        # lut_bits of the stream classifies every code of length <=
-        # lut_bits in ONE peek instead of a per-bit canonical walk
-        # (measured 1.6 ms/doc on the SOF3 seam, dominated by 5x
-        # get(1) + range-check per symbol).  Codes longer than
-        # lut_bits (rare: DC/lossless tables are short) fall back to
-        # the exact walk.  Bounded build cost: 2^lut_bits <= 256
-        # entries per table, built once per parsed table.
-        maxlen = 0
-        for ln in range(1, 17):
-            if counts[ln - 1]:
-                maxlen = ln
-        self.lut_bits = min(8, maxlen) if maxlen else 0
-        lut: list[tuple[int, int] | None] = [None] * (1 << self.lut_bits)
-        if self.lut_bits:
-            code, k = 0, 0
-            for ln in range(1, 17):
-                for _ in range(counts[ln - 1]):
-                    if ln <= self.lut_bits:
-                        base = code << (self.lut_bits - ln)
-                        entry = (symbols[k], ln)
-                        for i in range(1 << (self.lut_bits - ln)):
-                            lut[base + i] = entry
-                    code += 1
-                    k += 1
-                code <<= 1
-        self.lut = lut
-
-    def decode(self, bits: _JpegBits) -> int:
-        if self.lut_bits:
-            hit = self.lut[bits.peek(self.lut_bits)]
-            if hit is not None:
-                bits.skip(hit[1])
-                return hit[0]
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | bits.get(1)
-            if code <= self.maxcode[ln]:
-                return self.symbols[self.valptr[ln] + code - self.mincode[ln]]
-        raise ValueError("JPEG invalid Huffman code")
+def _jpeg_huff(counts: list[int], symbols: bytes) -> PrefixCode:
+    """Canonical Huffman table (T.81 Annex C): counts[i] codes of
+    length i + 1, taking consecutive values in `symbols` order."""
+    if sum(counts) != len(symbols):
+        raise ValueError("JPEG Huffman table count/symbol mismatch")
+    codes: dict[tuple[int, int], int] = {}
+    code, k = 0, 0
+    for ln in range(1, 17):
+        for _ in range(counts[ln - 1]):
+            codes[(ln, code)] = symbols[k]
+            code += 1
+            k += 1
+        code <<= 1
+    return PrefixCode(codes, lsb=False)
 
 
 def _jpeg_extend(v: int, t: int) -> int:
@@ -1214,10 +1168,10 @@ def _jpeg_prog_scan(
                 t = tables[ci].decode(bits)
                 if t > dc_cat_max:
                     raise ValueError(f"JPEG DC category > {dc_cat_max}")
-                state["pred"][ci] += _jpeg_extend(bits.get(t), t)
+                state["pred"][ci] += _jpeg_extend(bits.read(t), t)
                 blk[0] = state["pred"][ci] << al
             else:
-                blk[0] = int(blk[0]) | (bits.get(1) << al)
+                blk[0] = int(blk[0]) | (bits.read(1) << al)
 
         if len(sel) > 1:  # interleaved MCU order
             for my in range(mcuy):
@@ -1275,13 +1229,13 @@ def _jpeg_prog_scan(
                             k += 16
                             continue
                         state["eobrun"] = (1 << r) - 1 + (
-                            bits.get(r) if r else 0
+                            bits.read(r) if r else 0
                         )
                         break
                     k += r
                     if k > se:
                         raise ValueError("JPEG AC index overruns band")
-                    blk[k] = _jpeg_extend(bits.get(sz), sz) << al
+                    blk[k] = _jpeg_extend(bits.read(sz), sz) << al
                     k += 1
                 continue
             # AC refinement pass (T.81 G.1.2.3, libjpeg control flow)
@@ -1293,7 +1247,7 @@ def _jpeg_prog_scan(
                     if sz == 0:
                         if r != 15:
                             state["eobrun"] = (1 << r) + (
-                                bits.get(r) if r else 0
+                                bits.read(r) if r else 0
                             )
                             break
                         # r == 15: pass over 15 zero-history coeffs
@@ -1302,11 +1256,11 @@ def _jpeg_prog_scan(
                             raise ValueError(
                                 "JPEG AC refine magnitude != 1"
                             )
-                        sz = p1 if bits.get(1) else -p1
+                        sz = p1 if bits.read(1) else -p1
                     while k <= se:
                         v = int(blk[k])
                         if v != 0:
-                            if bits.get(1) and (v & p1) == 0:
+                            if bits.read(1) and (v & p1) == 0:
                                 blk[k] = v + (p1 if v >= 0 else -p1)
                         else:
                             if r == 0:
@@ -1320,7 +1274,7 @@ def _jpeg_prog_scan(
                 while k <= se:
                     v = int(blk[k])
                     if v != 0:
-                        if bits.get(1) and (v & p1) == 0:
+                        if bits.read(1) and (v & p1) == 0:
                             blk[k] = v + (p1 if v >= 0 else -p1)
                     k += 1
                 state["eobrun"] -= 1
@@ -1379,7 +1333,7 @@ def _decode_jpeg(payload: bytes) -> list[float]:
         raise ValueError("not a JPEG stream")
     pos = 2
     qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], _JpegHuff] = {}
+    huff: dict[tuple[int, int], PrefixCode] = {}
     frame = None
     restart_interval = 0
     adobe = None  # APP14 color-transform byte (None = no Adobe marker)
@@ -1487,7 +1441,7 @@ def _decode_jpeg(payload: bytes) -> list[float]:
                 symbols = d[p + 17 : p + 17 + n]
                 if len(symbols) < n:
                     raise ValueError("JPEG DHT truncated")
-                huff[(tc, th)] = _JpegHuff(counts, symbols)
+                huff[(tc, th)] = _jpeg_huff(counts, symbols)
                 p += 17 + n
             pos += ln
         elif marker == 0xDB:  # DQT
@@ -1625,7 +1579,7 @@ def _decode_jpeg(payload: bytes) -> list[float]:
                             raise ValueError(
                                 f"JPEG DC category > {dc_cat_max}"
                             )
-                        c["pred"] += _jpeg_extend(bits.get(t), t)
+                        c["pred"] += _jpeg_extend(bits.read(t), t)
                         zz[0] = c["pred"]
                         k = 1
                         while k < 64:
@@ -1639,7 +1593,7 @@ def _decode_jpeg(payload: bytes) -> list[float]:
                             k += r
                             if k > 63:
                                 raise ValueError("JPEG AC index overrun")
-                            zz[k] = _jpeg_extend(bits.get(s), s)
+                            zz[k] = _jpeg_extend(bits.read(s), s)
                             k += 1
                         block = zz[dezig].reshape(8, 8) * c["q"]
                         px = idct @ block @ idct.T + half
@@ -1717,7 +1671,7 @@ def _jpeg_lossless_decode(
         # bit-exact by tests/test_jpeg_extended.py.
         flat: list[int] = []
         append = flat.append
-        get = bits.get
+        get = bits.read
         for _ in range(h * w):
             for ci in range(ncomp):
                 t = tabs[ci].decode(bits)
@@ -1774,7 +1728,7 @@ def _jpeg_lossless_decode(
                 t = tabs[ci].decode(bits)
                 if t > 16:
                     raise ValueError("JPEG lossless SSSS > 16")
-                diff = 32768 if t == 16 else _jpeg_extend(bits.get(t), t)
+                diff = 32768 if t == 16 else _jpeg_extend(bits.read(t), t)
                 p = planes[ci]
                 if row_restart[ci] == -1:
                     px = default
@@ -1911,45 +1865,22 @@ _VP8L_CL_ORDER = (
 )
 
 
-class _Vp8lBits:
-    """LSB-first bit reader (VP8L packs value bits low-bit-first within
-    bytes; prefix-code bits are then consumed one at a time)."""
-
-    __slots__ = ("d", "pos")
-
-    def __init__(self, d: bytes):
-        self.d = d
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        pos = self.pos
-        end = pos + n
-        d = self.d
-        if end > len(d) * 8:
-            raise ValueError("VP8L bitstream truncated")
-        self.pos = end
-        chunk = int.from_bytes(d[pos >> 3 : (end + 7) >> 3], "little")
-        return (chunk >> (pos & 7)) & ((1 << n) - 1)
-
-
 class _Vp8lCode:
     """Canonical prefix code (DEFLATE numbering: codes assigned in
-    (length, symbol) order, read MSB-first).  A code with exactly one
-    used symbol reads ZERO bits (the spec's degenerate case)."""
+    (length, symbol) order, bits read root first).  A code with exactly
+    one used symbol reads ZERO bits (the spec's degenerate case)."""
 
-    __slots__ = ("single", "table", "max_len", "lut")
+    __slots__ = ("single", "prefix")
 
     def __init__(self, lengths: list[int]):
-        self.lut: list | None = None
         nz = sorted((ln, s) for s, ln in enumerate(lengths) if ln > 0)
         if not nz:
             raise ValueError("VP8L prefix code with no symbols")
         if len(nz) == 1:
-            self.single, self.table, self.max_len = nz[0][1], None, 0
+            self.single, self.prefix = nz[0][1], None
             return
         self.single = None
-        self.max_len = nz[-1][0]
-        if self.max_len > 15:
+        if nz[-1][0] > 15:
             raise ValueError("VP8L code length > 15")
         kraft = sum(1 << (15 - ln) for ln, _ in nz)
         if kraft != 1 << 15:
@@ -1962,68 +1893,15 @@ class _Vp8lCode:
             prev = ln
             table[(ln, code)] = s
             code += 1
-        self.table = table
+        self.prefix = PrefixCode(table, lsb=True)
 
-    def _build_lut(self) -> list:
-        """One-level fast table: peek max_len LSB-first bits, index the
-        table, advance by the matched length — the classic fast-Huffman
-        layout (entries replicate across their free high bits; slice
-        assignment keeps the build C-speed, it is per-stream work)."""
-        size = 1 << self.max_len
-        lut: list = [None] * size
-        for (ln, cw), s in self.table.items():
-            rev, c = 0, cw
-            for _ in range(ln):
-                rev = (rev << 1) | (c & 1)
-                c >>= 1
-            lut[rev :: 1 << ln] = [(s, ln)] * (size >> ln)
-        self.lut = lut
-        return lut
-
-    def read(self, bits: _Vp8lBits) -> int:
+    def read(self, bits: LsbReader) -> int:
         if self.single is not None:
             return self.single
-        if self.max_len <= 10:  # LUT pays for itself immediately
-            lut = self.lut or self._build_lut()
-            d, pos = bits.d, bits.pos
-            avail = len(d) * 8 - pos
-            chunk = (
-                int.from_bytes(
-                    d[pos >> 3 : (pos + self.max_len + 7) >> 3], "little"
-                )
-                >> (pos & 7)
-            )
-            mask = (1 << self.max_len) - 1 if avail >= self.max_len else (
-                (1 << avail) - 1
-            )
-            ent = lut[chunk & mask]
-            if ent is None:
-                raise ValueError("VP8L invalid prefix code word")
-            s, ln = ent
-            if ln > avail:
-                raise ValueError("VP8L bitstream truncated")
-            bits.pos = pos + ln
-            return s
-        # long codes: inline bit-by-bit walk (the per-bit read() call
-        # overhead is the decode hot path)
-        d, pos = bits.d, bits.pos
-        limit = len(d) * 8
-        table = self.table
-        code = ln = 0
-        while ln < self.max_len:
-            if pos >= limit:
-                raise ValueError("VP8L bitstream truncated")
-            code = (code << 1) | ((d[pos >> 3] >> (pos & 7)) & 1)
-            pos += 1
-            ln += 1
-            s = table.get((ln, code))
-            if s is not None:
-                bits.pos = pos
-                return s
-        raise ValueError("VP8L invalid prefix code word")
+        return self.prefix.decode(bits)
 
 
-def _vp8l_read_code(bits: _Vp8lBits, alphabet_size: int) -> _Vp8lCode:
+def _vp8l_read_code(bits: LsbReader, alphabet_size: int) -> _Vp8lCode:
     """One prefix code: the 'simple' 1/2-symbol form or the normal
     form whose symbol lengths are themselves prefix-coded (with the
     16/17/18 repeat codes and the optional max-symbol budget)."""
@@ -2078,7 +1956,7 @@ def _vp8l_read_code(bits: _Vp8lBits, alphabet_size: int) -> _Vp8lCode:
     return _Vp8lCode(lengths)
 
 
-def _vp8l_prefix_value(code: int, bits: _Vp8lBits) -> int:
+def _vp8l_prefix_value(code: int, bits: LsbReader) -> int:
     """LZ77 length/distance prefix decoding: codes 0-3 are the values
     1-4; above that each code pair doubles the range with extra bits."""
     if code < 4:
@@ -2097,7 +1975,7 @@ def _vp8l_plane_to_dist(xsize: int, plane: int) -> int:
 
 
 def _vp8l_decode_image(
-    bits: _Vp8lBits, w: int, h: int, is_spatial: bool
+    bits: LsbReader, w: int, h: int, is_spatial: bool
 ) -> list[int]:
     """One entropy-coded image stream -> row-major packed ARGB ints.
     Spatial (top-level) streams may carry meta prefix groups; every
@@ -2269,7 +2147,7 @@ def _decode_vp8l(data: bytes) -> tuple[int, int, list[int]]:
     """VP8L chunk payload -> (width, height, packed ARGB pixels)."""
     if not data or data[0] != 0x2F:
         raise ValueError("VP8L signature byte missing")
-    bits = _Vp8lBits(data[1:])
+    bits = LsbReader(data[1:])
     w = bits.read(14) + 1
     h = bits.read(14) + 1
     bits.read(1)  # alpha hint
@@ -3641,52 +3519,24 @@ def format_census(
 # statistics exactly.
 
 
-class _FlacBits:
-    """MSB-first bit reader over the FLAC stream."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.d = data
-        self.bitpos = pos * 8
-
-    def u(self, n: int) -> int:
-        end = self.bitpos + n
-        if end > len(self.d) * 8:
-            raise ValueError("FLAC stream truncated")
-        v = 0
-        bp = self.bitpos
-        while n:
-            byte = self.d[bp >> 3]
-            avail = 8 - (bp & 7)
-            take = min(avail, n)
-            v = (v << take) | (
-                (byte >> (avail - take)) & ((1 << take) - 1)
-            )
-            bp += take
-            n -= take
-        self.bitpos = bp
-        return v
-
-    def s(self, n: int) -> int:
-        v = self.u(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.u(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("FLAC unary run unreasonably long")
-        return q
-
-    def align(self) -> None:
-        self.bitpos = (self.bitpos + 7) & ~7
-
-    def at_end(self) -> bool:
-        return self.bitpos >= len(self.d) * 8
+def _flac_s(bits: MsbReader, n: int) -> int:
+    """n-bit two's-complement value."""
+    v = bits.read(n)
+    return v - (1 << n) if v >> (n - 1) else v
 
 
-def _flac_utf8(bits: _FlacBits) -> int:
-    b0 = bits.u(8)
+def _flac_unary(bits: MsbReader) -> int:
+    """Count of 0 bits before the next 1 bit (Rice quotients)."""
+    q = 0
+    while bits.read(1) == 0:
+        q += 1
+        if q > 1 << 20:
+            raise ValueError("FLAC unary run unreasonably long")
+    return q
+
+
+def _flac_utf8(bits: MsbReader) -> int:
+    b0 = bits.read(8)
     if b0 < 0x80:
         return b0
     n = 0
@@ -3696,20 +3546,20 @@ def _flac_utf8(bits: _FlacBits) -> int:
         raise ValueError("FLAC bad UTF-8 coded number")
     v = b0 & (0x7F >> n)
     for _ in range(n - 1):
-        c = bits.u(8)
+        c = bits.read(8)
         if c & 0xC0 != 0x80:
             raise ValueError("FLAC bad UTF-8 continuation")
         v = (v << 6) | (c & 0x3F)
     return v
 
 
-def _flac_residuals(bits: _FlacBits, blocksize: int, order: int) -> list[int]:
-    method = bits.u(2)
+def _flac_residuals(bits: MsbReader, blocksize: int, order: int) -> list[int]:
+    method = bits.read(2)
     if method not in (0, 1):
         raise ValueError(f"FLAC reserved residual method {method}")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    po = bits.u(4)
+    po = bits.read(4)
     nparts = 1 << po
     if blocksize % nparts:
         raise ValueError(
@@ -3720,15 +3570,15 @@ def _flac_residuals(bits: _FlacBits, blocksize: int, order: int) -> list[int]:
         n = (blocksize >> po) - (order if p == 0 else 0)
         if n < 0:
             raise ValueError("FLAC partition smaller than predictor order")
-        k = bits.u(pbits)
+        k = bits.read(pbits)
         if k == escape:
-            raw = bits.u(5)
+            raw = bits.read(5)
             for _ in range(n):
-                out.append(bits.s(raw) if raw else 0)
+                out.append(_flac_s(bits, raw) if raw else 0)
         else:
             for _ in range(n):
-                q = bits.unary()
-                v = (q << k) | bits.u(k)
+                q = _flac_unary(bits)
+                v = (q << k) | bits.read(k)
                 out.append((v >> 1) ^ -(v & 1))
     return out
 
@@ -3742,24 +3592,24 @@ _FLAC_FIXED = {
 }
 
 
-def _flac_subframe(bits: _FlacBits, blocksize: int, bps: int) -> list[int]:
-    if bits.u(1):
+def _flac_subframe(bits: MsbReader, blocksize: int, bps: int) -> list[int]:
+    if bits.read(1):
         raise ValueError("FLAC subframe padding bit set")
-    t = bits.u(6)
+    t = bits.read(6)
     wasted = 0
-    if bits.u(1):
-        wasted = 1 + bits.unary()
+    if bits.read(1):
+        wasted = 1 + _flac_unary(bits)
     eff = bps - wasted
     if eff <= 0:
         raise ValueError("FLAC wasted bits exceed sample size")
     if t == 0:  # constant
-        v = bits.s(eff)
+        v = _flac_s(bits, eff)
         out = [v] * blocksize
     elif t == 1:  # verbatim
-        out = [bits.s(eff) for _ in range(blocksize)]
+        out = [_flac_s(bits, eff) for _ in range(blocksize)]
     elif 8 <= t <= 12:  # fixed, order t-8
         order = t - 8
-        out = [bits.s(eff) for _ in range(order)]
+        out = [_flac_s(bits, eff) for _ in range(order)]
         res = _flac_residuals(bits, blocksize, order)
         coefs = _FLAC_FIXED[order]
         for r in res:
@@ -3769,14 +3619,14 @@ def _flac_subframe(bits: _FlacBits, blocksize: int, bps: int) -> list[int]:
             out.append(pred + r)
     elif t >= 32:  # LPC, order t-31
         order = t - 31
-        out = [bits.s(eff) for _ in range(order)]
-        prec = bits.u(4) + 1
+        out = [_flac_s(bits, eff) for _ in range(order)]
+        prec = bits.read(4) + 1
         if prec == 16:
             raise ValueError("FLAC invalid LPC precision")
-        shift = bits.s(5)
+        shift = _flac_s(bits, 5)
         if shift < 0:
             raise ValueError("FLAC negative LPC shift")
-        coefs = [bits.s(prec) for _ in range(order)]
+        coefs = [_flac_s(bits, prec) for _ in range(order)]
         res = _flac_residuals(bits, blocksize, order)
         for r in res:
             pred = sum(
@@ -3802,29 +3652,29 @@ def flac_decoder(payload: bytes) -> list[float]:
             "only PCM WAV and native FLAC decode in-container; swap in "
             "torchaudio/ffmpeg via decoder= for mp3/ogg/aac"
         )
-    bits = _FlacBits(payload, 4)
+    bits = MsbReader(payload, 32)
     # metadata blocks; STREAMINFO is mandatory and first
     last = False
     info = None
     while not last:
-        last = bits.u(1) == 1
-        btype = bits.u(7)
-        blen = bits.u(24)
+        last = bits.read(1) == 1
+        btype = bits.read(7)
+        blen = bits.read(24)
         if btype == 0:
             if blen != 34:
                 raise ValueError("FLAC STREAMINFO wrong length")
-            bits.u(16)  # min blocksize
-            bits.u(16)  # max blocksize
-            bits.u(24)  # min framesize
-            bits.u(24)  # max framesize
-            rate = bits.u(20)
-            nch = bits.u(3) + 1
-            bps = bits.u(5) + 1
-            total = bits.u(36)
-            bits.bitpos += 128  # md5
+            bits.read(16)  # min blocksize
+            bits.read(16)  # max blocksize
+            bits.read(24)  # min framesize
+            bits.read(24)  # max framesize
+            rate = bits.read(20)
+            nch = bits.read(3) + 1
+            bps = bits.read(5) + 1
+            total = bits.read(36)
+            bits.pos += 128  # md5
             info = (rate, nch, bps, total)
         else:
-            bits.bitpos += blen * 8
+            bits.pos += blen * 8
     if info is None:
         raise ValueError("FLAC missing STREAMINFO")
     rate, nch, bps, total = info
@@ -3834,16 +3684,16 @@ def flac_decoder(payload: bytes) -> list[float]:
     tot_abs = 0
     peak = 0
     nframes = 0
-    while not bits.at_end():
-        if bits.u(14) != 0b11111111111110:
+    while bits.bits_left() > 0:
+        if bits.read(14) != 0b11111111111110:
             raise ValueError("FLAC bad frame sync")
-        bits.u(1)  # reserved
-        bits.u(1)  # blocking strategy
-        bs_code = bits.u(4)
-        sr_code = bits.u(4)
-        ch_code = bits.u(4)
-        ss_code = bits.u(3)
-        bits.u(1)  # reserved
+        bits.read(1)  # reserved
+        bits.read(1)  # blocking strategy
+        bs_code = bits.read(4)
+        sr_code = bits.read(4)
+        ch_code = bits.read(4)
+        ss_code = bits.read(3)
+        bits.read(1)  # reserved
         _flac_utf8(bits)  # frame/sample number
         if bs_code == 0:
             raise ValueError("FLAC reserved block size code")
@@ -3852,15 +3702,15 @@ def flac_decoder(payload: bytes) -> list[float]:
         elif bs_code <= 5:
             blocksize = 576 << (bs_code - 2)
         elif bs_code == 6:
-            blocksize = bits.u(8) + 1
+            blocksize = bits.read(8) + 1
         elif bs_code == 7:
-            blocksize = bits.u(16) + 1
+            blocksize = bits.read(16) + 1
         else:
             blocksize = 256 << (bs_code - 8)
         if sr_code == 12:
-            bits.u(8)
+            bits.read(8)
         elif sr_code in (13, 14):
-            bits.u(16)
+            bits.read(16)
         elif sr_code == 15:
             raise ValueError("FLAC invalid sample rate code")
         if ss_code == 0:
@@ -3869,7 +3719,7 @@ def flac_decoder(payload: bytes) -> list[float]:
             fbps = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}.get(ss_code)
             if fbps is None:
                 raise ValueError("FLAC reserved sample size code")
-        bits.u(8)  # header CRC-8 (not verified)
+        bits.read(8)  # header CRC-8 (not verified)
         if ch_code < 8:
             fnch = ch_code + 1
             chans = [
@@ -3901,7 +3751,7 @@ def flac_decoder(payload: bytes) -> list[float]:
         if fnch != nch:
             raise ValueError("FLAC frame channel count disagrees")
         bits.align()
-        bits.u(16)  # frame CRC-16 (not verified)
+        bits.read(16)  # frame CRC-16 (not verified)
         for ch in chans:
             for v in ch:
                 a = abs(v)
@@ -4428,44 +4278,14 @@ def dhash_bands(
     return base.select(id_col, *bands)
 
 
-class _Vp8lWriter:
-    """LSB-first bit writer for VP8L streams; prefix-code words are
-    emitted MSB-first (the decoder's bit-by-bit walk order)."""
-
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def bits(self, v: int, n: int) -> None:
-        self.acc |= (v & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.buf.append(self.acc & 255)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def code(self, code: int, n: int) -> None:
-        for i in reversed(range(n)):
-            self.bits((code >> i) & 1, 1)
-
-    def done(self) -> bytes:
-        if self.nbits:
-            self.buf.append(self.acc & 255)
-            self.acc, self.nbits = 0, 0
-        return bytes(self.buf)
-
-
 def _vp8l_invert(code: _Vp8lCode) -> dict[int, tuple[int, int]]:
     """symbol -> (length, code word) for encoding with a decoder-built
     canonical table (guarantees encoder/decoder numbering agree by
     construction)."""
-    return {s: (ln, cw) for (ln, cw), s in code.table.items()}
+    return {s: (ln, cw) for (ln, cw), s in code.prefix.codes.items()}
 
 
-_REV8 = tuple(int(f"{v:08b}"[::-1], 2) for v in range(256))
+_REV8 = tuple(reverse_bits(v, 8) for v in range(256))
 _WEBP_GRAY_CODE: dict[int, tuple[int, int]] | None = None
 
 
@@ -4477,7 +4297,7 @@ def _webp_gray_code() -> dict[int, tuple[int, int]]:
     if _WEBP_GRAY_CODE is None:
         inv = _vp8l_invert(_Vp8lCode([8] * 232 + [9] * 48))
         _WEBP_GRAY_CODE = {
-            s: (ln, int(f"{cw:0{ln}b}"[::-1], 2)) for s, (ln, cw) in inv.items()
+            s: (ln, reverse_bits(cw, ln)) for s, (ln, cw) in inv.items()
         }
     return _WEBP_GRAY_CODE
 
@@ -4494,43 +4314,43 @@ def _encode_webp_gray(pix: bytes, w: int, h: int) -> bytes:
     if len(pix) != w * h:
         raise ValueError("pixel buffer does not match dimensions")
     gmap = _webp_gray_code()
-    wtr = _Vp8lWriter()
-    wtr.bits(w - 1, 14)
-    wtr.bits(h - 1, 14)
-    wtr.bits(0, 1)  # no alpha hint
-    wtr.bits(0, 3)  # version
-    wtr.bits(0, 1)  # no transforms
-    wtr.bits(0, 1)  # no color cache
-    wtr.bits(0, 1)  # no meta prefix codes
+    wtr = LsbWriter()
+    wtr.write(w - 1, 14)
+    wtr.write(h - 1, 14)
+    wtr.write(0, 1)  # no alpha hint
+    wtr.write(0, 3)  # version
+    wtr.write(0, 1)  # no transforms
+    wtr.write(0, 1)  # no color cache
+    wtr.write(0, 1)  # no meta prefix codes
     # green: normal form; lengths are 8 (symbols < 232) else 9, and the
     # code-length code maps 8 -> '0', 9 -> '1' (two 1-bit symbols)
-    wtr.bits(0, 1)
-    wtr.bits(13 - 4, 4)  # order covers ..., 8 at index 11, 9 at index 12
+    wtr.write(0, 1)
+    wtr.write(13 - 4, 4)  # order covers ..., 8 at index 11, 9 at index 12
     for ln in (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1):
-        wtr.bits(ln, 3)
-    wtr.bits(0, 1)  # no max-symbol budget
+        wtr.write(ln, 3)
+    wtr.write(0, 1)  # no max-symbol budget
     for s in range(280):
-        wtr.bits(0 if s < 232 else 1, 1)
+        wtr.write(0 if s < 232 else 1, 1)
     # red, blue: flat 256 x 8-bit via the single-symbol code-length code
     # (every emitted length is 8, read with zero bits each)
     for _ in range(2):
-        wtr.bits(0, 1)
-        wtr.bits(12 - 4, 4)  # order covers ..., 8 at index 11
+        wtr.write(0, 1)
+        wtr.write(12 - 4, 4)  # order covers ..., 8 at index 11
         for ln in (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1):
-            wtr.bits(ln, 3)
-        wtr.bits(0, 1)
+            wtr.write(ln, 3)
+        wtr.write(0, 1)
     # alpha: simple 1-symbol code, symbol 255 (8-bit form)
-    wtr.bits(1, 1)
-    wtr.bits(0, 1)
-    wtr.bits(1, 1)
-    wtr.bits(255, 8)
+    wtr.write(1, 1)
+    wtr.write(0, 1)
+    wtr.write(1, 1)
+    wtr.write(255, 8)
     # distance: simple 1-symbol code, symbol 0 (1-bit form)
-    wtr.bits(1, 1)
-    wtr.bits(0, 1)
-    wtr.bits(0, 1)
-    wtr.bits(0, 1)
+    wtr.write(1, 1)
+    wtr.write(0, 1)
+    wtr.write(0, 1)
+    wtr.write(0, 1)
     rev8 = _REV8
-    bits = wtr.bits
+    bits = wtr.write
     for v in pix:
         ln, rcw = gmap[v]
         bits(rcw, ln)  # pre-reversed code word through the value writer
@@ -4538,7 +4358,7 @@ def _encode_webp_gray(pix: bytes, w: int, h: int) -> bytes:
         bits(rv, 8)  # red (flat: code word == symbol, MSB-first)
         bits(rv, 8)  # blue
         # alpha: zero bits
-    return _webp_wrap(b"\x2f" + wtr.done())
+    return _webp_wrap(b"\x2f" + wtr.getvalue())
 
 
 def _webp_wrap(vp8l: bytes) -> bytes:
@@ -5042,34 +4862,6 @@ def synth_encoded(
 # BOS page) yields channels/sample-rate.  Full Vorbis PCM synthesis
 # (floor/residue/MDCT) stays out, same honesty contract as mp3.
 
-_OGG_BITREV = None  # uint8[256] per-byte bit-reversal table (lazy)
-
-
-def _ogg_crc(data: bytes) -> int:
-    """Ogg page CRC: poly 0x04C11DB7, MSB-first, zero init, no
-    reflection, no xorout.  Computed at C speed through zlib's crc32
-    via the CRC reflection identity — the MSB-first CRC of a message
-    equals the bit-reversed LSB-first CRC (reversed polynomial:
-    0xEDB88320, exactly zlib's) of the per-byte bit-reversed message.
-    zlib's mandatory pre/post complement cancels by seeding with
-    0xFFFFFFFF (internal state 0) and complementing the result.  The
-    per-byte reversal is one numpy table gather, so the whole walk is
-    two vectorized passes instead of the round-10 Python byte loop
-    (SCALING.md's 3.65x/decade line for q_ogg_census)."""
-    import zlib
-
-    import numpy as np
-
-    global _OGG_BITREV
-    if _OGG_BITREV is None:
-        _OGG_BITREV = np.array(
-            [int(f"{i:08b}"[::-1], 2) for i in range(256)], dtype=np.uint8
-        )
-    rev = _OGG_BITREV[np.frombuffer(data, dtype=np.uint8)].tobytes()
-    r = (zlib.crc32(rev, 0xFFFFFFFF) ^ 0xFFFFFFFF) & 0xFFFFFFFF
-    return int(f"{r:032b}"[::-1], 2)
-
-
 _OGG_RATES = (8000, 22050, 44100, 48000)
 
 
@@ -5209,413 +5001,6 @@ def synth_ogg(
     return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
 
 
-# --------------------------------------------------------------------------
-# Vorbis setup-header codebook census (round 11 — the first half of
-# Vorbis PCM, the mp3 two-step precedent: container census (r10 Ogg) ->
-# header/codebook parse (here) -> floor/residue/MDCT synthesis (the
-# documented remainder).  Vorbis packs bits LSB-FIRST (Vorbis I spec
-# §2, the opposite of mp3), so the walk gets its own reader/writer
-# pair; codebook framing per spec §3.2.1: 24-bit sync 0x564342,
-# 16-bit dimensions, 24-bit entries, ordered/sparse codeword-length
-# lists, 4-bit lookup type with lookup1_values multiplicand counting.
-
-
-class _VorbisBitReader:
-    """LSB-first bit reader (Vorbis I spec §2.1.2)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        out = 0
-        for k in range(n):
-            p = self.pos + k
-            byte = p >> 3
-            if byte >= len(self.data):
-                raise ValueError("truncated Vorbis bitstream")
-            out |= ((self.data[byte] >> (p & 7)) & 1) << k
-        self.pos += n
-        return out
-
-
-class _VorbisBitWriter:
-    """LSB-first bit writer — the encode-side mirror."""
-
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        for k in range(n):
-            self.bits.append((value >> k) & 1)
-
-    def getvalue(self) -> bytes:
-        out = bytearray((len(self.bits) + 7) // 8)
-        for p, b in enumerate(self.bits):
-            out[p >> 3] |= b << (p & 7)
-        return bytes(out)
-
-
-def _vorbis_ilog(x: int) -> int:
-    """ilog per Vorbis I spec §9.2.1: bit count of x (0 for x <= 0)."""
-    n = 0
-    while x > 0:
-        n += 1
-        x >>= 1
-    return n
-
-
-def _lookup1_values(entries: int, dim: int) -> int:
-    """Greatest integer r with r**dim <= entries (spec §9.2.3)."""
-    r = 1
-    while (r + 1) ** dim <= entries:
-        r += 1
-    return r
-
-
-def _ogg_packets(b: bytes) -> list[bytes]:
-    """Ogg packet extraction: the r10 page walk (capture pattern,
-    version, recomputed CRC) plus lacing-based packet assembly with
-    cross-page continuation.  ValueError on structural damage."""
-    import struct
-
-    pos, n = 0, len(b)
-    packets: list[bytes] = []
-    partial = bytearray()
-    while pos < n:
-        if b[pos:pos + 4] != b"OggS" or pos + 27 > n:
-            raise ValueError("bad Ogg capture pattern")
-        if b[pos + 4] != 0:
-            raise ValueError("unknown Ogg version")
-        _granule, _serial, _seq, crc, nsegs = struct.unpack_from(
-            "<qIIIB", b, pos + 6
-        )
-        if pos + 27 + nsegs > n:
-            raise ValueError("truncated Ogg segment table")
-        lacing = b[pos + 27:pos + 27 + nsegs]
-        body_len = sum(lacing)
-        page_end = pos + 27 + nsegs + body_len
-        if page_end > n:
-            raise ValueError("truncated Ogg page body")
-        page = bytearray(b[pos:page_end])
-        page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != crc:
-            raise ValueError("Ogg page CRC mismatch")
-        off = pos + 27 + nsegs
-        for v in lacing:
-            partial += b[off:off + v]
-            off += v
-            if v < 255:
-                packets.append(bytes(partial))
-                partial = bytearray()
-        pos = page_end
-    if partial:
-        raise ValueError("unterminated Ogg packet")
-    return packets
-
-
-def _parse_codebook(br: _VorbisBitReader) -> dict:
-    """One codebook definition (spec §3.2.1) -> {dims, entries,
-    ordered, sparse, used_length_sum, lookup_type} plus the
-    decode-ready fields the round-11 Vorbis synthesis machinery
-    consumes: `lengths` (used entry -> codeword length) and `lookup`
-    (raw min/delta words, value_bits, sequence_p, multiplicands)."""
-    if br.read(24) != 0x564342:
-        raise ValueError("bad Vorbis codebook sync")
-    dims = br.read(16)
-    entries = br.read(24)
-    ordered = br.read(1)
-    used_sum = 0
-    sparse = 0
-    lengths: dict = {}
-    if not ordered:
-        sparse = br.read(1)
-        for e in range(entries):
-            if sparse:
-                if br.read(1):
-                    lengths[e] = br.read(5) + 1
-                    used_sum += lengths[e]
-            else:
-                lengths[e] = br.read(5) + 1
-                used_sum += lengths[e]
-    else:
-        curlen = br.read(5) + 1
-        cur = 0
-        while cur < entries:
-            number = br.read(_vorbis_ilog(entries - cur))
-            if number > entries - cur:
-                raise ValueError("overspecified ordered codebook run")
-            for e in range(cur, cur + number):
-                lengths[e] = curlen
-            used_sum += curlen * number
-            cur += number
-            curlen += 1
-    lookup = br.read(4)
-    if lookup not in (0, 1, 2):
-        raise ValueError(f"reserved codebook lookup type {lookup}")
-    lookup_cfg = None
-    if lookup:
-        min_raw = br.read(32)
-        delta_raw = br.read(32)
-        value_bits = br.read(4) + 1
-        sequence_p = br.read(1)
-        count = (
-            _lookup1_values(entries, dims) if lookup == 1
-            else entries * dims
-        )
-        lookup_cfg = {
-            "type": lookup, "min_raw": min_raw,
-            "delta_raw": delta_raw, "value_bits": value_bits,
-            "sequence_p": sequence_p,
-            "multiplicands": [br.read(value_bits)
-                              for _ in range(count)],
-        }
-    return {
-        "dims": dims, "entries": entries, "ordered": ordered,
-        "sparse": sparse, "used_length_sum": used_sum,
-        "lookup_type": lookup, "lengths": lengths,
-        "lookup": lookup_cfg,
-    }
-
-
-def _parse_floor(br: _VorbisBitReader, n_books: int) -> dict:
-    """One floor configuration (spec §6.2, §7.2.2) -> {type,
-    partitions, x_sum} (floor0: partitions = number_of_books,
-    x_sum = 0)."""
-    ftype = br.read(16)
-    if ftype == 0:
-        br.read(8)   # order
-        br.read(16)  # rate
-        br.read(16)  # bark_map_size
-        br.read(6)   # amplitude_bits
-        br.read(8)   # amplitude_offset
-        nb = br.read(4) + 1
-        for _ in range(nb):
-            if br.read(8) >= n_books:
-                raise ValueError("floor0 book out of range")
-        return {"type": 0, "partitions": nb, "x_sum": 0}
-    if ftype != 1:
-        raise ValueError(f"reserved floor type {ftype}")
-    partitions = br.read(5)
-    classes = [br.read(4) for _ in range(partitions)]
-    n_classes = (max(classes) + 1) if classes else 0
-    class_cfg = []
-    for _ in range(n_classes):
-        dims = br.read(3) + 1
-        subs = br.read(2)
-        master = None
-        if subs:
-            master = br.read(8)
-            if master >= n_books:
-                raise ValueError("floor1 masterbook out of range")
-        subbooks = []
-        for _ in range(1 << subs):
-            bk = br.read(8) - 1
-            if bk >= n_books:
-                raise ValueError("floor1 subclass book out of range")
-            subbooks.append(bk)
-        class_cfg.append({
-            "dims": dims, "subs": subs, "masterbook": master,
-            "subclass_books": subbooks,
-        })
-    multiplier = br.read(2) + 1
-    rangebits = br.read(4)
-    x_sum = 0
-    x_list = [0, 1 << rangebits]
-    for p in range(partitions):
-        for _ in range(class_cfg[classes[p]]["dims"]):
-            x = br.read(rangebits)
-            x_sum += x
-            x_list.append(x)
-    return {
-        "type": 1, "partitions": partitions, "x_sum": x_sum,
-        "classes": classes, "class_cfg": class_cfg,
-        "multiplier": multiplier, "rangebits": rangebits,
-        "x_list": x_list,
-    }
-
-
-def _parse_residue(br: _VorbisBitReader, n_books: int) -> dict:
-    """One residue configuration (spec §8.6.1) -> {type, end,
-    cascade_sum}."""
-    rtype = br.read(16)
-    if rtype > 2:
-        raise ValueError(f"reserved residue type {rtype}")
-    begin = br.read(24)
-    end = br.read(24)
-    psize = br.read(24) + 1
-    classifications = br.read(6) + 1
-    classbook = br.read(8)
-    if classbook >= n_books:
-        raise ValueError("residue classbook out of range")
-    cascade_sum = 0
-    cascades = []
-    for _ in range(classifications):
-        low = br.read(3)
-        high = br.read(5) if br.read(1) else 0
-        cascades.append(high * 8 + low)
-        cascade_sum += high * 8 + low
-    books: list = []
-    for c in cascades:
-        row = []
-        for pas in range(8):
-            if c & (1 << pas):
-                bk = br.read(8)
-                if bk >= n_books:
-                    raise ValueError("residue book out of range")
-                row.append(bk)
-            else:
-                row.append(None)
-        books.append(row)
-    return {
-        "type": rtype, "end": end, "cascade_sum": cascade_sum,
-        "begin": begin, "partition_size": psize,
-        "classifications": classifications, "classbook": classbook,
-        "cascades": cascades, "books": books,
-    }
-
-
-def _parse_mapping(br: _VorbisBitReader, channels: int,
-                   n_floors: int, n_residues: int) -> dict:
-    """One mapping configuration (spec §4.2.4 step 5)."""
-    if br.read(16) != 0:
-        raise ValueError("reserved mapping type")
-    submaps = (br.read(4) + 1) if br.read(1) else 1
-    coupling_steps = 0
-    coupling = []
-    if br.read(1):
-        coupling_steps = br.read(8) + 1
-        bits = _vorbis_ilog(channels - 1)
-        for _ in range(coupling_steps):
-            m = br.read(bits)
-            a = br.read(bits)
-            if m == a or m >= channels or a >= channels:
-                raise ValueError("bad coupling channel pair")
-            coupling.append((m, a))
-    if br.read(2) != 0:
-        raise ValueError("nonzero mapping reserved field")
-    mux = [0] * channels
-    if submaps > 1:
-        mux = [br.read(4) for _ in range(channels)]
-    submap_cfg = []
-    for _ in range(submaps):
-        br.read(8)  # unused time config
-        fl = br.read(8)
-        if fl >= n_floors:
-            raise ValueError("mapping floor out of range")
-        rs = br.read(8)
-        if rs >= n_residues:
-            raise ValueError("mapping residue out of range")
-        submap_cfg.append({"floor": fl, "residue": rs})
-    return {
-        "submaps": submaps, "coupling_steps": coupling_steps,
-        "coupling": coupling, "mux": mux, "submap_cfg": submap_cfg,
-    }
-
-
-def vorbis_parse_setup(payload: bytes) -> dict:
-    """Full Vorbis header parse over a whole Ogg stream, returning
-    DECODE-READY configuration: packet assembly (CRC-checked page
-    walk), the type-1 identification header (channels / rate /
-    blocksizes), comment framing, and the type-5 setup header per
-    §4.2.4 — codebooks with codeword lengths and lookup tables,
-    floor0/floor1 configs, residues, mappings, modes, framing bit.
-    The round-11 synthesis machinery (operators/vorbis.py) consumes
-    this; vorbis_setup_census is the gate-facing census over it.
-    Also returns `audio_packets` — every packet after the three
-    headers — for the packet decoder."""
-    import struct
-
-    packets = _ogg_packets(bytes(payload))
-    if len(packets) < 3:
-        raise ValueError("missing Vorbis header packets")
-    ident, comment, setup = packets[0], packets[1], packets[2]
-    if ident[:7] != b"\x01vorbis" or len(ident) < 30:
-        raise ValueError("missing Vorbis identification header")
-    channels = ident[11]
-    rate = struct.unpack_from("<I", ident, 12)[0]
-    bs = ident[28]
-    blocksize0, blocksize1 = 1 << (bs & 0xF), 1 << (bs >> 4)
-    if comment[:7] != b"\x03vorbis":
-        raise ValueError("missing Vorbis comment header")
-    if setup[:7] != b"\x05vorbis":
-        raise ValueError("missing Vorbis setup header")
-    br = _VorbisBitReader(setup[7:])
-    n_books = br.read(8) + 1
-    books = [_parse_codebook(br) for _ in range(n_books)]
-    for _ in range(br.read(6) + 1):  # time-domain transforms
-        if br.read(16) != 0:
-            raise ValueError("reserved time-domain transform")
-    floors = [
-        _parse_floor(br, n_books) for _ in range(br.read(6) + 1)
-    ]
-    residues = [
-        _parse_residue(br, n_books) for _ in range(br.read(6) + 1)
-    ]
-    mappings = [
-        _parse_mapping(br, channels, len(floors), len(residues))
-        for _ in range(br.read(6) + 1)
-    ]
-    modes = []
-    for _ in range(br.read(6) + 1):
-        blockflag = br.read(1)
-        if br.read(16) != 0:
-            raise ValueError("reserved mode window type")
-        if br.read(16) != 0:
-            raise ValueError("reserved mode transform type")
-        mapping = br.read(8)
-        if mapping >= len(mappings):
-            raise ValueError("mode mapping out of range")
-        modes.append({"blockflag": blockflag, "mapping": mapping})
-    if br.read(1) != 1:
-        raise ValueError("missing setup framing bit")
-    return {
-        "channels": channels, "rate": rate,
-        "blocksize0": blocksize0, "blocksize1": blocksize1,
-        "books": books, "floors": floors, "residues": residues,
-        "mappings": mappings, "modes": modes,
-        "audio_packets": packets[3:],
-    }
-
-
-def vorbis_setup_census(payload: bytes) -> list[float]:
-    """Vorbis header parse over a whole Ogg stream: packet assembly
-    (CRC-checked page walk), the type-1 identification header
-    (channels / sample rate), the type-3 comment header (framing
-    check), then the type-5 setup header parsed IN FULL per Vorbis I
-    §4.2.4 — codebooks (§3.2.1), time-domain transforms, floor0/
-    floor1 configurations, residues, mappings, modes, framing bit.
-    Returns [channels, rate, n_books, sum_entries, sum_dims,
-    sum_used_lengths, n_ordered, n_sparse, n_lookup, n_floors,
-    sum_floor1_x, n_residues, sum_res_cascade, n_modes].  PCM
-    synthesis (floor curve, residue decode, inverse MDCT) is the
-    documented remaining half — and its floor1_inverse_dB_table is
-    published DATA unverifiable in-container, the mp3-window
-    boundary."""
-    cfg = vorbis_parse_setup(payload)
-    books = cfg["books"]
-    floors = cfg["floors"]
-    residues = cfg["residues"]
-    channels, rate = cfg["channels"], cfg["rate"]
-    n_books, n_modes = len(books), len(cfg["modes"])
-    return [
-        float(channels),
-        float(rate),
-        float(n_books),
-        float(sum(bk["entries"] for bk in books)),
-        float(sum(bk["dims"] for bk in books)),
-        float(sum(bk["used_length_sum"] for bk in books)),
-        float(sum(1 for bk in books if bk["ordered"])),
-        float(sum(1 for bk in books if bk["sparse"])),
-        float(sum(1 for bk in books if bk["lookup_type"])),
-        float(len(floors)),
-        float(sum(f["x_sum"] for f in floors)),
-        float(len(residues)),
-        float(sum(r["cascade_sum"] for r in residues)),
-        float(n_modes),
-    ]
-
-
 def synth_vorbis(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -5658,7 +5043,7 @@ def synth_vorbis(
             out += [255] * (len(p) // 255) + [len(p) % 255]
         return out
 
-    def book_bits(bw: _VorbisBitWriter, hb: bytes, corrupt: bool):
+    def book_bits(bw: LsbWriter, hb: bytes, corrupt: bool):
         shape = hb[0] % 3
         bw.write(0x564343 if corrupt else 0x564342, 24)
         if shape == 0:
@@ -5732,7 +5117,7 @@ def synth_vorbis(
                     b"\x03vorbis" + struct.pack("<I", 0)
                     + struct.pack("<I", 0) + b"\x01"
                 )
-                bw = _VorbisBitWriter()
+                bw = LsbWriter()
                 bw.write(n_books - 1, 8)
                 for j in range(n_books):
                     hb = hashlib.md5(f"{i}_v_b{j}".encode()).digest()
@@ -5878,7 +5263,7 @@ def synth_vorbis_pcm(
         return head[:22] + struct.pack("<I", crc) + head[26:] + body
 
     def setup_bits() -> bytes:
-        bw = _VorbisBitWriter()
+        bw = LsbWriter()
         bw.write(1, 8)                       # two books
         # book 0: 1-dim 2-entry classbook, lengths 1/1
         bw.write(0x564342, 24)
@@ -5954,7 +5339,7 @@ def synth_vorbis_pcm(
                     hp = hashlib.md5(f"{i}_vp_{t}".encode()).digest()
                     y, p = hp[0], hp[1] % 4
                     wa, wb = hp[2] % 4, hp[3] % 4
-                    pb = _VorbisBitWriter()
+                    pb = LsbWriter()
                     pb.write(0, 1)
                     pb.write(1, 1)
                     pb.write(y, 8)

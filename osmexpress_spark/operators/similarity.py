@@ -1940,7 +1940,8 @@ def embedding_gram(
     # addition (associative — bit-exact); batches are chunked so no
     # int64 partial can overflow, and the final sum stays
     # DECIMAL(38,0).  Rows must carry non-null dim-length vectors (the
-    # operator's contract; every gate fixture does).
+    # operator's contract; every gate fixture does): rows that are null
+    # or of another length are dropped, a null element raises.
     q = df.select(_micros(F.col(vec_col)).alias("q")).where(
         F.col("q").isNotNull() & (F.size("q") == dim)
     )
@@ -1953,8 +1954,14 @@ def embedding_gram(
         i_arr = pa.array(iu[0].astype("int32"))
         j_arr = pa.array(iu[1].astype("int32"))
         for batch in batches:
-            col = batch.column(0)
-            flat = np.asarray(col.flatten(), dtype=np.int64)
+            values = batch.column(0).flatten()
+            if values.null_count:
+                # numpy would turn each null into INT64_MIN
+                raise ValueError(
+                    "embedding_gram needs every row to be a non-null, "
+                    f"{dim}-length vector of non-null elements"
+                )
+            flat = np.asarray(values, dtype=np.int64)
             m = flat.reshape(-1, dim)
             if not m.shape[0]:
                 continue

@@ -1,5 +1,6 @@
-"""Vorbis I decode machinery — the synthesis-side pieces between the
-setup-header parse (multimodal.vorbis_setup_census, round 11) and PCM.
+"""Vorbis I decode: Ogg packet assembly, the setup-header parse
+(vorbis_parse_setup / vorbis_setup_census) and the synthesis from
+there to PCM.
 
 Spec: the public Vorbis I specification (xiph.org).  Everything here
 is CLOSED-FORM math or exact integer algorithms from the spec and is
@@ -11,7 +12,7 @@ discipline):
   with Kraft-completeness + prefix-freeness validation — codebooks
   that are over- or underspecified are rejected exactly as libvorbis
   rejects them (single-entry books excepted, per spec);
-* bit-at-a-time Huffman decode over the LSB-first packet stream;
+* Huffman decode over the LSB-first packet stream (bitio.PrefixCode);
 * the spec's integer Bresenham `render_line` (§9.2.6) — floor curves
   are EXACT integer math, pinned against a Fraction-based model;
 * floor1 curve synthesis (§7.2.4) over a two-point (partitions=0)
@@ -36,7 +37,406 @@ from __future__ import annotations
 
 import math
 
+from .bitio import LsbReader, PrefixCode
 from .mp3l3 import _imdct
+
+
+# ------------------------------------------------------------ setup parse
+# Ogg packet assembly and the Vorbis header parse (round 11): container
+# page walk -> identification/comment/setup headers -> codebooks, floors,
+# residues, mappings and modes, the configuration the decode below
+# consumes.  Vorbis packs bits LSB-first (Vorbis I spec §2, the opposite
+# of mp3); codebook framing per spec §3.2.1: 24-bit sync 0x564342,
+# 16-bit dimensions, 24-bit entries, ordered/sparse codeword-length
+# lists, 4-bit lookup type with lookup1_values multiplicand counting.
+
+_OGG_BITREV = None  # uint8[256] per-byte bit-reversal table (lazy)
+
+
+def _ogg_crc(data: bytes) -> int:
+    """Ogg page CRC: poly 0x04C11DB7, MSB-first, zero init, no
+    reflection, no xorout.  Computed at C speed through zlib's crc32
+    via the CRC reflection identity — the MSB-first CRC of a message
+    equals the bit-reversed LSB-first CRC (reversed polynomial:
+    0xEDB88320, exactly zlib's) of the per-byte bit-reversed message.
+    zlib's mandatory pre/post complement cancels by seeding with
+    0xFFFFFFFF (internal state 0) and complementing the result.  The
+    per-byte reversal is one numpy table gather, so the whole walk is
+    two vectorized passes instead of the round-10 Python byte loop
+    (SCALING.md's 3.65x/decade line for q_ogg_census)."""
+    import zlib
+
+    import numpy as np
+
+    global _OGG_BITREV
+    if _OGG_BITREV is None:
+        _OGG_BITREV = np.array(
+            [int(f"{i:08b}"[::-1], 2) for i in range(256)], dtype=np.uint8
+        )
+    rev = _OGG_BITREV[np.frombuffer(data, dtype=np.uint8)].tobytes()
+    r = (zlib.crc32(rev, 0xFFFFFFFF) ^ 0xFFFFFFFF) & 0xFFFFFFFF
+    return int(f"{r:032b}"[::-1], 2)
+
+
+
+def _vorbis_ilog(x: int) -> int:
+    """ilog per Vorbis I spec §9.2.1: bit count of x (0 for x <= 0)."""
+    n = 0
+    while x > 0:
+        n += 1
+        x >>= 1
+    return n
+
+
+def _lookup1_values(entries: int, dim: int) -> int:
+    """Greatest integer r with r**dim <= entries (spec §9.2.3)."""
+    r = 1
+    while (r + 1) ** dim <= entries:
+        r += 1
+    return r
+
+
+def _ogg_packets(b: bytes) -> list[bytes]:
+    """Ogg packet extraction: the r10 page walk (capture pattern,
+    version, recomputed CRC) plus lacing-based packet assembly with
+    cross-page continuation.  ValueError on structural damage."""
+    import struct
+
+    pos, n = 0, len(b)
+    packets: list[bytes] = []
+    partial = bytearray()
+    while pos < n:
+        if b[pos:pos + 4] != b"OggS" or pos + 27 > n:
+            raise ValueError("bad Ogg capture pattern")
+        if b[pos + 4] != 0:
+            raise ValueError("unknown Ogg version")
+        _granule, _serial, _seq, crc, nsegs = struct.unpack_from(
+            "<qIIIB", b, pos + 6
+        )
+        if pos + 27 + nsegs > n:
+            raise ValueError("truncated Ogg segment table")
+        lacing = b[pos + 27:pos + 27 + nsegs]
+        body_len = sum(lacing)
+        page_end = pos + 27 + nsegs + body_len
+        if page_end > n:
+            raise ValueError("truncated Ogg page body")
+        page = bytearray(b[pos:page_end])
+        page[22:26] = b"\x00\x00\x00\x00"
+        if _ogg_crc(bytes(page)) != crc:
+            raise ValueError("Ogg page CRC mismatch")
+        off = pos + 27 + nsegs
+        for v in lacing:
+            partial += b[off:off + v]
+            off += v
+            if v < 255:
+                packets.append(bytes(partial))
+                partial = bytearray()
+        pos = page_end
+    if partial:
+        raise ValueError("unterminated Ogg packet")
+    return packets
+
+
+def _parse_codebook(br: LsbReader) -> dict:
+    """One codebook definition (spec §3.2.1) -> {dims, entries,
+    ordered, sparse, used_length_sum, lookup_type} plus the
+    decode-ready fields the round-11 Vorbis synthesis machinery
+    consumes: `lengths` (used entry -> codeword length) and `lookup`
+    (raw min/delta words, value_bits, sequence_p, multiplicands)."""
+    if br.read(24) != 0x564342:
+        raise ValueError("bad Vorbis codebook sync")
+    dims = br.read(16)
+    entries = br.read(24)
+    ordered = br.read(1)
+    used_sum = 0
+    sparse = 0
+    lengths: dict = {}
+    if not ordered:
+        sparse = br.read(1)
+        for e in range(entries):
+            if sparse:
+                if br.read(1):
+                    lengths[e] = br.read(5) + 1
+                    used_sum += lengths[e]
+            else:
+                lengths[e] = br.read(5) + 1
+                used_sum += lengths[e]
+    else:
+        curlen = br.read(5) + 1
+        cur = 0
+        while cur < entries:
+            number = br.read(_vorbis_ilog(entries - cur))
+            if number > entries - cur:
+                raise ValueError("overspecified ordered codebook run")
+            for e in range(cur, cur + number):
+                lengths[e] = curlen
+            used_sum += curlen * number
+            cur += number
+            curlen += 1
+    lookup = br.read(4)
+    if lookup not in (0, 1, 2):
+        raise ValueError(f"reserved codebook lookup type {lookup}")
+    lookup_cfg = None
+    if lookup:
+        min_raw = br.read(32)
+        delta_raw = br.read(32)
+        value_bits = br.read(4) + 1
+        sequence_p = br.read(1)
+        count = (
+            _lookup1_values(entries, dims) if lookup == 1
+            else entries * dims
+        )
+        lookup_cfg = {
+            "type": lookup, "min_raw": min_raw,
+            "delta_raw": delta_raw, "value_bits": value_bits,
+            "sequence_p": sequence_p,
+            "multiplicands": [br.read(value_bits)
+                              for _ in range(count)],
+        }
+    return {
+        "dims": dims, "entries": entries, "ordered": ordered,
+        "sparse": sparse, "used_length_sum": used_sum,
+        "lookup_type": lookup, "lengths": lengths,
+        "lookup": lookup_cfg,
+    }
+
+
+def _parse_floor(br: LsbReader, n_books: int) -> dict:
+    """One floor configuration (spec §6.2, §7.2.2) -> {type,
+    partitions, x_sum} (floor0: partitions = number_of_books,
+    x_sum = 0)."""
+    ftype = br.read(16)
+    if ftype == 0:
+        br.read(8)   # order
+        br.read(16)  # rate
+        br.read(16)  # bark_map_size
+        br.read(6)   # amplitude_bits
+        br.read(8)   # amplitude_offset
+        nb = br.read(4) + 1
+        for _ in range(nb):
+            if br.read(8) >= n_books:
+                raise ValueError("floor0 book out of range")
+        return {"type": 0, "partitions": nb, "x_sum": 0}
+    if ftype != 1:
+        raise ValueError(f"reserved floor type {ftype}")
+    partitions = br.read(5)
+    classes = [br.read(4) for _ in range(partitions)]
+    n_classes = (max(classes) + 1) if classes else 0
+    class_cfg = []
+    for _ in range(n_classes):
+        dims = br.read(3) + 1
+        subs = br.read(2)
+        master = None
+        if subs:
+            master = br.read(8)
+            if master >= n_books:
+                raise ValueError("floor1 masterbook out of range")
+        subbooks = []
+        for _ in range(1 << subs):
+            bk = br.read(8) - 1
+            if bk >= n_books:
+                raise ValueError("floor1 subclass book out of range")
+            subbooks.append(bk)
+        class_cfg.append({
+            "dims": dims, "subs": subs, "masterbook": master,
+            "subclass_books": subbooks,
+        })
+    multiplier = br.read(2) + 1
+    rangebits = br.read(4)
+    x_sum = 0
+    x_list = [0, 1 << rangebits]
+    for p in range(partitions):
+        for _ in range(class_cfg[classes[p]]["dims"]):
+            x = br.read(rangebits)
+            x_sum += x
+            x_list.append(x)
+    return {
+        "type": 1, "partitions": partitions, "x_sum": x_sum,
+        "classes": classes, "class_cfg": class_cfg,
+        "multiplier": multiplier, "rangebits": rangebits,
+        "x_list": x_list,
+    }
+
+
+def _parse_residue(br: LsbReader, n_books: int) -> dict:
+    """One residue configuration (spec §8.6.1) -> {type, end,
+    cascade_sum}."""
+    rtype = br.read(16)
+    if rtype > 2:
+        raise ValueError(f"reserved residue type {rtype}")
+    begin = br.read(24)
+    end = br.read(24)
+    psize = br.read(24) + 1
+    classifications = br.read(6) + 1
+    classbook = br.read(8)
+    if classbook >= n_books:
+        raise ValueError("residue classbook out of range")
+    cascade_sum = 0
+    cascades = []
+    for _ in range(classifications):
+        low = br.read(3)
+        high = br.read(5) if br.read(1) else 0
+        cascades.append(high * 8 + low)
+        cascade_sum += high * 8 + low
+    books: list = []
+    for c in cascades:
+        row = []
+        for pas in range(8):
+            if c & (1 << pas):
+                bk = br.read(8)
+                if bk >= n_books:
+                    raise ValueError("residue book out of range")
+                row.append(bk)
+            else:
+                row.append(None)
+        books.append(row)
+    return {
+        "type": rtype, "end": end, "cascade_sum": cascade_sum,
+        "begin": begin, "partition_size": psize,
+        "classifications": classifications, "classbook": classbook,
+        "cascades": cascades, "books": books,
+    }
+
+
+def _parse_mapping(br: LsbReader, channels: int,
+                   n_floors: int, n_residues: int) -> dict:
+    """One mapping configuration (spec §4.2.4 step 5)."""
+    if br.read(16) != 0:
+        raise ValueError("reserved mapping type")
+    submaps = (br.read(4) + 1) if br.read(1) else 1
+    coupling_steps = 0
+    coupling = []
+    if br.read(1):
+        coupling_steps = br.read(8) + 1
+        bits = _vorbis_ilog(channels - 1)
+        for _ in range(coupling_steps):
+            m = br.read(bits)
+            a = br.read(bits)
+            if m == a or m >= channels or a >= channels:
+                raise ValueError("bad coupling channel pair")
+            coupling.append((m, a))
+    if br.read(2) != 0:
+        raise ValueError("nonzero mapping reserved field")
+    mux = [0] * channels
+    if submaps > 1:
+        mux = [br.read(4) for _ in range(channels)]
+    submap_cfg = []
+    for _ in range(submaps):
+        br.read(8)  # unused time config
+        fl = br.read(8)
+        if fl >= n_floors:
+            raise ValueError("mapping floor out of range")
+        rs = br.read(8)
+        if rs >= n_residues:
+            raise ValueError("mapping residue out of range")
+        submap_cfg.append({"floor": fl, "residue": rs})
+    return {
+        "submaps": submaps, "coupling_steps": coupling_steps,
+        "coupling": coupling, "mux": mux, "submap_cfg": submap_cfg,
+    }
+
+
+def vorbis_parse_setup(payload: bytes) -> dict:
+    """Full Vorbis header parse over a whole Ogg stream, returning
+    DECODE-READY configuration: packet assembly (CRC-checked page
+    walk), the type-1 identification header (channels / rate /
+    blocksizes), comment framing, and the type-5 setup header per
+    §4.2.4 — codebooks with codeword lengths and lookup tables,
+    floor0/floor1 configs, residues, mappings, modes, framing bit.
+    decode_audio below consumes this; vorbis_setup_census is the
+    gate-facing census over it.
+    Also returns `audio_packets` — every packet after the three
+    headers — for the packet decoder."""
+    import struct
+
+    packets = _ogg_packets(bytes(payload))
+    if len(packets) < 3:
+        raise ValueError("missing Vorbis header packets")
+    ident, comment, setup = packets[0], packets[1], packets[2]
+    if ident[:7] != b"\x01vorbis" or len(ident) < 30:
+        raise ValueError("missing Vorbis identification header")
+    channels = ident[11]
+    rate = struct.unpack_from("<I", ident, 12)[0]
+    bs = ident[28]
+    blocksize0, blocksize1 = 1 << (bs & 0xF), 1 << (bs >> 4)
+    if comment[:7] != b"\x03vorbis":
+        raise ValueError("missing Vorbis comment header")
+    if setup[:7] != b"\x05vorbis":
+        raise ValueError("missing Vorbis setup header")
+    br = LsbReader(setup[7:])
+    n_books = br.read(8) + 1
+    books = [_parse_codebook(br) for _ in range(n_books)]
+    for _ in range(br.read(6) + 1):  # time-domain transforms
+        if br.read(16) != 0:
+            raise ValueError("reserved time-domain transform")
+    floors = [
+        _parse_floor(br, n_books) for _ in range(br.read(6) + 1)
+    ]
+    residues = [
+        _parse_residue(br, n_books) for _ in range(br.read(6) + 1)
+    ]
+    mappings = [
+        _parse_mapping(br, channels, len(floors), len(residues))
+        for _ in range(br.read(6) + 1)
+    ]
+    modes = []
+    for _ in range(br.read(6) + 1):
+        blockflag = br.read(1)
+        if br.read(16) != 0:
+            raise ValueError("reserved mode window type")
+        if br.read(16) != 0:
+            raise ValueError("reserved mode transform type")
+        mapping = br.read(8)
+        if mapping >= len(mappings):
+            raise ValueError("mode mapping out of range")
+        modes.append({"blockflag": blockflag, "mapping": mapping})
+    if br.read(1) != 1:
+        raise ValueError("missing setup framing bit")
+    return {
+        "channels": channels, "rate": rate,
+        "blocksize0": blocksize0, "blocksize1": blocksize1,
+        "books": books, "floors": floors, "residues": residues,
+        "mappings": mappings, "modes": modes,
+        "audio_packets": packets[3:],
+    }
+
+
+def vorbis_setup_census(payload: bytes) -> list[float]:
+    """Vorbis header parse over a whole Ogg stream: packet assembly
+    (CRC-checked page walk), the type-1 identification header
+    (channels / sample rate), the type-3 comment header (framing
+    check), then the type-5 setup header parsed IN FULL per Vorbis I
+    §4.2.4 — codebooks (§3.2.1), time-domain transforms, floor0/
+    floor1 configurations, residues, mappings, modes, framing bit.
+    Returns [channels, rate, n_books, sum_entries, sum_dims,
+    sum_used_lengths, n_ordered, n_sparse, n_lookup, n_floors,
+    sum_floor1_x, n_residues, sum_res_cascade, n_modes].  PCM
+    synthesis (floor curve, residue decode, inverse MDCT) is the
+    documented remaining half — and its floor1_inverse_dB_table is
+    published DATA unverifiable in-container, the mp3-window
+    boundary."""
+    cfg = vorbis_parse_setup(payload)
+    books = cfg["books"]
+    floors = cfg["floors"]
+    residues = cfg["residues"]
+    channels, rate = cfg["channels"], cfg["rate"]
+    n_books, n_modes = len(books), len(cfg["modes"])
+    return [
+        float(channels),
+        float(rate),
+        float(n_books),
+        float(sum(bk["entries"] for bk in books)),
+        float(sum(bk["dims"] for bk in books)),
+        float(sum(bk["used_length_sum"] for bk in books)),
+        float(sum(1 for bk in books if bk["ordered"])),
+        float(sum(1 for bk in books if bk["sparse"])),
+        float(sum(1 for bk in books if bk["lookup_type"])),
+        float(len(floors)),
+        float(sum(f["x_sum"] for f in floors)),
+        float(len(residues)),
+        float(sum(r["cascade_sum"] for r in residues)),
+        float(n_modes),
+    ]
 
 
 # ------------------------------------------------------------ codewords
@@ -90,25 +490,13 @@ def assign_codewords(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
     return out
 
 
-class HuffDecoder:
-    """Bit-at-a-time canonical-codeword decoder over the LSB-first
-    packet reader (each read(1) is the next tree branch, root
-    first)."""
-
-    def __init__(self, lengths: dict[int, int]):
-        words = assign_codewords(lengths)
-        self.table = {cw: entry for entry, cw in words.items()}
-        self.max_len = max(ln for _, ln in words.values())
-
-    def decode(self, br) -> int:
-        acc, ln = 0, 0
-        while ln <= self.max_len:
-            acc = (acc << 1) | br.read(1)
-            ln += 1
-            entry = self.table.get((acc, ln))
-            if entry is not None:
-                return entry
-        raise ValueError("invalid Huffman codeword in packet")
+def codebook_code(lengths: dict[int, int]) -> PrefixCode:
+    """The prefix code that decodes a codebook's used entries from the
+    LSB-first packet stream."""
+    return PrefixCode(
+        {(ln, code): e for e, (code, ln) in assign_codewords(lengths).items()},
+        lsb=True,
+    )
 
 
 # ------------------------------------------------------------ floor1
@@ -261,8 +649,6 @@ def build_vq(book: dict) -> list[list[float]] | None:
     mults = cfg["multiplicands"]
     out = []
     if cfg["type"] == 1:
-        from .multimodal import _lookup1_values
-
         l1v = _lookup1_values(entries, dims)
         for e in range(entries):
             last = 0.0
@@ -325,14 +711,12 @@ def floor1_decode(br, fl: dict, decoders: list, n_half: int,
     """Floor1 packet decode (§7.2.3) + amplitude resolution (§7.2.4.1)
     + curve synthesis: returns the floor vector over n_half bins, or
     None when the channel is unaudible this block (nonzero bit 0).
-    `decoders` is the per-setup-book HuffDecoder list."""
+    `decoders` is the per-setup-book codebook_code list."""
     if fl["type"] != 1:
         raise NotImplementedError("floor0 decode not implemented")
     if not br.read(1):
         return None
     rng = FLOOR1_RANGES[fl["multiplier"] - 1]
-    from .multimodal import _vorbis_ilog
-
     ybits = _vorbis_ilog(rng - 1)
     y = [br.read(ybits), br.read(ybits)]
     for p in range(fl["partitions"]):
@@ -480,7 +864,7 @@ def _residue_core(br, res, decoders, vqs, books_cfg, actual_size,
 def decode_audio(payload: bytes,
                  inverse_db_table: list[float] | None = None):
     """The complete Vorbis decode chain over an Ogg stream: setup
-    parse (multimodal.vorbis_parse_setup), then per audio packet —
+    parse (vorbis_parse_setup), then per audio packet —
     mode select, per-channel floor1 decode, coupling-aware nonzero
     propagation, residue decode per submap, channel-coupling inverse
     (§4.3.5), floor-times-residue dot product, inverse MDCT, window +
@@ -494,8 +878,6 @@ def decode_audio(payload: bytes,
     the INJECTED 256-entry floor table (default: the analytic
     stand-in; the published table is the data drop).  Returns
     (sample_rate, [per-channel pcm])."""
-    from .multimodal import _vorbis_ilog, vorbis_parse_setup
-
     if inverse_db_table is None:
         inverse_db_table = analytic_db_table()
     cfg = vorbis_parse_setup(payload)
@@ -508,7 +890,7 @@ def decode_audio(payload: bytes,
     vqs = []
     for bk in cfg["books"]:
         try:
-            decoders.append(HuffDecoder(bk["lengths"]))
+            decoders.append(codebook_code(bk["lengths"]))
         except ValueError:
             decoders.append(None)  # unusable in scalar/VQ context
         vqs.append(build_vq(bk))
@@ -517,12 +899,10 @@ def decode_audio(payload: bytes,
     else:
         olas = [OverlapAdd(n) for _ in range(ch)]
     pcm: list[list[float]] = [[] for _ in range(ch)]
-    from .multimodal import _VorbisBitReader
-
     mode_bits = _vorbis_ilog(len(cfg["modes"]) - 1)
     win_cache: dict = {}
     for pkt in cfg["audio_packets"]:
-        br = _VorbisBitReader(pkt)
+        br = LsbReader(pkt)
         if br.read(1) != 0:
             raise ValueError("audio packet with header packet type")
         mode = cfg["modes"][br.read(mode_bits)]

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .operators import (
     dedup, multimodal, profile, retrieval, sample, similarity, skew, text,
+    vorbis,
 )
 from .queries import t
 from .registry import defq
@@ -7707,7 +7708,7 @@ def q_vorbis_setup(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     blobs = multimodal.synth_vorbis(d, "doc_id")
     feats = multimodal.extract_features(
-        blobs, decoder=multimodal.vorbis_setup_census, modality="audio"
+        blobs, decoder=vorbis.vorbis_setup_census, modality="audio"
     )
     return feats.select(
         F.col("item_id"),
@@ -7820,12 +7821,10 @@ def q_vorbis_pcm(spark, sf_dir):
     injected ANALYTIC stand-in; the published table is the remaining
     data drop.  Every 13th doc ships a torn setup page (the damage
     branch)."""
-    from .operators import vorbis as vorbis_mod
-
     d = t(spark, sf_dir, "documents")
     blobs = multimodal.synth_vorbis_pcm(d, "doc_id")
     feats = multimodal.extract_features(
-        blobs, decoder=vorbis_mod.vorbis_pcm_census, modality="audio"
+        blobs, decoder=vorbis.vorbis_pcm_census, modality="audio"
     )
     return feats.select(
         "item_id",

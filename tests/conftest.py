@@ -26,9 +26,11 @@ def assert_no_key_exchange(
     the legitimate node kinds — round-robin fan-out, broadcast builds,
     and (only where a site declares a scalar statistic aggregate
     legitimate) SinglePartition — and require that NO other Exchange
-    remains.  Both explain("formatted") and executedPlan().toString()
-    casings are handled."""
-    stripped = plan.replace("BroadcastExchange", "")
+    remains.  A ReusedExchange node is stripped too: the exchange it
+    reuses is printed in the same plan and checked there.  Both
+    explain("formatted") and executedPlan().toString() casings are
+    handled."""
+    stripped = plan.replace("BroadcastExchange", "").replace("ReusedExchange", "")
     for tok in (
         "Exchange roundrobinpartitioning",
         "Exchange RoundRobinPartitioning",

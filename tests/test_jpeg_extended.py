@@ -115,6 +115,20 @@ def test_failure_and_stub_shapes():
         _decode_jpeg(bytes(stream))
 
 
+def test_oversubscribed_huffman_table_is_damage():
+    # three 1-bit codes cannot exist; like libjpeg, the table is
+    # refused as damage (ValueError), not an IndexError mid-parse
+    stream = bytearray(encode_jpeg12(np.full((8, 8), 9.0)))
+    dht = stream.find(b"\xff\xc4")
+    counts = stream[dht + 5 : dht + 21]
+    last = max(i for i, c in enumerate(counts) if c)
+    assert counts[last] >= 2 and last > 0
+    stream[dht + 5] += 2
+    stream[dht + 5 + last] -= 2
+    with pytest.raises(ValueError, match="does not fit"):
+        _decode_jpeg(bytes(stream))
+
+
 # --- lossless sequential (SOF3, T.81 Annex H) --------------------------------
 from jpeg_ref import encode_jpeg_lossless
 

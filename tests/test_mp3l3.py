@@ -19,6 +19,7 @@ from fractions import Fraction
 import pytest
 
 from osmexpress_spark.operators import mp3l3 as M
+from osmexpress_spark.operators.bitio import MsbWriter
 
 
 # ------------------------------------------------------------- tables
@@ -176,7 +177,7 @@ def test_scfsi_reuses_granule0_scalefactors():
     # Hand-build one mono frame where scfsi group 0 (bands 0-5) is set:
     # granule 1 omits those scalefactor bits and must COPY granule 0's.
     sf0 = [3, 1, 2, 0, 3, 1, 2, 2, 1, 0, 3, 1, 0, 1, 1, 0, 1, 1, 0, 0, 1]
-    main = M._BitWriter()
+    main = MsbWriter()
     p23 = []
     for gr in range(2):
         start = main.bit_length()
@@ -186,7 +187,7 @@ def test_scfsi_reuses_granule0_scalefactors():
             main.write(sf0[band], 3 if band < 11 else 1)
         p23.append(main.bit_length() - start)
     main_bytes = main.getvalue()
-    side = M._BitWriter()
+    side = MsbWriter()
     side.write(0, 9)
     side.write(0, 5)
     side.write(1, 1)  # scfsi group 0 set
@@ -232,7 +233,7 @@ def test_bit_reservoir_crosses_frame_boundary():
         "region0_count": 0, "region1_count": 0, "count1table_select": 0,
     }
     # granule main bits for frame 2 (both granules identical)
-    main = M._BitWriter()
+    main = MsbWriter()
     p23 = []
     for gr in range(2):
         start = main.bit_length()
@@ -243,7 +244,7 @@ def test_bit_reservoir_crosses_frame_boundary():
     k = min(len(b), 3)  # bytes to park in frame 1's slack
     f1 = bytearray(M.write_frames([spec1]))
     f1[-k:] = b[:k]
-    side = M._BitWriter()
+    side = MsbWriter()
     side.write(k, 9)  # main_data_begin
     side.write(0, 5)
     for _ in range(4):
@@ -288,7 +289,7 @@ def test_short_block_scalefactors_hand_built():
     sfc = 11  # slen1=3, slen2=1
     sf_short = [[(b + w) % (8 if b < 6 else 2) for w in range(3)]
                 for b in range(12)]
-    main = M._BitWriter()
+    main = MsbWriter()
     p23 = []
     for gr in range(2):
         start = main.bit_length()
@@ -301,7 +302,7 @@ def test_short_block_scalefactors_hand_built():
         M._encode_value(main, M.BIG_VALUE_TABLES[7], 4, -3)
         p23.append(main.bit_length() - start)
     main_bytes = main.getvalue()
-    side = M._BitWriter()
+    side = MsbWriter()
     side.write(0, 9)
     side.write(0, 5)
     for _ in range(4):
@@ -448,7 +449,7 @@ def test_stereo_side_info_hand_built():
     # 2 granules x 2 channels); channels decode in ch-major order
     # inside each granule with independent spectra.
     ch_pairs = [[(1, -1)], [(-2, 2)]]  # ch0, ch1
-    main = M._BitWriter()
+    main = MsbWriter()
     p23 = [[0, 0], [0, 0]]
     for gr in range(2):
         for ch in range(2):
@@ -459,7 +460,7 @@ def test_stereo_side_info_hand_built():
                 M._encode_value(main, M.BIG_VALUE_TABLES[5], x, y)
             p23[gr][ch] = main.bit_length() - start
     main_bytes = main.getvalue()
-    side = M._BitWriter()
+    side = MsbWriter()
     side.write(0, 9)
     side.write(0, 3)  # private: 3 bits in stereo
     for _ch in range(2):

@@ -21,6 +21,33 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+_BCAST = ("BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, "
+          "false]),false), [plan_id=10]")
+_REUSED_BCAST_PLAN = f"""AdaptiveSparkPlan isFinalPlan=true
++- BroadcastHashJoin [k#1L], [k#7L], Inner, BuildRight, false
+   :- BroadcastHashJoin [k#1L], [k#4L], Inner, BuildRight, false
+   :  :- Scan parquet [k#1L]
+   :  +- {_BCAST}
+   :     +- Scan parquet [k#4L]
+   +- ReusedExchange [k#7L], {_BCAST}
+"""
+
+
+def test_key_exchange_gate_passes_reused_broadcast():
+    assert_no_key_exchange(_REUSED_BCAST_PLAN)
+
+
+@pytest.mark.parametrize("exchange", [
+    "Exchange hashpartitioning(k#7L, 8), ENSURE_REQUIREMENTS, [plan_id=12]",
+    "ReusedExchange [k#7L], Exchange hashpartitioning(k#7L, 8), "
+    "ENSURE_REQUIREMENTS, [plan_id=12]",
+])
+def test_key_exchange_gate_still_fails_hash_exchange(exchange):
+    plan = _REUSED_BCAST_PLAN + f"   +- {exchange}\n"
+    with pytest.raises(AssertionError):
+        assert_no_key_exchange(plan)
+
+
 def test_range_scan_pushes_or_of_ranges(spark):
     plan = _final_plan(registry.queries()["q_range_scan"](spark, SF_DIR))
     assert "PushedFilters: [" in plan

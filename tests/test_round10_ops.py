@@ -29,6 +29,7 @@ import pytest
 from osmexpress_spark.operators import compress as C
 from osmexpress_spark.operators import multimodal as M
 from osmexpress_spark.operators import text as X
+from osmexpress_spark.operators import vorbis as V
 from osmexpress_spark.sources import warc as W
 
 # ---------------------------------------------------------------- zstd
@@ -187,7 +188,7 @@ def _crc_bitwise(data: bytes) -> int:
     "data", [b"", b"vorbis", b"OggS" + bytes(range(200)), b"\xff" * 64]
 )
 def test_ogg_crc_table_matches_independent_bitwise(data):
-    assert M._ogg_crc(data) == _crc_bitwise(data)
+    assert V._ogg_crc(data) == _crc_bitwise(data)
 
 
 def _ogg_page(body: bytes, lacing: list[int], flags: int,
@@ -197,7 +198,7 @@ def _ogg_page(body: bytes, lacing: list[int], flags: int,
         + struct.pack("<qIII", granule, serial, seq, 0)
         + bytes([len(lacing)]) + bytes(lacing)
     )
-    crc = M._ogg_crc(head + body)
+    crc = V._ogg_crc(head + body)
     return head[:22] + struct.pack("<I", crc) + head[26:] + body
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from osmexpress_spark.operators import multimodal as M
 from osmexpress_spark.operators import text as T
+from osmexpress_spark.operators import vorbis as V
 
 
 # ------------------------------------------------------------------ PSL
@@ -230,18 +231,18 @@ def _crc_bitwise(data: bytes) -> int:
 def test_zlib_ogg_crc_matches_bitwise_definition(data):
     """The reflection-identity zlib implementation vs the bit-by-bit
     MSB-first definition, on arbitrary bytes."""
-    assert M._ogg_crc(data) == _crc_bitwise(data)
+    assert V._ogg_crc(data) == _crc_bitwise(data)
 
 
 def test_zlib_ogg_crc_known_vector():
     # independent pin: CRC of 'OggS' header bytes computed once with
     # the bitwise definition above
-    assert M._ogg_crc(b"") == 0
-    assert M._ogg_crc(b"\x00") == 0
-    assert M._ogg_crc(b"OggS") == _crc_bitwise(b"OggS")
+    assert V._ogg_crc(b"") == 0
+    assert V._ogg_crc(b"\x00") == 0
+    assert V._ogg_crc(b"OggS") == _crc_bitwise(b"OggS")
     # a flipped bit changes the CRC (the census damage contract)
-    a = M._ogg_crc(b"OggS\x00payload")
-    b = M._ogg_crc(b"OggS\x01payload")
+    a = V._ogg_crc(b"OggS\x00payload")
+    b = V._ogg_crc(b"OggS\x01payload")
     assert a != b
 
 
@@ -420,31 +421,8 @@ def test_mp3_pcm_gate_plan(spark):
 # ------------------------------------------- Vorbis setup codebook census
 
 
-def test_vorbis_bit_io_lsb_first_roundtrip():
-    from osmexpress_spark.operators.multimodal import (
-        _VorbisBitReader, _VorbisBitWriter,
-    )
-
-    bw = _VorbisBitWriter()
-    fields = [(0x564342, 24), (5, 16), (300, 24), (1, 1), (0, 1),
-              (19, 5), (0xDEADBEEF, 32), (7, 3)]
-    for v, n in fields:
-        bw.write(v, n)
-    br = _VorbisBitReader(bw.getvalue())
-    for v, n in fields:
-        assert br.read(v.bit_length() and n or n) == v
-    # LSB-first: writing value 1 in 8 bits puts the set bit FIRST
-    bw2 = _VorbisBitWriter()
-    bw2.write(1, 8)
-    assert bw2.getvalue() == b"\x01"
-    br2 = _VorbisBitReader(b"\x80")
-    assert br2.read(7) == 0 and br2.read(1) == 1
-
-
 def test_vorbis_ilog_and_lookup1_match_spec():
-    from osmexpress_spark.operators.multimodal import (
-        _lookup1_values, _vorbis_ilog,
-    )
+    from osmexpress_spark.operators.vorbis import _lookup1_values, _vorbis_ilog
 
     # the spec's own ilog examples (Vorbis I §9.2.1)
     assert [_vorbis_ilog(x) for x in (0, 1, 2, 3, 4, 7)] == \
@@ -459,12 +437,10 @@ def test_vorbis_ilog_and_lookup1_match_spec():
 
 
 def test_vorbis_census_refusals():
-    from osmexpress_spark.operators import multimodal as M
-
     with pytest.raises(ValueError):
-        M.vorbis_setup_census(b"")            # no pages
+        V.vorbis_setup_census(b"")            # no pages
     with pytest.raises(ValueError):
-        M.vorbis_setup_census(b"NotOggData")  # bad capture
+        V.vorbis_setup_census(b"NotOggData")  # bad capture
 
 
 def test_ogg_packets_cross_page_continuation():
@@ -472,25 +448,23 @@ def test_ogg_packets_cross_page_continuation():
     next page — the assembly must stitch it back together."""
     import struct
 
-    from osmexpress_spark.operators import multimodal as M
-
     def page(body, lacing, flags, seq):
         head = (
             b"OggS\x00" + bytes([flags])
             + struct.pack("<qIII", 0, 7, seq, 0)
             + bytes([len(lacing)]) + bytes(lacing)
         )
-        crc = M._ogg_crc(head + body)
+        crc = V._ogg_crc(head + body)
         return head[:22] + struct.pack("<I", crc) + head[26:] + body
 
     pkt = bytes(range(256)) * 2  # 512 bytes
     p1 = page(pkt[:510], [255, 255], 0x02, 0)
     p2 = page(pkt[510:] + b"xyz", [2, 3], 0x01, 1)
-    got = M._ogg_packets(p1 + p2)
+    got = V._ogg_packets(p1 + p2)
     assert got == [pkt, b"xyz"]
     # an unterminated trailing packet is structural damage
     with pytest.raises(ValueError):
-        M._ogg_packets(p1)
+        V._ogg_packets(p1)
 
 
 def test_vorbis_gate_plan(spark):
@@ -513,42 +487,41 @@ def test_vorbis_full_setup_section_errors():
     """Structural validation of the post-codebook sections: reserved
     floor/residue types, out-of-range book references, bad coupling
     pairs, missing framing bit — each its own ValueError."""
-    from osmexpress_spark.operators.multimodal import (
-        _VorbisBitReader, _VorbisBitWriter, _parse_floor,
-        _parse_mapping, _parse_residue,
+    from osmexpress_spark.operators.bitio import LsbReader, LsbWriter
+    from osmexpress_spark.operators.vorbis import (
+        _parse_floor, _parse_mapping, _parse_residue,
     )
 
     # reserved floor type
-    bw = _VorbisBitWriter(); bw.write(2, 16)
+    bw = LsbWriter(); bw.write(2, 16)
     with pytest.raises(ValueError):
-        _parse_floor(_VorbisBitReader(bw.getvalue()), 4)
+        _parse_floor(LsbReader(bw.getvalue()), 4)
     # floor0 book out of range
-    bw = _VorbisBitWriter()
+    bw = LsbWriter()
     bw.write(0, 16); bw.write(1, 8); bw.write(8000, 16)
     bw.write(64, 16); bw.write(6, 6); bw.write(0, 8)
     bw.write(0, 4); bw.write(9, 8)
     with pytest.raises(ValueError):
-        _parse_floor(_VorbisBitReader(bw.getvalue()), 4)
+        _parse_floor(LsbReader(bw.getvalue()), 4)
     # reserved residue type
-    bw = _VorbisBitWriter(); bw.write(3, 16)
+    bw = LsbWriter(); bw.write(3, 16)
     with pytest.raises(ValueError):
-        _parse_residue(_VorbisBitReader(bw.getvalue()), 4)
+        _parse_residue(LsbReader(bw.getvalue()), 4)
     # coupling magnitude == angle is invalid
-    bw = _VorbisBitWriter()
+    bw = LsbWriter()
     bw.write(0, 16); bw.write(0, 1); bw.write(1, 1)
     bw.write(0, 8); bw.write(1, 1); bw.write(1, 1)
     with pytest.raises(ValueError):
-        _parse_mapping(_VorbisBitReader(bw.getvalue()), 2, 1, 1)
+        _parse_mapping(LsbReader(bw.getvalue()), 2, 1, 1)
 
 
 def test_vorbis_floor1_x_sum_parse():
     """A hand-built floor1 config parses to the expected X-list sum
     (partitions x class dims values of rangebits each)."""
-    from osmexpress_spark.operators.multimodal import (
-        _VorbisBitReader, _VorbisBitWriter, _parse_floor,
-    )
+    from osmexpress_spark.operators.bitio import LsbReader, LsbWriter
+    from osmexpress_spark.operators.vorbis import _parse_floor
 
-    bw = _VorbisBitWriter()
+    bw = LsbWriter()
     bw.write(1, 16)      # floor type 1
     bw.write(2, 5)       # 2 partitions
     bw.write(0, 4); bw.write(0, 4)   # both class 0
@@ -559,7 +532,7 @@ def test_vorbis_floor1_x_sum_parse():
     bw.write(4, 4)       # rangebits
     for x in (3, 7, 1, 15, 0, 9):    # 2 partitions x 3 dims
         bw.write(x, 4)
-    got = _parse_floor(_VorbisBitReader(bw.getvalue()), 4)
+    got = _parse_floor(LsbReader(bw.getvalue()), 4)
     assert (got["type"], got["partitions"], got["x_sum"]) == (1, 2, 35)
     # the decode-ready fields round 11's synthesis machinery reads
     assert got["multiplier"] == 2 and got["rangebits"] == 4

@@ -816,6 +816,13 @@ def test_embedding_gram_matches_python_model(spark):
     assert len(got) == dim * (dim + 1) // 2
 
 
+def test_embedding_gram_rejects_null_element(spark):
+    rows = [(0, [0.5, -1.0, 2.0]), (1, [1.0, None, 0.25])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="non-null, 3-length vector"):
+        similarity.embedding_gram(df, 3).collect()
+
+
 @pytest.mark.slow
 def test_pca_project_variance_identity_and_determinism(spark):
     """The projected per-component variance must equal the covariance

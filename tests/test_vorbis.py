@@ -15,10 +15,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from osmexpress_spark.operators import vorbis as V
-from osmexpress_spark.operators.multimodal import (
-    _VorbisBitReader,
-    _VorbisBitWriter,
-)
+from osmexpress_spark.operators.bitio import LsbReader, LsbWriter
 
 
 # --------------------------------------------------------- codewords
@@ -85,23 +82,23 @@ def test_codeword_assignment_kraft_discipline():
 def test_huffman_decode_roundtrip_lsb_stream():
     lengths = {0: 1, 1: 2, 2: 3, 3: 3}
     words = V.assign_codewords(lengths)
-    dec = V.HuffDecoder(lengths)
+    dec = V.codebook_code(lengths)
     seq = [3, 0, 1, 2, 2, 0, 3, 1, 0, 0, 2]
-    bw = _VorbisBitWriter()
+    bw = LsbWriter()
     for entry in seq:
         code, ln = words[entry]
         for k in range(ln - 1, -1, -1):   # root-first bit order
             bw.write((code >> k) & 1, 1)
-    br = _VorbisBitReader(bw.getvalue())
+    br = LsbReader(bw.getvalue())
     assert [dec.decode(br) for _ in seq] == seq
 
 
 def test_huffman_decode_invalid_codeword():
-    dec = V.HuffDecoder({0: 2, 1: 2, 2: 2, 3: 2})
+    dec = V.codebook_code({0: 2, 1: 2, 2: 2, 3: 2})
     # exhaust max_len without a hit is impossible for a complete
     # 2-bit tree, so truncation is the failure mode instead
     with pytest.raises(ValueError):
-        dec.decode(_VorbisBitReader(b""))
+        dec.decode(LsbReader(b""))
 
 
 # -------------------------------------------------------- render_line
@@ -272,14 +269,12 @@ def _f32_pack(value: float) -> int:
 def _ogg_page(body, lacing, flags, serial, seq):
     import struct
 
-    from osmexpress_spark.operators import multimodal as M
-
     head = (
         b"OggS\x00" + bytes([flags])
         + struct.pack("<qIII", 0, serial, seq, 0)
         + bytes([len(lacing)]) + bytes(lacing)
     )
-    crc = M._ogg_crc(head + body)
+    crc = V._ogg_crc(head + body)
     return head[:22] + struct.pack("<I", crc) + head[26:] + body
 
 
@@ -322,8 +317,6 @@ def _build_stream(channels, audio_packet_bits, coupling=False):
     0..32, one mapping, one mode."""
     import struct
 
-    from osmexpress_spark.operators.multimodal import _VorbisBitWriter
-
     ident = (
         b"\x01vorbis" + struct.pack("<I", 0) + bytes([channels])
         + struct.pack("<I", 8000) + struct.pack("<iii", 0, 128000, 0)
@@ -331,7 +324,7 @@ def _build_stream(channels, audio_packet_bits, coupling=False):
     )
     comment = b"\x03vorbis" + struct.pack("<I", 0) \
         + struct.pack("<I", 0) + b"\x01"
-    bw = _VorbisBitWriter()
+    bw = LsbWriter()
     bw.write(2 - 1, 8)  # two codebooks
     _write_unordered_book(bw, 1, [1, 1])
     _write_unordered_book(
@@ -376,7 +369,7 @@ def _build_stream(channels, audio_packet_bits, coupling=False):
                      0x00, 9, 1)
     pkts = []
     for bits in audio_packet_bits:
-        pb = _VorbisBitWriter()
+        pb = LsbWriter()
         for v, nb in bits:
             pb.write(v, nb)
         pkts.append(pb.getvalue())
@@ -484,7 +477,6 @@ def test_decode_audio_stereo_coupling_type2():
     assert len(pcm) == 2 and len(pcm[0]) == 0  # 1 packet: latency only
 
     # direct model of the spectra instead (reach into the chain)
-    from osmexpress_spark.operators.multimodal import vorbis_parse_setup
     tab = V.analytic_db_table()
     inter = [0.0] * 64
     it = iter(vq_words)
@@ -756,8 +748,6 @@ def test_decode_audio_variable_blocksize_stream():
     the (already TDAC-pinned) transform/lapping primitives."""
     import struct
 
-    from osmexpress_spark.operators.multimodal import _VorbisBitWriter
-
     NS, NL = 8, 16
     ident = (
         b"\x01vorbis" + struct.pack("<I", 0) + bytes([1])
@@ -766,7 +756,7 @@ def test_decode_audio_variable_blocksize_stream():
     )
     comment = b"\x03vorbis" + struct.pack("<I", 0) \
         + struct.pack("<I", 0) + b"\x01"
-    bw = _VorbisBitWriter()
+    bw = LsbWriter()
     bw.write(1, 8)
     _write_unordered_book(bw, 1, [1, 1])
     _write_unordered_book(
@@ -814,7 +804,7 @@ def test_decode_audio_variable_blocksize_stream():
     ]
     pkts = []
     for (bf, pf, nf, y, classes, words) in sched:
-        pb = _VorbisBitWriter()
+        pb = LsbWriter()
         pb.write(0, 1)
         pb.write(bf, 1)                  # mode number (1 bit)
         if bf:

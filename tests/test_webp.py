@@ -14,6 +14,7 @@ import random
 import pytest
 
 from osmexpress_spark.operators import multimodal as M
+from osmexpress_spark.operators.bitio import LsbReader
 
 
 def _libwebp():
@@ -109,7 +110,7 @@ def test_vp8l_code_rejects_incomplete():
     with pytest.raises(ValueError, match="no symbols"):
         M._Vp8lCode([0, 0])
     single = M._Vp8lCode([0, 3, 0])
-    assert single.read(M._Vp8lBits(b"")) == 1  # zero-bit degenerate code
+    assert single.read(LsbReader(b"")) == 1  # zero-bit degenerate code
 
 
 def test_plane_table_shape():

@@ -32,8 +32,8 @@ def main() -> None:
     if not names:
         names = [n for n in bench.HEADLINE if n in live]
 
-    spark = get_spark(app_name="osmx-plans", cpus="32",
-                      shuffle_partitions=32)
+    spark = get_spark(app_name="osmx-plans", cpus=bench.CPUS,
+                      shuffle_partitions=int(bench.CPUS))
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
