@@ -37,7 +37,6 @@ import struct
 
 from pyspark.sql import DataFrame
 
-import pandas as pd  # noqa: F401  (pandas_udf type-hint resolution)
 
 ZSTD_MAGIC = 0xFD2FB528
 SKIPPABLE_LO = 0x184D2A50
@@ -265,39 +264,26 @@ def synth_zstd(
     every `corrupt_mod`-th doc is truncated by its last 4 bytes — the
     structural-damage branch (decode_ok=False).  The oracle recomputes
     every census column from the ORIGINAL text, so the gate proves the
-    compress -> walk -> decompress -> hash pipeline end to end.
-    Arrow mapInPandas, zero shuffle."""
-    from .multimodal import SYNTH_SCHEMA
+    compress -> walk -> decompress -> hash pipeline end to end."""
+    from .multimodal import synth_payloads
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(item_id)
-                hb = hashlib.md5(f"{i}_z_l".encode()).digest()
-                level = 1 + (hb[0] % 19)
-                out = b""
-                if skip_mod and i % skip_mod == 0:
-                    body = hashlib.md5(f"{i}_z_s".encode()).digest()[
-                        : hb[1] % 16 + 1
-                    ]
-                    out += struct.pack(
-                        "<II", SKIPPABLE_LO + i % 16, len(body)
-                    ) + body
-                out += zstd_compress(str(text).encode("utf-8"), level)
-                if corrupt_mod and i % corrupt_mod == 0:
-                    out = out[:-4]
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int, text) -> bytes:
+        hb = hashlib.md5(f"{i}_z_l".encode()).digest()
+        level = 1 + (hb[0] % 19)
+        out = b""
+        if skip_mod and i % skip_mod == 0:
+            body = hashlib.md5(f"{i}_z_s".encode()).digest()[
+                : hb[1] % 16 + 1
+            ]
+            out += struct.pack(
+                "<II", SKIPPABLE_LO + i % 16, len(body)
+            ) + body
+        out += zstd_compress(str(text).encode("utf-8"), level)
+        if corrupt_mod and i % corrupt_mod == 0:
+            out = out[:-4]
+        return out
 
-    return df.select(id_col, text_col).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(df.select(id_col, text_col), make)
 
 
 # ------------------------------------------------------------- brotli

@@ -35,7 +35,9 @@ from pyspark.sql import functions as F
 
 from .. import lineage
 from .bitio import LsbReader, LsbWriter, MsbReader, PrefixCode, reverse_bits
-from .vorbis import _lookup1_values, _ogg_crc, _vorbis_ilog
+from .vorbis import (
+    _lookup1_values, _vorbis_ilog, ogg_lacing, ogg_page, ogg_pages,
+)
 
 FEATURE_SCHEMA = (
     "item_id long, n_bytes long, modality string, "
@@ -3160,26 +3162,33 @@ def near_dup_by_bands(
 SYNTH_SCHEMA = "item_id long, payload binary"
 
 
-def _seam_fanout(ids_df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism for the synth seams' id input: when
-    the upstream scan yields fewer partitions than the session has task
-    slots, round-robin repartition the (id-only) frame to
-    defaultParallelism so the per-row synthesis + decode constants run
-    on every core instead of serially.
+def synth_payloads(
+    df: DataFrame, make: Callable[..., bytes]
+) -> DataFrame:
+    """The batch boundary every synth_* encoder plugs into: each row's
+    (id, *other columns) goes through make(id, *values) -> bytes and
+    comes out as SYNTH_SCHEMA rows.  Arrow-batched mapInPandas, zero
+    shuffle; ``df`` is mapped as given (id column first), so any
+    fan-out is the caller's.  The multimodal encoders pass
+    lineage.fan_out of their id (and text) columns: only those cross
+    the round-robin exchange, and payload bytes are made after it."""
+    id_col, *cols = df.columns
 
-    Why this is the right shape at BOTH ends of the scale: the bench
-    fixture is one small parquet row group -> ONE scan partition -> a
-    serial Python seam (guide §2: the partitioning must adapt to input
-    size, not be tuned for either end); at corpus scale the file
-    fan-out already exceeds defaultParallelism, the condition is false,
-    and the plan keeps its zero-Exchange scan shape.  Only the 8-byte
-    id column ever crosses the wire — payload bytes are synthesized
-    (and decoded) AFTER the exchange, so this never shuffles blobs."""
-    spark = ids_df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    if lineage.narrow_scan(ids_df, slots):
-        return ids_df.repartition(slots)
-    return ids_df
+    def run(batches):
+        for pdf in batches:
+            ids = [int(i) for i in pdf[id_col]]
+            payloads = [
+                make(i, *vals)
+                for i, *vals in zip(ids, *(pdf[c] for c in cols))
+            ]
+            yield pd.DataFrame(
+                {
+                    "item_id": pd.Series(ids, dtype="int64"),
+                    "payload": pd.Series(payloads, dtype=object),
+                }
+            )
+
+    return df.mapInPandas(run, SYNTH_SCHEMA)
 
 
 def _encode_bmp24(pix: list[list[tuple[int, int, int]]]) -> bytes:
@@ -3219,52 +3228,40 @@ def synth_bmp24(
     the default 97 that is exactly 3 pixels in 3 distinct 8x8-grid
     cells, so sibling pairs land within Hamming 3 of each other under
     the mid-threshold aHash while unrelated bases are ~32 apart.
-    Arrow-batched mapInPandas, zero shuffle; size must be <= 16 (one
-    md5 digest covers one row per channel)."""
+    Size must be <= 16 (one md5 digest covers one row per channel)."""
     import hashlib
 
     if not 0 < size <= 16:
         raise TypeError("size must be in 1..16 (one md5 digest per row)")
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                base = int(item_id) // 2
-                chans = {
-                    ch: [
-                        hashlib.md5(
-                            f"{base}_{r}_{ch}".encode()
-                        ).digest()[:size]
-                        for r in range(size)
-                    ]
-                    for ch in ("r", "g", "b")
-                }
-                odd = int(item_id) % 2 == 1
-                pix = [
-                    [
-                        (
-                            (chans["r"][r][c] + 128) % 256
-                            if odd and (r * size + c) % perturb_mod == 0
-                            else chans["r"][r][c],
-                            chans["g"][r][c],
-                            chans["b"][r][c],
-                        )
-                        for c in range(size)
-                    ]
-                    for r in range(size)
-                ]
-                payloads.append(_encode_bmp24(pix))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        base = i // 2
+        chans = {
+            ch: [
+                hashlib.md5(
+                    f"{base}_{r}_{ch}".encode()
+                ).digest()[:size]
+                for r in range(size)
+            ]
+            for ch in ("r", "g", "b")
+        }
+        odd = i % 2 == 1
+        pix = [
+            [
+                (
+                    (chans["r"][r][c] + 128) % 256
+                    if odd and (r * size + c) % perturb_mod == 0
+                    else chans["r"][r][c],
+                    chans["g"][r][c],
+                    chans["b"][r][c],
+                )
+                for c in range(size)
+            ]
+            for r in range(size)
+        ]
+        return _encode_bmp24(pix)
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def synth_wav8(
@@ -3279,7 +3276,7 @@ def synth_wav8(
     (base % (n_blocks - 2)) + 1 by +64 (mod 256) — one 16-sample block
     spans exactly two 8-sample energy frames, so at most 3 delta-sign
     bits differ between siblings and the 4-band pigeonhole bound
-    applies.  Arrow-batched mapInPandas, zero shuffle."""
+    applies."""
     import hashlib
     import io
     import wave
@@ -3287,37 +3284,26 @@ def synth_wav8(
     if n_blocks < 4:
         raise TypeError("n_blocks must be >= 4")
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                base = int(item_id) // 2
-                samples = bytearray()
-                for blk in range(n_blocks):
-                    samples += hashlib.md5(
-                        f"{base}_a_{blk}".encode()
-                    ).digest()
-                if int(item_id) % 2 == 1:
-                    blk = (base % (n_blocks - 2)) + 1
-                    for j in range(blk * 16, blk * 16 + 16):
-                        samples[j] = (samples[j] + 64) % 256
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(1)
-                    w.setframerate(rate)
-                    w.writeframes(bytes(samples))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        base = i // 2
+        samples = bytearray()
+        for blk in range(n_blocks):
+            samples += hashlib.md5(
+                f"{base}_a_{blk}".encode()
+            ).digest()
+        if i % 2 == 1:
+            blk = (base % (n_blocks - 2)) + 1
+            for j in range(blk * 16, blk * 16 + 16):
+                samples[j] = (samples[j] + 64) % 256
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(1)
+            w.setframerate(rate)
+            w.writeframes(bytes(samples))
+        return buf.getvalue()
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def save_band_store(
@@ -3671,10 +3657,10 @@ def flac_decoder(payload: bytes) -> list[float]:
             nch = bits.read(3) + 1
             bps = bits.read(5) + 1
             total = bits.read(36)
-            bits.pos += 128  # md5
+            bits.skip(128)  # md5
             info = (rate, nch, bps, total)
         else:
-            bits.pos += blen * 8
+            bits.skip(blen * 8)
     if info is None:
         raise ValueError("FLAC missing STREAMINFO")
     rate, nch, bps, total = info
@@ -3761,6 +3747,8 @@ def flac_decoder(payload: bytes) -> list[float]:
         nframes += blocksize
         if total and nframes >= total:
             break
+    if total and not nframes:
+        raise ValueError("FLAC stream declares samples but has no frame")
     n = nframes * nch
     full = float(1 << (bps - 1))
     return [
@@ -3868,8 +3856,7 @@ def synth_au_ulaw(
     where id % stub_mod == 0 carry an encoding-23 (G.721 ADPCM)
     container instead — a valid AU file whose codec the engine
     honestly does not decode, exercising au_decoder's unsupported-
-    encoding NotImplementedError branch.  Arrow mapInPandas, zero
-    shuffle."""
+    encoding NotImplementedError branch."""
     import hashlib
     import struct
 
@@ -3879,29 +3866,16 @@ def synth_au_ulaw(
     def header(enc: int, nbytes: int) -> bytes:
         return b".snd" + struct.pack(">IIIII", 24, nbytes, enc, rate, 1)
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(header(23, 64) + b"\x00" * 64)
-                    continue
-                codes = b"".join(
-                    hashlib.md5(f"{i}_au_{blk}".encode()).digest()
-                    for blk in range(n_blocks)
-                )
-                payloads.append(header(1, len(codes)) + codes)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return header(23, 64) + b"\x00" * 64
+        codes = b"".join(
+            hashlib.md5(f"{i}_au_{blk}".encode()).digest()
+            for blk in range(n_blocks)
+        )
+        return header(1, len(codes)) + codes
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def _flac_crc8(data: bytes) -> int:
@@ -3967,36 +3941,22 @@ def synth_flac8(
     md5-hex convention as synth_bmp24/synth_wav8, so a SQL oracle
     recomputes the decoded statistics without decoding.  Rows where
     id % stub_mod == 0 get an mp3-looking payload instead, exercising
-    the per-row decode_ok=False stub branch through the same gate.
-    Arrow-batched mapInPandas, zero shuffle."""
+    the per-row decode_ok=False stub branch through the same gate."""
     import hashlib
 
     if n_blocks < 1:
         raise TypeError("n_blocks must be >= 1")
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(b"ID3\x03 not decodable here")
-                    continue
-                samples = b"".join(
-                    hashlib.md5(f"{i}_f_{blk}".encode()).digest()
-                    for blk in range(n_blocks)
-                )
-                payloads.append(_encode_flac8_verbatim(samples))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return b"ID3\x03 not decodable here"
+        samples = b"".join(
+            hashlib.md5(f"{i}_f_{blk}".encode()).digest()
+            for blk in range(n_blocks)
+        )
+        return _encode_flac8_verbatim(samples)
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def _wav_container(
@@ -4042,43 +4002,25 @@ def synth_wav_g711(
     container whose codec the engine honestly does not decode,
     exercising wav_decoder's unsupported-tag NotImplementedError
     branch (distinct from flac's foreign-container stub and the IMA
-    gate's structural-damage branch).  Arrow mapInPandas, zero
-    shuffle."""
+    gate's structural-damage branch)."""
     import hashlib
 
     if n_blocks < 1:
         raise TypeError("n_blocks must be >= 1")
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(
-                        _wav_container(
-                            0x31, 1, rate, 65, 0, b"\x00" * 65, fact=320
-                        )
-                    )
-                    continue
-                codes = b"".join(
-                    hashlib.md5(f"{i}_g_{blk}".encode()).digest()
-                    for blk in range(n_blocks)
-                )
-                tag = 7 if i % 2 == 0 else 6
-                payloads.append(
-                    _wav_container(tag, 1, rate, 1, 8, codes, len(codes))
-                )
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return _wav_container(
+                0x31, 1, rate, 65, 0, b"\x00" * 65, fact=320
             )
+        codes = b"".join(
+            hashlib.md5(f"{i}_g_{blk}".encode()).digest()
+            for blk in range(n_blocks)
+        )
+        tag = 7 if i % 2 == 0 else 6
+        return _wav_container(tag, 1, rate, 1, 8, codes, len(codes))
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def synth_wav_ima(
@@ -4104,36 +4046,21 @@ def synth_wav_ima(
         raise TypeError("n_blocks must be >= 1")
     nbytes = n_blocks * 16
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                h = hashlib.md5(f"{i}_i_h".encode()).digest()
-                (pred,) = struct.unpack_from("<h", h, 0)
-                idx = 200 if corrupt_mod and i % corrupt_mod == 0 \
-                    else h[2] % 89
-                data = b"".join(
-                    hashlib.md5(f"{i}_i_{blk}".encode()).digest()
-                    for blk in range(n_blocks)
-                )
-                block = struct.pack("<hBB", pred, idx, 0) + data
-                payloads.append(
-                    _wav_container(
-                        0x11, 1, rate, 4 + nbytes, 4, block,
-                        fact=1 + 2 * nbytes,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        h = hashlib.md5(f"{i}_i_h".encode()).digest()
+        (pred,) = struct.unpack_from("<h", h, 0)
+        idx = 200 if corrupt_mod and i % corrupt_mod == 0 \
+            else h[2] % 89
+        data = b"".join(
+            hashlib.md5(f"{i}_i_{blk}".encode()).digest()
+            for blk in range(n_blocks)
+        )
+        block = struct.pack("<hBB", pred, idx, 0) + data
+        return _wav_container(
+            0x11, 1, rate, 4 + nbytes, 4, block, fact=1 + 2 * nbytes,
+        )
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def _encode_jpeg_lossless8(pixels: bytes, w: int, h: int) -> bytes:
@@ -4193,39 +4120,25 @@ def synth_jpeg_lossless(
     — md5-hex-recomputable, and SOF3 is LOSSLESS, so a SQL oracle
     recomputes the decoded mean exactly.  Rows where id % stub_mod ==
     0 carry an arithmetic-coded (SOF9) header instead: the honest
-    NotImplementedError stub through the same gate.  Arrow
-    mapInPandas, zero shuffle."""
+    NotImplementedError stub through the same gate."""
     import hashlib
 
     if not (1 <= size <= 16):
         raise TypeError("size must be in 1..16")
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(
-                        b"\xff\xd8\xff\xc9\x00\x0b\x08\x00\x10\x00\x10"
-                        b"\x01\x01\x11\x00"
-                    )
-                    continue
-                px = b"".join(
-                    hashlib.md5(f"{i}_j_{y}".encode()).digest()[:size]
-                    for y in range(size)
-                )
-                payloads.append(_encode_jpeg_lossless8(px, size, size))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return (
+                b"\xff\xd8\xff\xc9\x00\x0b\x08\x00\x10\x00\x10"
+                b"\x01\x01\x11\x00"
             )
+        px = b"".join(
+            hashlib.md5(f"{i}_j_{y}".encode()).digest()[:size]
+            for y in range(size)
+        )
+        return _encode_jpeg_lossless8(px, size, size)
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def dhash_bands(
@@ -4379,8 +4292,7 @@ def synth_webp_lossless(
     md5-hex-recomputable, and VP8L is LOSSLESS, so a SQL oracle
     recomputes the decoded mean exactly.  Rows where id % stub_mod ==
     0 carry a LOSSY (VP8 key frame) container instead: the honest
-    NotImplementedError stub through the same gate.  Arrow
-    mapInPandas, zero shuffle."""
+    NotImplementedError stub through the same gate."""
     import hashlib
 
     if not (1 <= size <= 16):
@@ -4391,29 +4303,16 @@ def synth_webp_lossless(
         + b"VP8 " + (4).to_bytes(4, "little") + b"\x00\x00\x00\x00"
     )
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(lossy)
-                    continue
-                px = b"".join(
-                    hashlib.md5(f"{i}_w_{y}".encode()).digest()[:size]
-                    for y in range(size)
-                )
-                payloads.append(_encode_webp_gray(px, size, size))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return lossy
+        px = b"".join(
+            hashlib.md5(f"{i}_w_{y}".encode()).digest()[:size]
+            for y in range(size)
+        )
+        return _encode_webp_gray(px, size, size)
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 # --- mp3 (MPEG-1 Layer III) frame-level census -------------------------------
@@ -4535,8 +4434,7 @@ def synth_mp3_frames(
     md5(f"{id}_m_t") % 128 (the skip path).  Rows where
     id % stub_mod == 0 carry a FREE-FORMAT first frame (bitrate index
     0): a valid container the census honestly refuses —
-    extract_features' NotImplementedError branch.  Arrow mapInPandas,
-    zero shuffle."""
+    extract_features' NotImplementedError branch."""
     import hashlib
     import struct
 
@@ -4550,38 +4448,25 @@ def synth_mp3_frames(
         )
         return struct.pack(">I", hdr)
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(header(0, 0) + b"\x00" * 100)
-                    continue
-                hb = hashlib.md5(f"{i}_m_h".encode()).digest()
-                pb = hashlib.md5(f"{i}_m_p".encode()).digest()
-                out = b""
-                if i % 3 == 0:
-                    tag = hashlib.md5(f"{i}_m_t".encode()).digest()[0] % 128
-                    out += b"ID3\x04\x00\x00" + bytes(
-                        [0, 0, 0, tag]
-                    ) + b"\x00" * tag
-                for k in range(n_frames):
-                    br_idx = 1 + (hb[k] % 14)
-                    pad = pb[k] & 1
-                    flen = (144000 * _MP3_BITRATE_KBPS[br_idx]) // 44100 + pad
-                    out += header(br_idx, pad) + b"\x00" * (flen - 4)
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return header(0, 0) + b"\x00" * 100
+        hb = hashlib.md5(f"{i}_m_h".encode()).digest()
+        pb = hashlib.md5(f"{i}_m_p".encode()).digest()
+        out = b""
+        if i % 3 == 0:
+            tag = hashlib.md5(f"{i}_m_t".encode()).digest()[0] % 128
+            out += b"ID3\x04\x00\x00" + bytes(
+                [0, 0, 0, tag]
+            ) + b"\x00" * tag
+        for k in range(n_frames):
+            br_idx = 1 + (hb[k] % 14)
+            pad = pb[k] & 1
+            flen = (144000 * _MP3_BITRATE_KBPS[br_idx]) // 44100 + pad
+            out += header(br_idx, pad) + b"\x00" * (flen - 4)
+        return out
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def synth_mp3_l3(
@@ -4598,8 +4483,7 @@ def synth_mp3_l3(
     recomputable in closed form from md5(id || suffix || granule) hex
     bytes.  Rows where id % stub_mod == 0 carry a free-format header:
     a valid container the decoder honestly refuses
-    (extract_features' NotImplementedError branch).  Arrow mapInPandas,
-    zero shuffle."""
+    (extract_features' NotImplementedError branch)."""
     import hashlib
 
     from . import mp3l3
@@ -4638,38 +4522,25 @@ def synth_mp3_l3(
             "count1table_select": hg[3] & 1,
         }
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    # free-format header: decode honestly refused
-                    payloads.append(b"\xff\xfb\x00\xc0" + b"\x00" * 100)
-                    continue
-                specs = [
-                    {
-                        "bitrate_kbps": 128,
-                        "sample_rate": 44100,
-                        "padding": 0,
-                        "granules": [
-                            [granule_spec(i, f * 2 + 0)],
-                            [granule_spec(i, f * 2 + 1)],
-                        ],
-                    }
-                    for f in range(2)
-                ]
-                payloads.append(mp3l3.write_frames(specs))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            # free-format header: decode honestly refused
+            return b"\xff\xfb\x00\xc0" + b"\x00" * 100
+        specs = [
+            {
+                "bitrate_kbps": 128,
+                "sample_rate": 44100,
+                "padding": 0,
+                "granules": [
+                    [granule_spec(i, f * 2 + 0)],
+                    [granule_spec(i, f * 2 + 1)],
+                ],
+            }
+            for f in range(2)
+        ]
+        return mp3l3.write_frames(specs)
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def synth_mp3_pcm(
@@ -4692,7 +4563,7 @@ def synth_mp3_pcm(
     echo), bit-identical between the Python chain and the DuckDB
     oracle because every operation order matches.  Rows where
     id % stub_mod == 0 carry a free-format header the decoder
-    honestly refuses.  Arrow mapInPandas, zero shuffle."""
+    honestly refuses."""
     import hashlib
 
     from . import mp3l3
@@ -4719,37 +4590,24 @@ def synth_mp3_pcm(
             "count1table_select": 0,
         }
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                if stub_mod and i % stub_mod == 0:
-                    payloads.append(b"\xff\xfb\x00\xc0" + b"\x00" * 100)
-                    continue
-                specs = [
-                    {
-                        "bitrate_kbps": 128,
-                        "sample_rate": 44100,
-                        "padding": 0,
-                        "granules": [
-                            [granule_spec(i, f * 2 + 0)],
-                            [granule_spec(i, f * 2 + 1)],
-                        ],
-                    }
-                    for f in range(2)
-                ]
-                payloads.append(mp3l3.write_frames(specs))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        if stub_mod and i % stub_mod == 0:
+            return b"\xff\xfb\x00\xc0" + b"\x00" * 100
+        specs = [
+            {
+                "bitrate_kbps": 128,
+                "sample_rate": 44100,
+                "padding": 0,
+                "granules": [
+                    [granule_spec(i, f * 2 + 0)],
+                    [granule_spec(i, f * 2 + 1)],
+                ],
+            }
+            for f in range(2)
+        ]
+        return mp3l3.write_frames(specs)
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 # --------------------------------------------------------------------------
@@ -4813,47 +4671,32 @@ def synth_encoded(
     with BOM / utf-16 BE with BOM / latin-1 with the non-ascii
     ' café' suffix (forcing the fallback branch).  Every
     `corrupt_mod`-th doc ships a utf-16 BOM with the final byte cut
-    (odd-length utf-16 — the ValueError branch).  Arrow mapInPandas,
-    zero shuffle."""
+    (odd-length utf-16 — the ValueError branch)."""
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(item_id)
-                s = str(text)
-                if corrupt_mod and i % corrupt_mod == 0:
-                    payloads.append(
-                        b"\xff\xfe" + s.encode("utf-16-le")[:-1]
-                    )
-                    continue
-                branch = i % 5
-                if branch == 0:
-                    out = s.encode("utf-8")
-                elif branch == 1:
-                    out = b"\xef\xbb\xbf" + s.encode("utf-8")
-                elif branch == 2:
-                    out = b"\xff\xfe" + s.encode("utf-16-le")
-                elif branch == 3:
-                    out = b"\xfe\xff" + s.encode("utf-16-be")
-                else:
-                    out = (s + _LATIN1_SUFFIX).encode("latin-1")
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int, text) -> bytes:
+        s = str(text)
+        if corrupt_mod and i % corrupt_mod == 0:
+            return b"\xff\xfe" + s.encode("utf-16-le")[:-1]
+        branch = i % 5
+        if branch == 0:
+            out = s.encode("utf-8")
+        elif branch == 1:
+            out = b"\xef\xbb\xbf" + s.encode("utf-8")
+        elif branch == 2:
+            out = b"\xff\xfe" + s.encode("utf-16-le")
+        elif branch == 3:
+            out = b"\xfe\xff" + s.encode("utf-16-be")
+        else:
+            out = (s + _LATIN1_SUFFIX).encode("latin-1")
+        return out
 
-    return _seam_fanout(df.select(id_col, text_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col, text_col)), make)
 
 
 # --------------------------------------------------------------------------
 # Ogg container census (the mp3_frame_census sibling for the other
-# ubiquitous audio container).  A real page walk: capture pattern,
+# ubiquitous audio container).  A real page walk (vorbis.ogg_pages,
+# shared with the Vorbis packet assembly): capture pattern,
 # version, header-type flags, granule position, the lacing table's
 # packet framing (255-continuation rule), and the page CRC —
 # RECOMPUTED per page with the Ogg polynomial (0x04C11DB7, MSB-first,
@@ -4874,43 +4717,19 @@ def ogg_census(payload: bytes) -> list[float]:
     across pages count once, at their final segment)."""
     import struct
 
-    b = bytes(payload)
-    pos, n = 0, len(b)
     n_pages = n_packets = payload_bytes = 0
     channels = rate = -1
     last_granule = 0
-    first = True
-    while pos < n:
-        if b[pos:pos + 4] != b"OggS" or pos + 27 > n:
-            raise ValueError("bad Ogg capture pattern")
-        if b[pos + 4] != 0:
-            raise ValueError("unknown Ogg version")
-        granule, _serial, _seq, crc, nsegs = struct.unpack_from(
-            "<qIIIB", b, pos + 6
-        )
-        if pos + 27 + nsegs > n:
-            raise ValueError("truncated Ogg segment table")
-        lacing = b[pos + 27:pos + 27 + nsegs]
-        body_len = sum(lacing)
-        page_end = pos + 27 + nsegs + body_len
-        if page_end > n:
-            raise ValueError("truncated Ogg page body")
-        page = bytearray(b[pos:page_end])
-        page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != crc:
-            raise ValueError("Ogg page CRC mismatch")
-        n_pages += 1
-        payload_bytes += body_len
-        n_packets += sum(1 for v in lacing if v < 255)
-        last_granule = granule
-        if first:
-            body = b[pos + 27 + nsegs:page_end]
+    for granule, lacing, body in ogg_pages(bytes(payload)):
+        if n_pages == 0:
             if body[:7] != b"\x01vorbis" or len(body) < 30:
                 raise ValueError("missing Vorbis identification header")
             channels = body[11]
             rate = struct.unpack_from("<I", body, 12)[0]
-            first = False
-        pos = page_end
+        n_pages += 1
+        payload_bytes += len(body)
+        n_packets += sum(1 for v in lacing if v < 255)
+        last_granule = granule
     if n_pages == 0:
         raise ValueError("empty Ogg payload")
     return [
@@ -4934,71 +4753,44 @@ def synth_ogg(
     256 + byte(p) % 1000 of md5(f"{id}_g_g") per page, EOS on the
     last.  Every `corrupt_mod`-th doc has one payload byte flipped
     AFTER CRC computation — the census must refuse the page.  All
-    values md5-hex-recomputable by the oracle.  Arrow mapInPandas,
-    zero shuffle."""
+    values md5-hex-recomputable by the oracle."""
     import hashlib
     import struct
 
-    def page(
-        body: bytes, lacing: list[int], flags: int,
-        granule: int, serial: int, seq: int,
-    ) -> bytes:
-        head = (
-            b"OggS\x00" + bytes([flags])
-            + struct.pack("<qIII", granule, serial, seq, 0)
-            + bytes([len(lacing)]) + bytes(lacing)
+    def make(i: int) -> bytes:
+        hb = hashlib.md5(f"{i}_g_h".encode()).digest()
+        lb = hashlib.md5(f"{i}_g_l".encode()).digest()
+        gb = hashlib.md5(f"{i}_g_g".encode()).digest()
+        channels = 1 + hb[0] % 2
+        rate = _OGG_RATES[hb[1] % 4]
+        ident = (
+            b"\x01vorbis" + struct.pack("<I", 0)
+            + bytes([channels]) + struct.pack("<I", rate)
+            + struct.pack("<iii", 0, 128000, 0)
+            + b"\xb8\x01"
         )
-        crc = _ogg_crc(head + body)
-        return (
-            head[:22] + struct.pack("<I", crc) + head[26:] + body
-        )
+        serial = int.from_bytes(hb[4:8], "little")
+        out = ogg_page(ident, [len(ident)], 0x02, 0, serial, 0)
+        n_audio = 2 + hb[2] % 3
+        granule = 0
+        for p in range(n_audio):
+            la = 1 + lb[2 * p] % 200
+            lc = 255 + lb[2 * p + 1] % 100
+            body = bytes(
+                hashlib.md5(f"{i}_g_b{p}".encode()).digest()
+                * ((la + lc) // 16 + 1)
+            )[: la + lc]
+            lacing = [la, 255, lc - 255]
+            granule += 256 + gb[p] % 1000
+            flags = 0x04 if p == n_audio - 1 else 0x00
+            out += ogg_page(body, lacing, flags, granule, serial, p + 1)
+        if corrupt_mod and i % corrupt_mod == 0:
+            out = bytearray(out)
+            out[-1] ^= 0x40  # flip a bit in the final body
+            out = bytes(out)
+        return out
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                hb = hashlib.md5(f"{i}_g_h".encode()).digest()
-                lb = hashlib.md5(f"{i}_g_l".encode()).digest()
-                gb = hashlib.md5(f"{i}_g_g".encode()).digest()
-                channels = 1 + hb[0] % 2
-                rate = _OGG_RATES[hb[1] % 4]
-                ident = (
-                    b"\x01vorbis" + struct.pack("<I", 0)
-                    + bytes([channels]) + struct.pack("<I", rate)
-                    + struct.pack("<iii", 0, 128000, 0)
-                    + b"\xb8\x01"
-                )
-                serial = int.from_bytes(hb[4:8], "little")
-                out = page(ident, [len(ident)], 0x02, 0, serial, 0)
-                n_audio = 2 + hb[2] % 3
-                granule = 0
-                for p in range(n_audio):
-                    la = 1 + lb[2 * p] % 200
-                    lc = 255 + lb[2 * p + 1] % 100
-                    body = bytes(
-                        hashlib.md5(f"{i}_g_b{p}".encode()).digest()
-                        * ((la + lc) // 16 + 1)
-                    )[: la + lc]
-                    lacing = [la, 255, lc - 255]
-                    granule += 256 + gb[p] % 1000
-                    flags = 0x04 if p == n_audio - 1 else 0x00
-                    out += page(body, lacing, flags, granule, serial, p + 1)
-                if corrupt_mod and i % corrupt_mod == 0:
-                    out = bytearray(out)
-                    out[-1] ^= 0x40  # flip a bit in the final body
-                    out = bytes(out)
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
-
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def synth_vorbis(
@@ -5022,26 +4814,9 @@ def synth_vorbis(
     1-2 modes, framing bit — every census statistic recomputable in
     closed form from the md5 hex bytes.  Every `corrupt_mod`-th doc
     breaks the LAST codebook's sync pattern (the structural-damage
-    branch).  Arrow mapInPandas, zero shuffle."""
+    branch)."""
     import hashlib
     import struct
-
-    from . import mp3l3  # noqa: F401  (import parity with siblings)
-
-    def page(body, lacing, flags, granule, serial, seq):
-        head = (
-            b"OggS\x00" + bytes([flags])
-            + struct.pack("<qIII", granule, serial, seq, 0)
-            + bytes([len(lacing)]) + bytes(lacing)
-        )
-        crc = _ogg_crc(head + body)
-        return head[:22] + struct.pack("<I", crc) + head[26:] + body
-
-    def lacing_for(*pkts):
-        out = []
-        for p in pkts:
-            out += [255] * (len(p) // 255) + [len(p) % 255]
-        return out
 
     def book_bits(bw: LsbWriter, hb: bytes, corrupt: bool):
         shape = hb[0] % 3
@@ -5098,129 +4873,117 @@ def synth_vorbis(
                 bw.write(0, 1)
             bw.write(0, 4)
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                hb0 = hashlib.md5(f"{i}_v_h".encode()).digest()
-                channels = 1 + hb0[0] % 2
-                rate = _OGG_RATES[hb0[1] % 4]
-                n_books = 1 + hb0[2] % 4
-                ident = (
-                    b"\x01vorbis" + struct.pack("<I", 0)
-                    + bytes([channels]) + struct.pack("<I", rate)
-                    + struct.pack("<iii", 0, 128000, 0)
-                    + b"\xb8\x01"
-                )
-                comment = (
-                    b"\x03vorbis" + struct.pack("<I", 0)
-                    + struct.pack("<I", 0) + b"\x01"
-                )
-                bw = LsbWriter()
-                bw.write(n_books - 1, 8)
-                for j in range(n_books):
-                    hb = hashlib.md5(f"{i}_v_b{j}".encode()).digest()
-                    corrupt = (
-                        corrupt_mod and i % corrupt_mod == 0
-                        and j == n_books - 1
-                    )
-                    book_bits(bw, hb, bool(corrupt))
-                # time transforms / floors / residues / mappings /
-                # modes — the full §4.2.4 tail
-                hs = hashlib.md5(f"{i}_v_s".encode()).digest()
-                bw.write(0, 6)
-                bw.write(0, 16)          # one type-0 time transform
-                n_floors = 1 + hs[0] % 2
-                bw.write(n_floors - 1, 6)
-                for j in range(n_floors):
-                    hf = hashlib.md5(f"{i}_v_f{j}".encode()).digest()
-                    hx = hashlib.md5(f"{i}_v_fx{j}".encode()).digest()
-                    bw.write(1, 16)      # floor type 1
-                    parts = 1 + hf[1] % 3
-                    bw.write(parts, 5)
-                    for _ in range(parts):
-                        bw.write(0, 4)   # all partitions -> class 0
-                    dims = 1 + hf[3] % 3
-                    subs = hf[4] % 2
-                    bw.write(dims - 1, 3)
-                    bw.write(subs, 2)
-                    if subs:
-                        bw.write(hf[5] % n_books, 8)
-                    for k in range(1 << subs):
-                        bw.write(hf[6 + k] % (n_books + 1), 8)
-                    bw.write(hf[7] % 4, 2)   # multiplier - 1
-                    rb = 1 + hf[8] % 4
-                    bw.write(rb, 4)
-                    for tx in range(parts * dims):
-                        bw.write(hx[tx] % (1 << rb), rb)
-                n_res = 1 + hs[1] % 2
-                bw.write(n_res - 1, 6)
-                for j in range(n_res):
-                    hr = hashlib.md5(f"{i}_v_r{j}".encode()).digest()
-                    bw.write(hr[0] % 3, 16)
-                    bw.write(hr[1], 24)            # begin
-                    bw.write(hr[1] + hr[2], 24)    # end
-                    bw.write(hr[3], 24)            # partition_size-1
-                    ncls = 1 + hr[4] % 3
-                    bw.write(ncls - 1, 6)
-                    bw.write(hr[5] % n_books, 8)   # classbook
-                    cascades = []
-                    for c in range(ncls):
-                        low = hr[6 + 3 * c] % 8
-                        flag = hr[7 + 3 * c] % 2
-                        high = hr[8 + 3 * c] % 32 if flag else 0
-                        bw.write(low, 3)
-                        bw.write(flag, 1)
-                        if flag:
-                            bw.write(high, 5)
-                        cascades.append(high * 8 + low)
-                    for c, casc in enumerate(cascades):
-                        for pas in range(8):
-                            if casc & (1 << pas):
-                                bw.write(
-                                    (hr[15] + pas + c) % n_books, 8
-                                )
-                bw.write(0, 6)           # one mapping
-                bw.write(0, 16)          # mapping type 0
-                bw.write(0, 1)           # one submap
-                if channels == 2 and hs[2] % 2:
-                    bw.write(1, 1)       # coupling present
-                    bw.write(0, 8)       # one step
-                    bw.write(0, 1)       # magnitude channel 0
-                    bw.write(1, 1)       # angle channel 1
-                else:
-                    bw.write(0, 1)
-                bw.write(0, 2)           # reserved
-                bw.write(0, 8)           # submap time config (unused)
-                bw.write(hs[3] % n_floors, 8)
-                bw.write(hs[4] % n_res, 8)
-                n_modes = 1 + hs[5] % 2
-                bw.write(n_modes - 1, 6)
-                for m in range(n_modes):
-                    bw.write(hs[6 + m] % 2, 1)   # blockflag
-                    bw.write(0, 16)
-                    bw.write(0, 16)
-                    bw.write(0, 8)               # mapping 0
-                bw.write(1, 1)                   # framing bit
-                setup = b"\x05vorbis" + bw.getvalue()
-                serial = int.from_bytes(hb0[4:8], "little")
-                out = page(ident, lacing_for(ident), 0x02, 0, serial, 0)
-                out += page(
-                    comment + setup, lacing_for(comment, setup),
-                    0x04, 0, serial, 1,
-                )
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
+    def make(i: int) -> bytes:
+        hb0 = hashlib.md5(f"{i}_v_h".encode()).digest()
+        channels = 1 + hb0[0] % 2
+        rate = _OGG_RATES[hb0[1] % 4]
+        n_books = 1 + hb0[2] % 4
+        ident = (
+            b"\x01vorbis" + struct.pack("<I", 0)
+            + bytes([channels]) + struct.pack("<I", rate)
+            + struct.pack("<iii", 0, 128000, 0)
+            + b"\xb8\x01"
+        )
+        comment = (
+            b"\x03vorbis" + struct.pack("<I", 0)
+            + struct.pack("<I", 0) + b"\x01"
+        )
+        bw = LsbWriter()
+        bw.write(n_books - 1, 8)
+        for j in range(n_books):
+            hb = hashlib.md5(f"{i}_v_b{j}".encode()).digest()
+            corrupt = (
+                corrupt_mod and i % corrupt_mod == 0
+                and j == n_books - 1
             )
+            book_bits(bw, hb, bool(corrupt))
+        # time transforms / floors / residues / mappings /
+        # modes — the full §4.2.4 tail
+        hs = hashlib.md5(f"{i}_v_s".encode()).digest()
+        bw.write(0, 6)
+        bw.write(0, 16)          # one type-0 time transform
+        n_floors = 1 + hs[0] % 2
+        bw.write(n_floors - 1, 6)
+        for j in range(n_floors):
+            hf = hashlib.md5(f"{i}_v_f{j}".encode()).digest()
+            hx = hashlib.md5(f"{i}_v_fx{j}".encode()).digest()
+            bw.write(1, 16)      # floor type 1
+            parts = 1 + hf[1] % 3
+            bw.write(parts, 5)
+            for _ in range(parts):
+                bw.write(0, 4)   # all partitions -> class 0
+            dims = 1 + hf[3] % 3
+            subs = hf[4] % 2
+            bw.write(dims - 1, 3)
+            bw.write(subs, 2)
+            if subs:
+                bw.write(hf[5] % n_books, 8)
+            for k in range(1 << subs):
+                bw.write(hf[6 + k] % (n_books + 1), 8)
+            bw.write(hf[7] % 4, 2)   # multiplier - 1
+            rb = 1 + hf[8] % 4
+            bw.write(rb, 4)
+            for tx in range(parts * dims):
+                bw.write(hx[tx] % (1 << rb), rb)
+        n_res = 1 + hs[1] % 2
+        bw.write(n_res - 1, 6)
+        for j in range(n_res):
+            hr = hashlib.md5(f"{i}_v_r{j}".encode()).digest()
+            bw.write(hr[0] % 3, 16)
+            bw.write(hr[1], 24)            # begin
+            bw.write(hr[1] + hr[2], 24)    # end
+            bw.write(hr[3], 24)            # partition_size-1
+            ncls = 1 + hr[4] % 3
+            bw.write(ncls - 1, 6)
+            bw.write(hr[5] % n_books, 8)   # classbook
+            cascades = []
+            for c in range(ncls):
+                low = hr[6 + 3 * c] % 8
+                flag = hr[7 + 3 * c] % 2
+                high = hr[8 + 3 * c] % 32 if flag else 0
+                bw.write(low, 3)
+                bw.write(flag, 1)
+                if flag:
+                    bw.write(high, 5)
+                cascades.append(high * 8 + low)
+            for c, casc in enumerate(cascades):
+                for pas in range(8):
+                    if casc & (1 << pas):
+                        bw.write(
+                            (hr[15] + pas + c) % n_books, 8
+                        )
+        bw.write(0, 6)           # one mapping
+        bw.write(0, 16)          # mapping type 0
+        bw.write(0, 1)           # one submap
+        if channels == 2 and hs[2] % 2:
+            bw.write(1, 1)       # coupling present
+            bw.write(0, 8)       # one step
+            bw.write(0, 1)       # magnitude channel 0
+            bw.write(1, 1)       # angle channel 1
+        else:
+            bw.write(0, 1)
+        bw.write(0, 2)           # reserved
+        bw.write(0, 8)           # submap time config (unused)
+        bw.write(hs[3] % n_floors, 8)
+        bw.write(hs[4] % n_res, 8)
+        n_modes = 1 + hs[5] % 2
+        bw.write(n_modes - 1, 6)
+        for m in range(n_modes):
+            bw.write(hs[6 + m] % 2, 1)   # blockflag
+            bw.write(0, 16)
+            bw.write(0, 16)
+            bw.write(0, 8)               # mapping 0
+        bw.write(1, 1)                   # framing bit
+        setup = b"\x05vorbis" + bw.getvalue()
+        serial = int.from_bytes(hb0[4:8], "little")
+        out = ogg_page(ident, ogg_lacing(ident), 0x02, 0, serial, 0)
+        out += ogg_page(
+            comment + setup, ogg_lacing(comment, setup),
+            0x04, 0, serial, 1,
+        )
+        return out
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 def synth_vorbis_pcm(
@@ -5240,27 +5003,11 @@ def synth_vorbis_pcm(
     render, residue add, inverse MDCT, window, overlap-add — is
     closed form with sums of at most two terms (order-independent in
     IEEE, the mp3-pcm-gate discipline).  Every `stub_mod`-th doc
-    truncates the setup page (the damage branch).  Arrow mapInPandas,
-    zero shuffle."""
+    truncates the setup page (the damage branch)."""
     import hashlib
     import struct
 
     VQ_MULTS = [3, 0, 0, 0, 0, 5, 0, 0, 0, 0, 7, 0, 0, 0, 0, 2]
-
-    def lacing_for(*pkts):
-        out = []
-        for p in pkts:
-            out += [255] * (len(p) // 255) + [len(p) % 255]
-        return out
-
-    def page(body, lacing, flags, serial, seq):
-        head = (
-            b"OggS\x00" + bytes([flags])
-            + struct.pack("<qIII", 0, serial, seq, 0)
-            + bytes([len(lacing)]) + bytes(lacing)
-        )
-        crc = _ogg_crc(head + body)
-        return head[:22] + struct.pack("<I", crc) + head[26:] + body
 
     def setup_bits() -> bytes:
         bw = LsbWriter()
@@ -5329,51 +5076,39 @@ def synth_vorbis_pcm(
         + b"\x01"
     )
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf[id_col]:
-                i = int(item_id)
-                pkts = []
-                for t in range(3):
-                    hp = hashlib.md5(f"{i}_vp_{t}".encode()).digest()
-                    y, p = hp[0], hp[1] % 4
-                    wa, wb = hp[2] % 4, hp[3] % 4
-                    pb = LsbWriter()
-                    pb.write(0, 1)
-                    pb.write(1, 1)
-                    pb.write(y, 8)
-                    pb.write(y, 8)
-                    for q in range(4):
-                        pb.write(1 if q == p else 0, 1)
-                        if q == p:
-                            for w in (wa, wb):
-                                pb.write((w >> 1) & 1, 1)
-                                pb.write(w & 1, 1)
-                    pkts.append(pb.getvalue())
-                serial = 9 + (i & 0xFFFF)
-                out = page(IDENT, lacing_for(IDENT), 0x02, serial, 0)
-                setup = SETUP
-                if stub_mod and i % stub_mod == 0:
-                    setup = SETUP[: len(SETUP) // 2]  # torn setup
-                out += page(
-                    COMMENT + setup, lacing_for(COMMENT, setup),
-                    0x00, serial, 1,
-                )
-                out += page(
-                    b"".join(pkts), lacing_for(*pkts), 0x04, serial, 2
-                )
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int) -> bytes:
+        pkts = []
+        for t in range(3):
+            hp = hashlib.md5(f"{i}_vp_{t}".encode()).digest()
+            y, p = hp[0], hp[1] % 4
+            wa, wb = hp[2] % 4, hp[3] % 4
+            pb = LsbWriter()
+            pb.write(0, 1)
+            pb.write(1, 1)
+            pb.write(y, 8)
+            pb.write(y, 8)
+            for q in range(4):
+                pb.write(1 if q == p else 0, 1)
+                if q == p:
+                    for w in (wa, wb):
+                        pb.write((w >> 1) & 1, 1)
+                        pb.write(w & 1, 1)
+            pkts.append(pb.getvalue())
+        serial = 9 + (i & 0xFFFF)
+        out = ogg_page(IDENT, ogg_lacing(IDENT), 0x02, 0, serial, 0)
+        setup = SETUP
+        if stub_mod and i % stub_mod == 0:
+            setup = SETUP[: len(SETUP) // 2]  # torn setup
+        out += ogg_page(
+            COMMENT + setup, ogg_lacing(COMMENT, setup),
+            0x00, 0, serial, 1,
+        )
+        out += ogg_page(
+            b"".join(pkts), ogg_lacing(*pkts), 0x04, 0, serial, 2
+        )
+        return out
 
-    return _seam_fanout(df.select(id_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col)), make)
 
 
 # --------------------------------------------------------------------------
@@ -5462,52 +5197,39 @@ def synth_adts(
     b1 % 13, channels = 1 + b3 % 2 from md5(id||'_aac'); every other
     frame carries the optional 16-bit CRC field (protection_absent
     alternates).  Every `stub_mod`-th doc declares one byte more than
-    it ships (the truncation damage branch).  Arrow mapInPandas,
-    zero shuffle."""
+    it ships (the truncation damage branch)."""
     import hashlib
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(item_id)
-                h = hashlib.md5(f"{i}_aac".encode()).digest()
-                prof, sfi, chan = h[0] % 4, h[1] % 13, 1 + h[3] % 2
-                nf = 2 + h[2] % 3
-                data = str(text).encode("utf-8")
-                per = (len(data) + nf - 1) // nf if data else 1
-                out = bytearray()
-                for f in range(nf):
-                    chunk = data[f * per:(f + 1) * per]
-                    pa = (f % 2)  # alternate CRC presence
-                    hdr = 7 + (0 if pa else 2)
-                    flen = hdr + len(chunk)
-                    b0 = 0xFF
-                    b1 = 0xF0 | (1 << 3) | (0 << 1) | pa
-                    b2 = (prof << 6) | (sfi << 2) | ((chan >> 2) & 1)
-                    b3 = ((chan & 0x3) << 6) | ((flen >> 11) & 0x3)
-                    b4 = (flen >> 3) & 0xFF
-                    b5 = ((flen & 0x7) << 5) | 0x1F
-                    b6 = 0xFC
-                    out += bytes([b0, b1, b2, b3, b4, b5, b6])
-                    if not pa:
-                        out += hashlib.md5(
-                            f"{i}_aac_crc{f}".encode()
-                        ).digest()[:2]
-                    out += chunk
-                if stub_mod and i % stub_mod == 0 and out:
-                    out = out[:-1]  # one byte short of its declaration
-                payloads.append(bytes(out))
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def make(i: int, text) -> bytes:
+        h = hashlib.md5(f"{i}_aac".encode()).digest()
+        prof, sfi, chan = h[0] % 4, h[1] % 13, 1 + h[3] % 2
+        nf = 2 + h[2] % 3
+        data = str(text).encode("utf-8")
+        per = (len(data) + nf - 1) // nf if data else 1
+        out = bytearray()
+        for f in range(nf):
+            chunk = data[f * per:(f + 1) * per]
+            pa = (f % 2)  # alternate CRC presence
+            hdr = 7 + (0 if pa else 2)
+            flen = hdr + len(chunk)
+            b0 = 0xFF
+            b1 = 0xF0 | (1 << 3) | (0 << 1) | pa
+            b2 = (prof << 6) | (sfi << 2) | ((chan >> 2) & 1)
+            b3 = ((chan & 0x3) << 6) | ((flen >> 11) & 0x3)
+            b4 = (flen >> 3) & 0xFF
+            b5 = ((flen & 0x7) << 5) | 0x1F
+            b6 = 0xFC
+            out += bytes([b0, b1, b2, b3, b4, b5, b6])
+            if not pa:
+                out += hashlib.md5(
+                    f"{i}_aac_crc{f}".encode()
+                ).digest()[:2]
+            out += chunk
+        if stub_mod and i % stub_mod == 0 and out:
+            out = out[:-1]  # one byte short of its declaration
+        return bytes(out)
 
-    return _seam_fanout(df.select(id_col, text_col)).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(lineage.fan_out(df.select(id_col, text_col)), make)
 
 
 # --------------------------------------------------------------------------

@@ -787,9 +787,7 @@ def exact_frequent_items(
     # round-robin the single item column across the session's slots
     # when the scan is narrower.  At scale the condition is false and
     # the two-pass scan shape is untouched.
-    slots = df.sparkSession.sparkContext.defaultParallelism
-    if lineage.narrow_scan(sel, slots):
-        sel = sel.repartition(slots)
+    sel = lineage.fan_out(sel)
     rows = cms_build(sel, F.col("item"), w, d).collect()
     counts = [[0] * w for _ in range(d)]
     for r in rows:

@@ -635,11 +635,7 @@ def hashed_features_stats(
     # fixture is one row group, which would run the interpreted fold
     # serially; at scale the condition is false and the plan is
     # unchanged.
-    spark = df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    src = df.select(F.col(id_col), F.col(text_col))
-    if lineage.narrow_scan(src, slots):
-        src = src.repartition(slots)
+    src = lineage.fan_out(df.select(F.col(id_col), F.col(text_col)))
     base = src.select(F.col(id_col), iv.alias("_v"))
     pv = F.col("_v")
     return base.select(

@@ -78,6 +78,63 @@ def _ogg_crc(data: bytes) -> int:
     return int(f"{r:032b}"[::-1], 2)
 
 
+def ogg_lacing(*packets: bytes) -> list[int]:
+    """Segment table for packets laid end to end in one page: a 255
+    per full segment, then the remainder (a 0 ends a packet whose
+    length is a multiple of 255)."""
+    out: list[int] = []
+    for p in packets:
+        out += [255] * (len(p) // 255) + [len(p) % 255]
+    return out
+
+
+def ogg_page(
+    body: bytes, lacing: list[int], flags: int,
+    granule: int, serial: int, seq: int,
+) -> bytes:
+    """One Ogg page (version 0): header, segment table and body, with
+    the CRC computed over the page with its CRC field zeroed."""
+    import struct
+
+    head = (
+        b"OggS\x00" + bytes([flags])
+        + struct.pack("<qIII", granule, serial, seq, 0)
+        + bytes([len(lacing)]) + bytes(lacing)
+    )
+    crc = _ogg_crc(head + body)
+    return head[:22] + struct.pack("<I", crc) + head[26:] + body
+
+
+def ogg_pages(b: bytes):
+    """Walk an Ogg stream page by page, yielding (granule, lacing,
+    body) once the page's capture pattern, version, length and
+    recomputed CRC check out.  Lazy, so a caller can reject a page's
+    content before later pages are read.  ValueError on structural
+    damage."""
+    import struct
+
+    pos, n = 0, len(b)
+    while pos < n:
+        if b[pos:pos + 4] != b"OggS" or pos + 27 > n:
+            raise ValueError("bad Ogg capture pattern")
+        if b[pos + 4] != 0:
+            raise ValueError("unknown Ogg version")
+        granule, _serial, _seq, crc, nsegs = struct.unpack_from(
+            "<qIIIB", b, pos + 6
+        )
+        if pos + 27 + nsegs > n:
+            raise ValueError("truncated Ogg segment table")
+        lacing = b[pos + 27:pos + 27 + nsegs]
+        page_end = pos + 27 + nsegs + sum(lacing)
+        if page_end > n:
+            raise ValueError("truncated Ogg page body")
+        page = bytearray(b[pos:page_end])
+        page[22:26] = b"\x00\x00\x00\x00"
+        if _ogg_crc(bytes(page)) != crc:
+            raise ValueError("Ogg page CRC mismatch")
+        yield granule, lacing, b[pos + 27 + nsegs:page_end]
+        pos = page_end
+
 
 def _vorbis_ilog(x: int) -> int:
     """ilog per Vorbis I spec §9.2.1: bit count of x (0 for x <= 0)."""
@@ -97,41 +154,19 @@ def _lookup1_values(entries: int, dim: int) -> int:
 
 
 def _ogg_packets(b: bytes) -> list[bytes]:
-    """Ogg packet extraction: the r10 page walk (capture pattern,
-    version, recomputed CRC) plus lacing-based packet assembly with
-    cross-page continuation.  ValueError on structural damage."""
-    import struct
-
-    pos, n = 0, len(b)
+    """Ogg packet extraction: the page walk plus lacing-based packet
+    assembly with cross-page continuation.  ValueError on structural
+    damage."""
     packets: list[bytes] = []
     partial = bytearray()
-    while pos < n:
-        if b[pos:pos + 4] != b"OggS" or pos + 27 > n:
-            raise ValueError("bad Ogg capture pattern")
-        if b[pos + 4] != 0:
-            raise ValueError("unknown Ogg version")
-        _granule, _serial, _seq, crc, nsegs = struct.unpack_from(
-            "<qIIIB", b, pos + 6
-        )
-        if pos + 27 + nsegs > n:
-            raise ValueError("truncated Ogg segment table")
-        lacing = b[pos + 27:pos + 27 + nsegs]
-        body_len = sum(lacing)
-        page_end = pos + 27 + nsegs + body_len
-        if page_end > n:
-            raise ValueError("truncated Ogg page body")
-        page = bytearray(b[pos:page_end])
-        page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != crc:
-            raise ValueError("Ogg page CRC mismatch")
-        off = pos + 27 + nsegs
+    for _granule, lacing, body in ogg_pages(b):
+        off = 0
         for v in lacing:
-            partial += b[off:off + v]
+            partial += body[off:off + v]
             off += v
             if v < 255:
                 packets.append(bytes(partial))
                 partial = bytearray()
-        pos = page_end
     if partial:
         raise ValueError("unterminated Ogg packet")
     return packets

@@ -75,9 +75,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the rows across slots (a one-pass ~1 MB exchange here); at
         # corpus scale the file fan-out exceeds defaultParallelism
         # and this is a no-op, keeping the scan-shaped plans.
-        slots = spark.sparkContext.defaultParallelism
-        if lineage.narrow_scan(df, slots):
-            df = df.repartition(slots)
+        df = lineage.fan_out(df)
     return df
 
 

@@ -353,36 +353,23 @@ def synth_warc(
     member layout) except every `plain_mod`-th doc, which ships
     uncompressed (same records, the raw-WARC branch); every
     `corrupt_mod`-th doc has its final 6 bytes cut — a truncated last
-    member (damage branch, parse_ok=False).  Arrow mapInPandas, zero
-    shuffle."""
+    member (damage branch, parse_ok=False)."""
     from .corpus import DOCUMENTS_SCHEMA  # noqa: F401  (schema contract)
-    from ..operators.multimodal import SYNTH_SCHEMA
+    from ..operators.multimodal import synth_payloads
 
-    def run(batches):
-        for pdf in batches:
-            payloads = []
-            for item_id, text in zip(pdf[id_col], pdf[text_col]):
-                i = int(item_id)
-                records = _synth_records(i, text)
-                if plain_mod and i % plain_mod == 0:
-                    out = b"".join(records)
-                else:
-                    out = b"".join(
-                        zlib.compress(r, 6, wbits=31) for r in records
-                    )
-                if corrupt_mod and i % corrupt_mod == 0:
-                    out = out[:-6]
-                payloads.append(out)
-            yield pd.DataFrame(
-                {
-                    "item_id": pd.Series(
-                        [int(i) for i in pdf[id_col]], dtype="int64"
-                    ),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
+    def make(i: int, text) -> bytes:
+        records = _synth_records(i, text)
+        if plain_mod and i % plain_mod == 0:
+            out = b"".join(records)
+        else:
+            out = b"".join(
+                zlib.compress(r, 6, wbits=31) for r in records
             )
+        if corrupt_mod and i % corrupt_mod == 0:
+            out = out[:-6]
+        return out
 
-    return df.select(id_col, text_col).mapInPandas(run, SYNTH_SCHEMA)
+    return synth_payloads(df.select(id_col, text_col), make)
 
 
 def read_warc(

@@ -62,6 +62,12 @@ class MergeSpec:
     key: str
 
 
+def _stamped(metadata: dict | None, **extra) -> dict:
+    """A manifest's metadata: the caller's keys, then the commit time,
+    then any ``extra`` flags."""
+    return {**(metadata or {}), "committed_at": time.time(), **extra}
+
+
 class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -166,18 +172,14 @@ class SnapshotStore:
         table_paths = {} if prev is None else dict(self._manifest(prev)["tables"])
 
         for name, df in changed.items():
-            rel = os.path.join("data", name, f"v{new_version}")
-            out = os.path.join(self.root, rel)
-            key = (sort_by or {}).get(name)
-            if key:
-                df = df.repartitionByRange(partitions, key).sortWithinPartitions(key)
-            df.write.mode("overwrite").parquet(out)
-            table_paths[name] = rel
+            table_paths[name] = self._write_base(
+                df, name, new_version, sort_by, partitions
+            )
 
         manifest = {
             "version": new_version,
             "tables": table_paths,
-            "metadata": {**(metadata or {}), "committed_at": time.time()},
+            "metadata": _stamped(metadata),
         }
         return self._publish(manifest, new_version)
 
@@ -196,6 +198,18 @@ class SnapshotStore:
             os.unlink(tmp)
         return new_version
 
+    def _write_base(self, df, name, version, sort_by, partitions) -> str:
+        """Write a whole-table base, range-sorted by its ``sort_by`` key
+        when it has one (its pruning layout); returns its store-relative
+        path."""
+        rel = os.path.join("data", name, f"v{version}")
+        sort_key = (sort_by or {}).get(name)
+        if sort_key:
+            df = df.repartitionByRange(partitions, sort_key)
+            df = df.sortWithinPartitions(sort_key)
+        df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        return rel
+
     def set_metadata(self, metadata: dict) -> int:
         """Metadata-only commit: republish the current table entries
         under a new version with the given metadata — e.g. recording
@@ -206,7 +220,7 @@ class SnapshotStore:
             raise ValueError("set_metadata on empty store")
         manifest = {
             "tables": self._manifest(prev)["tables"],
-            "metadata": {**metadata, "committed_at": time.time()},
+            "metadata": _stamped(metadata),
         }
         return self._publish(manifest, prev + 1)
 
@@ -257,13 +271,9 @@ class SnapshotStore:
                     )
                     .unionByName(spec.upserts)
                 )
-                rel = os.path.join("data", name, f"v{new_version}")
-                sort_key = (sort_by or {}).get(name)
-                if sort_key:
-                    folded = folded.repartitionByRange(
-                        partitions, sort_key
-                    ).sortWithinPartitions(sort_key)
-                folded.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+                rel = self._write_base(
+                    folded, name, new_version, sort_by, partitions
+                )
                 return name, {"base": rel, "key": spec.key, "layers": []}
             ldir = os.path.join("data", name, f"v{new_version}_layer")
             ups_rel = os.path.join(ldir, "upserts")
@@ -299,7 +309,7 @@ class SnapshotStore:
         manifest = {
             "version": new_version,
             "tables": table_entries,
-            "metadata": {**(metadata or {}), "committed_at": time.time()},
+            "metadata": _stamped(metadata),
         }
         return self._publish(manifest, new_version)
 
@@ -319,23 +329,16 @@ class SnapshotStore:
             entry = entries[name]
             if isinstance(entry, str) or not entry.get("layers"):
                 continue
-            folded = self._resolve(entry)
-            rel = os.path.join("data", name, f"v{new_version}")
-            sort_key = (sort_by or {}).get(name)
-            if sort_key:
-                folded = folded.repartitionByRange(
-                    partitions, sort_key
-                ).sortWithinPartitions(sort_key)
-            folded.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+            rel = self._write_base(
+                self._resolve(entry), name, new_version, sort_by, partitions
+            )
             entries[name] = {"base": rel, "key": entry["key"], "layers": []}
         manifest = {
             "version": new_version,
             "tables": entries,
-            "metadata": {
-                **self._manifest(prev)["metadata"],
-                "committed_at": time.time(),
-                "optimized": True,
-            },
+            "metadata": _stamped(
+                self._manifest(prev)["metadata"], optimized=True
+            ),
         }
         return self._publish(manifest, new_version)
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import random
+import struct
 
 import numpy as np
 import pytest
@@ -20,8 +21,9 @@ from osmexpress_spark.operators import multimodal as M
 from osmexpress_spark.operators import vorbis as V
 from test_flac import _rand_channels
 from test_mp3l3 import _spec
+from test_multimodal import _gif_lzw_encode, _tiff_lzw_encode
 from test_round11_ops import _pcm_payload
-from test_vorbis import _build_stream, _lacing, _mono_packet, _ogg_page
+from test_vorbis import _build_stream, _mono_packet
 from test_webp import _LW, _gen, _lw_encode
 
 FLIP_BYTES = 256
@@ -67,10 +69,46 @@ def _webp_libwebp(kind: str, w: int, h: int) -> bytes:
     return _lw_encode(_gen(kind, w, h, random.Random(3)), w, h)
 
 
-def _vorbis_packets() -> list[bytes]:
-    return V._ogg_packets(_build_stream(1, [
+def _vorbis_stream() -> bytes:
+    return _build_stream(1, [
         _mono_packet(100, 40, [1, 0, 1, 0], [0, 2, 3, 1]),
-        _mono_packet(30, 200, [0, 1, 0, 1], [2, 2, 1, 0])]))
+        _mono_packet(30, 200, [0, 1, 0, 1], [2, 2, 1, 0])])
+
+
+def _vorbis_packets() -> list[bytes]:
+    return V._ogg_packets(_vorbis_stream())
+
+
+def _ogg_census_stream() -> bytes:
+    """A synth_ogg-shaped stream: a BOS page with the Vorbis
+    identification header, then three audio pages of two packets each,
+    the second of which spans a 255 lacing value."""
+    ident = (
+        b"\x01vorbis" + struct.pack("<I", 0) + bytes([2])
+        + struct.pack("<I", 44100) + struct.pack("<iii", 0, 128000, 0)
+        + b"\xb8\x01"
+    )
+    out = V.ogg_page(ident, V.ogg_lacing(ident), 0x02, 0, 77, 0)
+    granule = 0
+    for p in range(3):
+        la, lb = 1 + 37 * p, 255 + 23 * p
+        body = (hashlib.md5(f"ogg_{p}".encode()).digest() * 40)[:la + lb]
+        granule += 256 + 100 * p
+        out += V.ogg_page(body, V.ogg_lacing(body[:la], body[la:]),
+                          0x04 if p == 2 else 0x00, granule, 77, p + 1)
+    return out
+
+
+def _gif_lzw_payload() -> bytes:
+    rng = random.Random(11)
+    return _gif_lzw_encode(2, [rng.choice((0, 0, 1, 2, 3))
+                               for _ in range(900)])
+
+
+def _tiff_lzw_payload() -> bytes:
+    rng = random.Random(12)
+    return _tiff_lzw_encode(bytes(rng.choice(b"aaabbcd\x00\xff")
+                                  for _ in range(1200)))
 
 
 def _vorbis_decode_with(index: int):
@@ -83,11 +121,11 @@ def _vorbis_decode_with(index: int):
         pkts = [ident, comment, setup, *audio]
         pkts[index] = packet
         ident, comment, setup, *audio = pkts
-        out = _ogg_page(ident, _lacing(ident), 0x02, 9, 0)
-        out += _ogg_page(comment + setup, _lacing(comment) + _lacing(setup),
-                         0x00, 9, 1)
-        out += _ogg_page(b"".join(audio),
-                         [n for a in audio for n in _lacing(a)], 0x04, 9, 2)
+        out = V.ogg_page(ident, V.ogg_lacing(ident), 0x02, 0, 9, 0)
+        out += V.ogg_page(comment + setup, V.ogg_lacing(comment, setup),
+                          0x00, 0, 9, 1)
+        out += V.ogg_page(b"".join(audio), V.ogg_lacing(*audio),
+                          0x04, 0, 9, 2)
         return V.decode_audio(out)
     return decode
 
@@ -123,6 +161,10 @@ FIXTURES = {
         lambda: _vorbis_packets()[2], _vorbis_decode_with(2), False),
     "vorbis_audio_packet": (
         lambda: _vorbis_packets()[3], _vorbis_decode_with(3), False),
+    "ogg_census_pages": (_ogg_census_stream, M.ogg_census, False),
+    "vorbis_ogg_pages": (_vorbis_stream, V._ogg_packets, False),
+    "gif_lzw": (_gif_lzw_payload, lambda p: M._gif_lzw(2, p), False),
+    "tiff_lzw": (_tiff_lzw_payload, M._tiff_lzw, False),
 }
 
 
@@ -145,19 +187,29 @@ def sweep_digest(payload: bytes, decode) -> str:
 
 
 # name -> (sha256 of the payload, sweep digest), recorded on the
-# per-codec readers and decode loops that bitio.py replaced.  The three
-# JPEG digests differ from those only where a flipped DHT count makes
-# a table over-subscribed (a code no longer fits its length): such a
-# table now raises ValueError when it is parsed, as libjpeg rejects it,
-# where it used to raise IndexError or decode with the broken table.
+# per-codec readers and decode loops that bitio.py replaced, and the
+# Ogg, GIF LZW and TIFF LZW ones on the per-module page walkers and
+# readers.  The three JPEG digests differ from those only where a
+# flipped DHT count makes a table over-subscribed (a code no longer
+# fits its length): such a table now raises ValueError when it is
+# parsed, as libjpeg rejects it, where it used to raise IndexError or
+# decode with the broken table.  The FLAC digest differs (was
+# 71e0da539fd5aca1) only where the stream ends inside or right after
+# STREAMINFO (cuts at 26..42 bytes) or a flipped last-block flag runs
+# the metadata walk past the end: those 18 of 2423 variants raise
+# ValueError where they used to decode as zero frames.
 EXPECTED: dict[str, tuple[str, str]] = {
-    "flac_mid_side": ("81faca7adb89e07a", "71e0da539fd5aca1"),
+    "flac_mid_side": ("81faca7adb89e07a", "16a62e9ea58de26e"),
+    "gif_lzw": ("397d22be6b0f11d5", "8a91db6427e1fa10"),
     "jpeg_baseline_420": ("e138fd523c05c527", "f425560611b3782e"),
     "jpeg_lossless_restart": ("0dfb88dd4e110d15", "d1950cf2ceddb370"),
     "jpeg_progressive_restart": ("fec02a61f613317e", "509697ff39d40b55"),
     "mp3_pcm": ("2882a8b2aa337cbe", "ca606ddbb202c0b2"),
     "mp3_tables": ("079a4c5ad70b7946", "18d2b6bdfd50fc9d"),
+    "ogg_census_pages": ("c94848944e399d8c", "48348a137fb5c449"),
+    "tiff_lzw": ("166bc97f43db1b49", "aa1226846aa282c7"),
     "vorbis_audio_packet": ("b68320feee9a4bea", "0869ce50ec812f3e"),
+    "vorbis_ogg_pages": ("58758abcd3864cf3", "74b3a8684c092928"),
     "vorbis_setup_packet": ("36b96a932007d1d5", "820c9ef70a619b9e"),
     "webp_gray": ("f1dfc59be8c1e888", "3857ef7c44057f6e"),
     "webp_libwebp_noise": ("dad3ffae76cfb2e4", "a0bb8e8066fb8445"),

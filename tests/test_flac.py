@@ -125,6 +125,25 @@ def test_flac_error_and_stub_shapes():
         M.flac_decoder(bytes(broken))
 
 
+@pytest.mark.parametrize("cut", [30, 41, 42])
+def test_flac_cut_in_or_after_streaminfo_is_damage(cut):
+    """A stream cut inside STREAMINFO's MD5 (30, 41 bytes) or right
+    after it (42, no frame) used to decode as zero frames."""
+    stream = encode_flac(_rand_channels(2, 16, 64, 5), bps=16,
+                         blocksize=32, stereo="mid-side",
+                         kinds=("fixed2", "lpc2"), po=1)
+    with pytest.raises(ValueError):
+        M.flac_decoder(stream[:cut])
+
+
+def test_flac_truncated_metadata_block_is_damage():
+    stream = bytearray(encode_flac([[1, 2, 3, 4]], blocksize=4))
+    stream[4] &= 0x7F  # STREAMINFO no longer last: a PADDING block follows
+    padding = bytes([0x81, 0, 1, 0]) + bytes(16)  # declares 256 bytes
+    with pytest.raises(ValueError, match="truncated"):
+        M.flac_decoder(bytes(stream[:42]) + padding)
+
+
 def test_audio_decoder_dispatch():
     import io
     import wave

@@ -191,27 +191,16 @@ def test_ogg_crc_table_matches_independent_bitwise(data):
     assert V._ogg_crc(data) == _crc_bitwise(data)
 
 
-def _ogg_page(body: bytes, lacing: list[int], flags: int,
-              granule: int, serial: int, seq: int) -> bytes:
-    head = (
-        b"OggS\x00" + bytes([flags])
-        + struct.pack("<qIII", granule, serial, seq, 0)
-        + bytes([len(lacing)]) + bytes(lacing)
-    )
-    crc = V._ogg_crc(head + body)
-    return head[:22] + struct.pack("<I", crc) + head[26:] + body
-
-
 def test_ogg_handcrafted_stream_census():
     ident = (
         b"\x01vorbis" + struct.pack("<I", 0) + bytes([2])
         + struct.pack("<I", 44100) + struct.pack("<iii", 0, 128000, 0)
         + b"\xb8\x01"
     )
-    p0 = _ogg_page(ident, [len(ident)], 0x02, 0, 77, 0)
+    p0 = V.ogg_page(ident, [len(ident)], 0x02, 0, 77, 0)
     # one page, two packets: a 10-byte one and a 300-byte continued one
     body = bytes(310)
-    p1 = _ogg_page(body, [10, 255, 45], 0x04, 1024, 77, 1)
+    p1 = V.ogg_page(body, [10, 255, 45], 0x04, 1024, 77, 1)
     feat = M.ogg_census(p0 + p1)
     assert feat == [2.0, 3.0, float(len(ident) + 310), 2.0, 44100.0, 1024.0]
 
@@ -222,7 +211,7 @@ def test_ogg_failure_branches():
         + struct.pack("<I", 8000) + struct.pack("<iii", 0, 0, 0)
         + b"\xb8\x01"
     )
-    page = _ogg_page(ident, [len(ident)], 0x02, 0, 5, 0)
+    page = V.ogg_page(ident, [len(ident)], 0x02, 0, 5, 0)
     bad = bytearray(page)
     bad[-1] ^= 1
     with pytest.raises(ValueError):
@@ -234,7 +223,7 @@ def test_ogg_failure_branches():
     with pytest.raises(ValueError):
         M.ogg_census(b"")  # empty
     # BOS page must carry the Vorbis identification header
-    nonv = _ogg_page(b"\x02junkpacketbodyofenoughlengthxx",
+    nonv = V.ogg_page(b"\x02junkpacketbodyofenoughlengthxx",
                      [31], 0x02, 0, 5, 0)
     with pytest.raises(ValueError):
         M.ogg_census(nonv)

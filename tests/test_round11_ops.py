@@ -446,20 +446,9 @@ def test_vorbis_census_refusals():
 def test_ogg_packets_cross_page_continuation():
     """A packet whose lacing ends exactly at 255 continues on the
     next page — the assembly must stitch it back together."""
-    import struct
-
-    def page(body, lacing, flags, seq):
-        head = (
-            b"OggS\x00" + bytes([flags])
-            + struct.pack("<qIII", 0, 7, seq, 0)
-            + bytes([len(lacing)]) + bytes(lacing)
-        )
-        crc = V._ogg_crc(head + body)
-        return head[:22] + struct.pack("<I", crc) + head[26:] + body
-
     pkt = bytes(range(256)) * 2  # 512 bytes
-    p1 = page(pkt[:510], [255, 255], 0x02, 0)
-    p2 = page(pkt[510:] + b"xyz", [2, 3], 0x01, 1)
+    p1 = V.ogg_page(pkt[:510], [255, 255], 0x02, 0, 7, 0)
+    p2 = V.ogg_page(pkt[510:] + b"xyz", [2, 3], 0x01, 0, 7, 1)
     got = V._ogg_packets(p1 + p2)
     assert got == [pkt, b"xyz"]
     # an unterminated trailing packet is structural damage

@@ -266,22 +266,6 @@ def _f32_pack(value: float) -> int:
     return sign | (exponent << 21) | mantissa
 
 
-def _ogg_page(body, lacing, flags, serial, seq):
-    import struct
-
-    head = (
-        b"OggS\x00" + bytes([flags])
-        + struct.pack("<qIII", 0, serial, seq, 0)
-        + bytes([len(lacing)]) + bytes(lacing)
-    )
-    crc = V._ogg_crc(head + body)
-    return head[:22] + struct.pack("<I", crc) + head[26:] + body
-
-
-def _lacing(pkt):
-    return [255] * (len(pkt) // 255) + [len(pkt) % 255]
-
-
 def _write_unordered_book(bw, dims, lengths, lookup=None):
     """lengths: list over ALL entries (None = unused -> sparse)."""
     bw.write(0x564342, 24)
@@ -364,20 +348,16 @@ def _build_stream(channels, audio_packet_bits, coupling=False):
     bw.write(0, 16); bw.write(0, 16); bw.write(0, 8)
     bw.write(1, 1)                           # framing
     setup = b"\x05vorbis" + bw.getvalue()
-    out = _ogg_page(ident, _lacing(ident), 0x02, 9, 0)
-    out += _ogg_page(comment + setup, _lacing(comment) + _lacing(setup),
-                     0x00, 9, 1)
+    out = V.ogg_page(ident, V.ogg_lacing(ident), 0x02, 0, 9, 0)
+    out += V.ogg_page(comment + setup, V.ogg_lacing(comment, setup),
+                      0x00, 0, 9, 1)
     pkts = []
     for bits in audio_packet_bits:
         pb = LsbWriter()
         for v, nb in bits:
             pb.write(v, nb)
         pkts.append(pb.getvalue())
-    body = b"".join(pkts)
-    lac = []
-    for p in pkts:
-        lac += _lacing(p)
-    out += _ogg_page(body, lac, 0x04, 9, 2)
+    out += V.ogg_page(b"".join(pkts), V.ogg_lacing(*pkts), 0x04, 0, 9, 2)
     return out
 
 
@@ -819,13 +799,10 @@ def test_decode_audio_variable_blocksize_stream():
                 msb(pb, *cw1[next(it)])
         pkts.append(pb.getvalue())
 
-    stream = _ogg_page(ident, _lacing(ident), 0x02, 3, 0)
-    stream += _ogg_page(comment + setup,
-                        _lacing(comment) + _lacing(setup), 0x00, 3, 1)
-    lac = []
-    for p in pkts:
-        lac += _lacing(p)
-    stream += _ogg_page(b"".join(pkts), lac, 0x04, 3, 2)
+    stream = V.ogg_page(ident, V.ogg_lacing(ident), 0x02, 0, 3, 0)
+    stream += V.ogg_page(comment + setup, V.ogg_lacing(comment, setup),
+                         0x00, 0, 3, 1)
+    stream += V.ogg_page(b"".join(pkts), V.ogg_lacing(*pkts), 0x04, 0, 3, 2)
 
     rate, pcm = V.decode_audio(stream)
     assert rate == 8000 and len(pcm) == 1
