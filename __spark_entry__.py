@@ -15,6 +15,7 @@ deterministic fixture.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -29,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the star-join revenue rollup (Catalyst join ordering +
     broadcast dims + decimal-exact aggregation) at sf0.001."""
     return registry.queries()["q_star_join_revenue"](
-        spark, "/root/testdata/sf0.001"
+        registry.prepare(spark), "/root/testdata/sf0.001"
     )
 
 
@@ -84,9 +85,20 @@ def priority_order() -> list[str]:
     return sorted(registry.queries(), key=lambda n: green.get(n, -1))
 
 
+def _prepared(fn: registry.QueryFn) -> registry.QueryFn:
+    """``fn`` on a session with the registry's conf pinned: the
+    driver hands in its own session, which need not pin UTC."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(registry.prepare(spark), sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, registry.QueryFn]:
     live = registry.queries()
-    return {name: live[name] for name in priority_order()}
+    return {name: _prepared(live[name]) for name in priority_order()}
 
 
 def oracle_sql() -> dict[str, str]:

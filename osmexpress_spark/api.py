@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from .operators import edges as edges_mod
 from .operators.extract import ExtractResult, extract
 from .spatial import Region
+from .store import SnapshotStore, read_parquet
 
 CORE_TABLES = ("locations", "nodes", "ways", "relations")
 EDGE_TABLES = ("node_way", "node_relation", "way_relation", "relation_relation")
@@ -48,7 +49,7 @@ class Dataset:
         return os.path.join(self.path, name)
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._table_path(name))
+        return read_parquet(self.spark, self._table_path(name))
 
     def locations(self) -> DataFrame:
         return self.table("locations")
@@ -130,8 +131,6 @@ class Dataset:
         if os.path.isdir(vdir) and any(
             f.startswith("v") and f.endswith(".json") for f in os.listdir(vdir)
         ):
-            from .store import SnapshotStore
-
             live = SnapshotStore(self.spark, self.path).metadata()
             live = {k: v for k, v in live.items() if k != "committed_at"}
             return {**static, **live}

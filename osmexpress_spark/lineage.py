@@ -20,11 +20,13 @@ r11 verdict flagged for cluster scale:
   cluster deployments should set a checkpoint dir.
 
 * **Block hygiene** (ADVICE r11): checkpointed blocks are freed only
-  when the JVM object is garbage-collected.  Driver loops that chain
-  one cut per round (kcenter) can call `release()` on the superseded
-  round once its successor is materialized.  `release()` is
-  best-effort: it must only be called when the frame's data can no
-  longer be needed (a cut frame has no lineage to recompute from).
+  when the JVM object is garbage-collected, and reliable-checkpoint
+  files not even then by default.  Driver loops that chain one cut per
+  round (kcenter) can call `release()` on the superseded round once its
+  successor is materialized; it frees the blocks or deletes the files.
+  `release()` is best-effort: it must only be called when the frame's
+  data can no longer be needed (a cut frame has no lineage to
+  recompute from).
 
 Config (all scale-dependent knobs parameterised per the bench rules;
 local defaults keep the sf0.1 plans bit-identical to r11):
@@ -125,17 +127,25 @@ def fan_out(df: DataFrame) -> DataFrame:
 
 
 def release(df: DataFrame) -> None:
-    """Best-effort free of a cut frame's storage blocks.
+    """Best-effort free of a cut frame's storage: its blocks (local
+    cut) or its checkpoint-dir files (reliable cut).
 
     Only call when the frame (and everything derived solely from it
     that is not itself materialized) is no longer needed: a cut frame
-    has no lineage, so released blocks cannot be recomputed.  Failures
-    are swallowed — the ContextCleaner frees the blocks on GC anyway;
-    this just makes driver loops (one cut per round) not accumulate
-    O(rounds) of superseded block sets while they run.
+    has no lineage, so released data cannot be recomputed.  Failures
+    are swallowed — the ContextCleaner frees the blocks on GC anyway
+    (checkpoint files only with ``spark.cleaner.referenceTracking.
+    cleanCheckpoints``); this just makes driver loops (one cut per
+    round) not accumulate O(rounds) of superseded cuts while they run.
     """
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        plan.rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.unpersist(False)
+        ckpt = rdd.getCheckpointFile()
+        if ckpt.isDefined():
+            jvm = df.sparkSession.sparkContext._jvm
+            path = jvm.org.apache.hadoop.fs.Path(ckpt.get())
+            conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+            path.getFileSystem(conf).delete(path, True)
     except Exception:
         pass

@@ -59,9 +59,9 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # defensive: oracle parity requires UTC literal parsing even when the
-    # caller's session didn't pin it (runtime-settable conf).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Fixture table ``name``. Oracle parity needs the session conf in
+    `session.QUERY_CONF` (UTC literal parsing, nanos as long), pinned
+    by `get_spark` or `registry.prepare`, never here."""
     if name == "events":
         return events(spark, sf_dir)
     df = _ntz_to_ltz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
@@ -82,13 +82,12 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-1 events.parquet stored `ts` as parquet TIMESTAMP(NANOS),
     which the Spark vectorized reader rejects outright: read nanos as
-    long (legacy conf, runtime-settable) and convert with integer
+    long (legacy conf, in `session.QUERY_CONF`) and convert with integer
     arithmetic — `ts` values (~1.7e18 ns) overflow double precision, so
     the division must be integral; DuckDB truncates TIMESTAMP_NS to
     micros, matching `ts DIV 1000` exactly. Round-2 testdata writes
     micros without a timezone annotation instead — normalize the
     resulting TIMESTAMP_NTZ to LTZ (same int64, see _ntz_to_ltz)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn(

@@ -879,8 +879,8 @@ STREAM_GAP_US = 30 * 60 * 1_000_000
 def _events_stream(spark, sf_dir):
     """events.parquet as a file-source stream with a proper timestamp
     `ts`. The raw file stores ts as nanos — read it as long (legacy
-    conf) and convert, so the stream reader schema matches the file."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    conf, in `session.QUERY_CONF`) and convert, so the stream reader
+    schema matches the file."""
     raw_schema = spark.read.parquet(sf_dir + "/events.parquet").schema
     stream = (
         spark.readStream.schema(raw_schema)

@@ -7,7 +7,12 @@ defaults here are scale-aware:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) —
   at 100 TB the static `shuffle.partitions` guess is always wrong, AQE
   fixes it after the first map stage.
-- UTC session timezone so timestamps hash-match DuckDB oracles.
+- `QUERY_CONF`: the UTC session timezone, so timestamps hash-match
+  DuckDB oracles, and parquet TIMESTAMP(NANOS) read as long (round-1
+  testdata wrote `events.ts` that way; `queries.events` converts it).
+  Query functions never write session conf: they run 4-way concurrently
+  in one session. A session built elsewhere gets these pinned once by
+  `registry.prepare` where it is handed to the registry.
 - Arrow enabled for the (rare) Pandas-UDF paths.
 - `shuffle.partitions` defaults to the local core count; on a real
   cluster set it ~2-3x total cores (AQE coalesces the excess).
@@ -20,6 +25,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# runtime conf every registered query relies on
+QUERY_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 
 def get_spark(
@@ -46,7 +57,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Parquet scans: keep row groups prunable and reads vectorized.
@@ -56,6 +66,6 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", worker_pp)
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**QUERY_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

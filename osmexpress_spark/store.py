@@ -33,6 +33,16 @@ Two write granularities:
   triggers compaction back into a sorted base (OPTIMIZE analog), so
   read amplification is capped.
 
+Building a read runs no Spark job. A bare `spark.read.parquet(dir)`
+runs one job per directory only to read a footer for the schema: 2L + 1
+of them for a table at L layers, before the read's own jobs. Every store
+file is written by Spark, whose footers carry the exact Spark schema
+under `org.apache.spark.sql.parquet.row.metadata`, the key Spark's own
+inference reads. `read_parquet` takes it from the directory's first
+data file on the driver (pyarrow, under 1 ms) and hands it to
+`spark.read.schema(...)`. A directory whose footer lacks the key (a
+non-Spark writer) falls back to the inferring read.
+
 At production scale swap this for Delta/Iceberg — the engine only uses
 `read_table`/`commit`/`merge_commit`/`metadata`, which map 1:1.
 """
@@ -45,8 +55,36 @@ import tempfile
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema stored in the footer of ``path``'s first data
+    file, in the order Spark's listing sorts them (names starting with
+    ``_`` or ``.`` are not data); None when there is no such file or
+    its footer carries no Spark schema."""
+    try:
+        first = min(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+        meta = pq.read_schema(os.path.join(path, first)).metadata or {}
+        return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    except (OSError, KeyError, ValueError):
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job:
+    the schema comes from the first footer on the driver, the same file
+    and key Spark's inference reads, so the frame is identical. A
+    directory without a Spark footer schema is read inferring."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 @dataclass
@@ -103,6 +141,9 @@ class SnapshotStore:
         return sorted(self._manifest(version)["tables"])
 
     # --- read path ----------------------------------------------------------
+    def _read(self, rel: str) -> DataFrame:
+        return read_parquet(self.spark, os.path.join(self.root, rel))
+
     def _resolve(self, entry) -> DataFrame:
         """Entry -> DataFrame. A string entry is a plain directory; a
         dict entry is a merge-on-read table: base plus ordered delta
@@ -111,10 +152,16 @@ class SnapshotStore:
         keys, and a layer's upsert rows survive only while no later
         layer re-touches their key. Layers are diff-sized, so both
         folding joins broadcast: the base scan stays a single
-        shuffle-free pass."""
+        shuffle-free pass.
+
+        Building the frame runs no Spark job: every directory (the base,
+        each layer's ``upserts`` and ``changed``, a string entry) is read
+        through `read_parquet` with the schema of its own footer, so the
+        per-file ``unionByName`` alignment below is unchanged; a footer
+        without a Spark schema falls back to an inferring read."""
         if isinstance(entry, str):
-            return self.spark.read.parquet(os.path.join(self.root, entry))
-        base = self.spark.read.parquet(os.path.join(self.root, entry["base"]))
+            return self._read(entry)
+        base = self._read(entry["base"])
         layers = entry.get("layers", [])
         if not layers:
             return base
@@ -123,14 +170,12 @@ class SnapshotStore:
         ups = None
         for rank, layer in enumerate(layers):
             c = (
-                self.spark.read.parquet(os.path.join(self.root, layer["changed"]))
+                self._read(layer["changed"])
                 .withColumnRenamed("key", key)
                 .withColumn("__layer", F.lit(rank))
             )
             changed = c if changed is None else changed.unionByName(c)
-            u = self.spark.read.parquet(
-                os.path.join(self.root, layer["upserts"])
-            ).withColumn("__layer", F.lit(rank))
+            u = self._read(layer["upserts"]).withColumn("__layer", F.lit(rank))
             ups = u if ups is None else ups.unionByName(u)
         winner = changed.groupBy(key).agg(F.max("__layer").alias("__layer"))
         survivors = ups.join(F.broadcast(winner), [key, "__layer"]).drop("__layer")
@@ -262,13 +307,16 @@ class SnapshotStore:
             layers = list(entry.get("layers", []))
             if len(layers) + 1 > max_layers:
                 # compact: fold current state + this batch into a new base
+                current = self._resolve(entry)
                 folded = (
-                    self._resolve(entry)
-                    .join(
+                    current.join(
                         F.broadcast(spec.changed_keys.select(spec.key)),
                         spec.key,
                         "left_anti",
                     )
+                    # the USING join moves the key first: keep the
+                    # table's column order in the new base
+                    .select(current.columns)
                     .unionByName(spec.upserts)
                 )
                 rel = self._write_base(

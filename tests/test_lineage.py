@@ -75,3 +75,36 @@ def test_cut_eager_conf_defers_materialization(spark):
         lineage.release(c)
     finally:
         spark.conf.unset("spark.osmexpress_spark.cut.eager")
+
+
+def _checkpoint_rdd_dirs(root) -> set[str]:
+    return {r for r, _, _ in os.walk(root) if os.path.basename(r).startswith("rdd-")}
+
+
+def test_release_deletes_reliable_checkpoint_files(spark):
+    """On the reliable branch a cut's data lives in checkpoint-dir
+    files, not blocks: release() deletes the superseded cut's files and
+    leaves its successor readable."""
+    d = tempfile.mkdtemp(prefix="osmx_ckpt_")
+    old_dir = spark.sparkContext._jsc.sc().getCheckpointDir()
+    spark.sparkContext.setCheckpointDir(d)
+    spark.conf.set("spark.osmexpress_spark.cut.maxLocalBytes", "0")
+    try:
+        first = lineage.cut(
+            spark.range(500).select("id", (F.col("id") * 3).alias("v"))
+        )
+        first_dirs = _checkpoint_rdd_dirs(d)
+        assert first_dirs, "reliable checkpoint wrote no files"
+        second = lineage.cut(first.select("id", (F.col("v") + 1).alias("v")))
+        second_dirs = _checkpoint_rdd_dirs(d) - first_dirs
+        assert second_dirs
+        lineage.release(first)
+        assert not any(os.path.exists(p) for p in first_dirs)
+        assert all(os.path.isdir(p) for p in second_dirs)
+        assert [r["v"] for r in second.orderBy("id").collect()] == [
+            i * 3 + 1 for i in range(500)
+        ]
+    finally:
+        spark.conf.unset("spark.osmexpress_spark.cut.maxLocalBytes")
+        if old_dir.isDefined():
+            spark.sparkContext.setCheckpointDir(old_dir.get())

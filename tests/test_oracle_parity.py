@@ -118,8 +118,10 @@ def test_all_queries_match_oracle_bulk(spark, con):
         for name in sorted(ALL_ORACLES)
     ]
     # queries run 4 at a time in one session, so none may leave session
-    # state behind: a fixed-name temp view is a race between them
+    # state behind: a fixed-name temp view or a conf write is a race
+    # between them
     tables_before = spark.catalog.listTables()
+    conf_before = spark.conf.getAll
 
     def one(item):
         name, fn, sql = item
@@ -133,6 +135,7 @@ def test_all_queries_match_oracle_bulk(spark, con):
         failures = [r for r in pool.map(one, items) if r]
     assert not failures, "\n".join(failures)
     assert spark.catalog.listTables() == tables_before
+    assert spark.conf.getAll == conf_before
 
 
 @pytest.mark.slow

@@ -28,6 +28,7 @@ import pytest  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
 from osmexpress_spark import registry  # noqa: E402
+from osmexpress_spark.session import QUERY_CONF  # noqa: E402
 
 # Queries whose semantics are not expressible as deterministic ANSI SQL;
 # each carries a pointer to the golden test that pins it instead.
@@ -181,3 +182,16 @@ def test_staged_queries_are_oracled_and_kept_out_of_the_contract():
 def test_run_times_a_registered_query(spark):
     wall = registry.run(spark, "q_projection", "/root/testdata/sf0.001")
     assert wall > 0
+
+
+def test_driver_contract_pins_query_conf(spark):
+    """The driver hands in its own session, which need not pin UTC or
+    read nanos as long: the contract's query functions pin both, and
+    a query function itself writes no conf."""
+    own = spark.newSession()
+    own.conf.set("spark.sql.session.timeZone", "America/New_York")
+    own.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    registry.queries()["q_projection"](own, "/root/testdata/sf0.001")
+    assert own.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    entry.queries()["q_projection"](own, "/root/testdata/sf0.001")
+    assert {k: own.conf.get(k) for k in QUERY_CONF} == QUERY_CONF

@@ -7,13 +7,15 @@ is hit, and keep snapshot-isolation/time-travel semantics."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from osmexpress_spark import schemas, testing
 from osmexpress_spark.operators import edges as edges_mod
 from osmexpress_spark.operators.update import apply_changes
-from osmexpress_spark.store import DEFAULT_SORT, SnapshotStore
+from osmexpress_spark.store import DEFAULT_SORT, SnapshotStore, read_parquet
 from osmexpress_spark.streaming import replication
 from tests.test_update import python_model_apply, state_from_rows
 
@@ -166,3 +168,108 @@ def test_double_publish_same_version_fails_loudly(fresh):
         store._publish(manifest, v)
     # the original manifest is untouched
     assert store._manifest(v) == manifest
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobpin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "store job pin")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _model_edges(state):
+    """The four edge tables as the explode of the model's forward
+    arrays (operators/edges.py), as sets of column-ordered tuples."""
+    out = {"node_way": {(n, wid) for wid, nodes, _ in state["ways"].values()
+                        for n in nodes}}
+    for name, kind in (("node_relation", "node"), ("way_relation", "way"),
+                       ("relation_relation", "relation")):
+        out[name] = {(ref, rid) for rid, members, _ in state["relations"].values()
+                     for ref, typ, _role in members if typ == kind}
+    return out
+
+
+def _check_snapshot(spark, store, state, every_dir=False):
+    """Rows equal the model, schemas equal Spark's inference, and
+    building the merge-on-read frames runs no job. ``every_dir`` also
+    compares the footer schema of every base and layer directory."""
+    frames, jobs = _jobs(spark, store.read_all)
+    assert jobs == 0
+    for name in store.tables():
+        _, jobs = _jobs(spark, lambda: store.read_table(name))
+        assert jobs == 0, name
+        entry = store._manifest()["tables"][name]
+        base = os.path.join(store.root, entry["base"] if isinstance(entry, dict) else entry)
+        assert frames[name].schema == spark.read.parquet(base).schema, name
+        if every_dir and isinstance(entry, dict):
+            for layer in entry["layers"]:
+                for d in layer.values():
+                    d = os.path.join(store.root, d)
+                    assert read_parquet(spark, d).schema == spark.read.parquet(d).schema
+    assert {
+        r.id: (r.id, r.lon, r.lat, r.version, r.cell)
+        for r in frames["locations"].collect()
+    } == state["locations"]
+    assert {
+        r.id: (r.id, dict(r.tags)) for r in frames["nodes"].collect()
+    } == state["nodes"]
+    assert {
+        r.id: (r.id, list(r.nodes), dict(r.tags)) for r in frames["ways"].collect()
+    } == state["ways"]
+    assert {
+        r.id: (r.id, [tuple(m) for m in r.members], dict(r.tags))
+        for r in frames["relations"].collect()
+    } == state["relations"]
+    for name, want in _model_edges(state).items():
+        got = list(map(tuple, frames[name].collect()))
+        assert len(got) == len(want) and set(got) == want, name
+
+
+def test_merge_on_read_fold_schema_and_job_pin(spark, tmp_path):
+    """Default-tier check of the merge-on-read fold at 0, 1 and 3
+    layers and after one forced compaction, plus the job pin: building
+    a read runs no job, and a point lookup's job count does not grow
+    with layer depth."""
+    rows = testing.generate(n_nodes=100, seed=3)
+    batches = testing.generate_changes(rows, n_batches=4, per_batch=12, seed=5)
+    dfs = testing.to_dataframes(spark, rows)
+    dfs.update(edges_mod.derive_all(dfs["ways"], dfs["relations"]))
+    store = SnapshotStore.create(
+        spark, str(tmp_path / "ds"), dfs, metadata={"seqnum": 0},
+        sort_by=DEFAULT_SORT,
+    )
+    state = state_from_rows(rows)
+    probe = rows["locations"][0][0]
+
+    def lookup_jobs():
+        _, jobs = _jobs(spark, lambda: store.read_table("locations").where(
+            F.col("id") == probe).collect())
+        return jobs
+
+    def layers():
+        entry = store._manifest()["tables"]["locations"]
+        return len(entry["layers"]) if isinstance(entry, dict) else 0
+
+    _check_snapshot(spark, store, state)
+    lookup = {}
+    for i, batch in enumerate(batches, start=1):
+        result = apply_changes(
+            store.read_all(), spark.createDataFrame(batch, schemas.CHANGES_SCHEMA)
+        )
+        store.merge_commit(
+            result.merge_specs, metadata={"seqnum": i}, sort_by=DEFAULT_SORT,
+            # the fourth batch forces a compaction of every 3-layer table
+            max_layers=2 if i == 4 else 16,
+        )
+        state = python_model_apply(state, batch)
+        assert layers() == (i if i < 4 else 0)
+        if i in (1, 3, 4):
+            _check_snapshot(spark, store, state, every_dir=i == 3)
+        if i in (1, 3):
+            lookup[i] = lookup_jobs()
+    assert lookup[1] == lookup[3], lookup
