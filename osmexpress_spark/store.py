@@ -28,20 +28,21 @@ Two write granularities:
   touching only dirtied LMDB pages per minutely diff
   (`src/update.cpp:116-125`): write cost is O(|batch|), never
   O(table) — the property that matters when the table is 100 TB and
-  the batch is a minutely diff. Readers fold layers back in with
-  broadcast joins (layers are diff-sized); a bounded layer count
+  the batch is a minutely diff. Readers fold layers back in with ONE
+  broadcast join over three scans, whatever the layer count: the
+  base, every layer's `upserts` as one relation and every layer's
+  `changed` keys as another (see `_fold`); a bounded layer count
   triggers compaction back into a sorted base (OPTIMIZE analog), so
   read amplification is capped.
 
 Building a read runs no Spark job. A bare `spark.read.parquet(dir)`
-runs one job per directory only to read a footer for the schema: 2L + 1
-of them for a table at L layers, before the read's own jobs. Every store
-file is written by Spark, whose footers carry the exact Spark schema
-under `org.apache.spark.sql.parquet.row.metadata`, the key Spark's own
-inference reads. `read_parquet` takes it from the directory's first
-data file on the driver (pyarrow, under 1 ms) and hands it to
-`spark.read.schema(...)`. A directory whose footer lacks the key (a
-non-Spark writer) falls back to the inferring read.
+runs a job only to read a footer for the schema. Every store file is
+written by Spark, whose footers carry the exact Spark schema under
+`org.apache.spark.sql.parquet.row.metadata`, the key Spark's own
+inference reads. `read_parquet` takes it from the first data file on
+the driver (pyarrow, under 1 ms per directory) and hands it to
+`spark.read.schema(...)`. Directories whose footers lack the key (a
+non-Spark writer) or disagree fall back to the inferring read.
 
 At production scale swap this for Delta/Iceberg — the engine only uses
 `read_table`/`commit`/`merge_commit`/`metadata`, which map 1:1.
@@ -54,9 +55,10 @@ import os
 import tempfile
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -77,14 +79,53 @@ def _footer_schema(path: str) -> T.StructType | None:
         return None
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without the schema-inference job:
-    the schema comes from the first footer on the driver, the same file
-    and key Spark's inference reads, so the frame is identical. A
-    directory without a Spark footer schema is read inferring."""
-    schema = _footer_schema(path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` as one relation, without the
+    schema-inference job: the schema comes from the first footer of
+    each directory on the driver, the same file and key Spark's
+    inference reads, so the frame is identical. When a directory has no
+    Spark footer schema, or the directories' schemas differ, the read
+    infers instead, merging every file's schema when there are several
+    directories."""
+    schema = _footer_schema(paths[0])
+    if schema is not None and all(_footer_schema(p) == schema for p in paths[1:]):
+        return spark.read.schema(schema).parquet(*paths)
+    return spark.read.option("mergeSchema", len(paths) > 1).parquet(*paths)
+
+
+def _layer_of_file() -> Column:
+    """The version ``N`` of the ``v{N}_layer`` directory (written by
+    `SnapshotStore.merge_commit`) that holds the row's file. ``N`` rises
+    with the manifest's layer order, which is all the fold needs. The
+    pattern is anchored to the end of the path, so a store root that
+    itself contains such a name does not match."""
+    return F.regexp_extract(
+        F.col("_metadata.file_path"), r"/v(\d+)_layer/[^/]+/[^/]+$", 1
+    ).cast("int")
+
+
+def _fold(base: DataFrame, upserts: list[DataFrame], changed: list[DataFrame],
+          key: str) -> DataFrame:
+    """Merge-on-read fold: the newest layer that touched a key owns it.
+
+    ``upserts`` carry their layer in ``__layer``; ``changed`` are
+    ``(__key, __by)`` pairs, the keys layer ``__by`` touched. A row of
+    ``base ∪ upserts`` (the base at layer -1) survives unless a NEWER
+    layer touched its key: one LEFT OUTER join on ``key == __key AND
+    __by > __layer`` keeps the rows it found no match for. No aggregate
+    runs, and a key listed twice changes nothing. ``changed`` is
+    diff-sized and broadcast, so the base stays one streamed scan with
+    no shuffle. A ``left_anti`` join would say the same, but Spark pushes
+    an anti join through the union into every branch (one broadcast per
+    branch); the outer join and ``IS NULL`` filter stay above it."""
+    rows = reduce(DataFrame.unionByName, upserts, base.withColumn("__layer", F.lit(-1)))
+    by = reduce(DataFrame.unionByName, changed)
+    hit = (rows[key] == by["__key"]) & (by["__by"] > rows["__layer"])
+    return (
+        rows.join(F.broadcast(by), hit, "left_outer")
+        .where(by["__by"].isNull())
+        .select(base.columns)
+    )
 
 
 @dataclass
@@ -141,51 +182,39 @@ class SnapshotStore:
         return sorted(self._manifest(version)["tables"])
 
     # --- read path ----------------------------------------------------------
-    def _read(self, rel: str) -> DataFrame:
-        return read_parquet(self.spark, os.path.join(self.root, rel))
+    def _read(self, *rels: str) -> DataFrame:
+        return read_parquet(self.spark, *(os.path.join(self.root, r) for r in rels))
+
+    def _layer_scans(self, entry: dict) -> tuple[list[DataFrame], list[DataFrame]]:
+        """The `_fold` inputs of ``entry``'s layers: all ``upserts``
+        directories as one scan and all ``changed`` directories as
+        another, each row's layer taken from its file's path; empty
+        lists when there are no layers."""
+        layers = entry.get("layers", [])
+        if not layers:
+            return [], []
+        upserts = self._read(*(la["upserts"] for la in layers))
+        changed = self._read(*(la["changed"] for la in layers))
+        return (
+            [upserts.withColumn("__layer", _layer_of_file())],
+            [changed.select(F.col("key").alias("__key"), _layer_of_file().alias("__by"))],
+        )
 
     def _resolve(self, entry) -> DataFrame:
         """Entry -> DataFrame. A string entry is a plain directory; a
         dict entry is a merge-on-read table: base plus ordered delta
-        layers. Fold-in rule (per merge key): the highest layer that
-        touched a key owns it — base rows survive only for untouched
-        keys, and a layer's upsert rows survive only while no later
-        layer re-touches their key. Layers are diff-sized, so both
-        folding joins broadcast: the base scan stays a single
-        shuffle-free pass.
+        layers, folded by `_fold` (the newest layer that touched a key
+        owns it) as one broadcast join over three scans at any layer
+        count.
 
-        Building the frame runs no Spark job: every directory (the base,
-        each layer's ``upserts`` and ``changed``, a string entry) is read
-        through `read_parquet` with the schema of its own footer, so the
-        per-file ``unionByName`` alignment below is unchanged; a footer
-        without a Spark schema falls back to an inferring read."""
+        Building the frame runs no Spark job: every scan takes its
+        schema from the footers on the driver (`read_parquet`)."""
         if isinstance(entry, str):
             return self._read(entry)
         base = self._read(entry["base"])
-        layers = entry.get("layers", [])
-        if not layers:
+        if not entry.get("layers"):
             return base
-        key = entry["key"]
-        changed = None
-        ups = None
-        for rank, layer in enumerate(layers):
-            c = (
-                self._read(layer["changed"])
-                .withColumnRenamed("key", key)
-                .withColumn("__layer", F.lit(rank))
-            )
-            changed = c if changed is None else changed.unionByName(c)
-            u = self._read(layer["upserts"]).withColumn("__layer", F.lit(rank))
-            ups = u if ups is None else ups.unionByName(u)
-        winner = changed.groupBy(key).agg(F.max("__layer").alias("__layer"))
-        survivors = ups.join(F.broadcast(winner), [key, "__layer"]).drop("__layer")
-        return (
-            base.join(F.broadcast(winner.select(key)), key, "left_anti")
-            # a USING join moves the key column first; restore the
-            # table's canonical column order
-            .select(base.columns)
-            .unionByName(survivors.select(base.columns))
-        )
+        return _fold(base, *self._layer_scans(entry), entry["key"])
 
     def read_table(self, name: str, version: int | None = None) -> DataFrame:
         """Snapshot read: resolves the manifest once; the files it points
@@ -306,18 +335,17 @@ class SnapshotStore:
                 entry = {"base": entry, "key": spec.key, "layers": []}
             layers = list(entry.get("layers", []))
             if len(layers) + 1 > max_layers:
-                # compact: fold current state + this batch into a new base
-                current = self._resolve(entry)
-                folded = (
-                    current.join(
-                        F.broadcast(spec.changed_keys.select(spec.key)),
-                        spec.key,
-                        "left_anti",
-                    )
-                    # the USING join moves the key first: keep the
-                    # table's column order in the new base
-                    .select(current.columns)
-                    .unionByName(spec.upserts)
+                # compact: fold the layers and this batch, as the
+                # newest layer, into a new base
+                upserts, changed = self._layer_scans(entry)
+                folded = _fold(
+                    self._read(entry["base"]),
+                    upserts + [spec.upserts.withColumn("__layer", F.lit(new_version))],
+                    changed + [spec.changed_keys.select(
+                        F.col(spec.key).alias("__key"),
+                        F.lit(new_version).alias("__by"),
+                    )],
+                    spec.key,
                 )
                 rel = self._write_base(
                     folded, name, new_version, sort_by, partitions

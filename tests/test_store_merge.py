@@ -6,16 +6,28 @@ is hit, and keep snapshot-isolation/time-travel semantics."""
 
 from __future__ import annotations
 
+import copy
+import datetime
 import os
+import shutil
 import uuid
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmexpress_spark import schemas, testing
 from osmexpress_spark.operators import edges as edges_mod
-from osmexpress_spark.operators.update import apply_changes
-from osmexpress_spark.store import DEFAULT_SORT, SnapshotStore, read_parquet
+from osmexpress_spark.operators.update import apply_changes, merge_specs_for
+from osmexpress_spark.store import (
+    DEFAULT_SORT,
+    SnapshotStore,
+    _footer_schema,
+    read_parquet,
+)
 from osmexpress_spark.streaming import replication
 from tests.test_update import python_model_apply, state_from_rows
 
@@ -194,16 +206,17 @@ def _model_edges(state):
     return out
 
 
-def _check_snapshot(spark, store, state, every_dir=False):
-    """Rows equal the model, schemas equal Spark's inference, and
-    building the merge-on-read frames runs no job. ``every_dir`` also
-    compares the footer schema of every base and layer directory."""
-    frames, jobs = _jobs(spark, store.read_all)
+def _check_snapshot(spark, store, state, every_dir=False, version=None):
+    """Rows of ``version`` (default: the latest) equal the model,
+    schemas equal Spark's inference, and building the merge-on-read
+    frames runs no job. ``every_dir`` also compares the footer schema
+    of every base and layer directory."""
+    frames, jobs = _jobs(spark, lambda: store.read_all(version))
     assert jobs == 0
-    for name in store.tables():
-        _, jobs = _jobs(spark, lambda: store.read_table(name))
+    for name in store.tables(version):
+        _, jobs = _jobs(spark, lambda: store.read_table(name, version))
         assert jobs == 0, name
-        entry = store._manifest()["tables"][name]
+        entry = store._manifest(version)["tables"][name]
         base = os.path.join(store.root, entry["base"] if isinstance(entry, dict) else entry)
         assert frames[name].schema == spark.read.parquet(base).schema, name
         if every_dir and isinstance(entry, dict):
@@ -211,6 +224,11 @@ def _check_snapshot(spark, store, state, every_dir=False):
                 for d in layer.values():
                     d = os.path.join(store.root, d)
                     assert read_parquet(spark, d).schema == spark.read.parquet(d).schema
+    _check_rows(frames, state)
+
+
+def _check_rows(frames, state):
+    """Every table of ``frames`` holds the model's rows."""
     assert {
         r.id: (r.id, r.lon, r.lat, r.version, r.cell)
         for r in frames["locations"].collect()
@@ -230,13 +248,26 @@ def _check_snapshot(spark, store, state, every_dir=False):
         assert len(got) == len(want) and set(got) == want, name
 
 
+# Executed-plan shape of a folded table read at any layer count: the
+# base, all `upserts` and all `changed` directories as three scans, one
+# broadcast, no aggregate and no shuffle.
+FOLD_PLAN = {"FileScan": 3, "BroadcastExchange": 1, "HashAggregate": 0,
+             "Exchange hashpartitioning": 0}
+
+
+def _plan_counts(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {node: plan.count(node) for node in FOLD_PLAN}
+
+
 def test_merge_on_read_fold_schema_and_job_pin(spark, tmp_path):
-    """Default-tier check of the merge-on-read fold at 0, 1 and 3
-    layers and after one forced compaction, plus the job pin: building
-    a read runs no job, and a point lookup's job count does not grow
-    with layer depth."""
+    """Default-tier check of the merge-on-read fold at 0, 1, 3 and 16
+    layers and after the compaction the 17th batch triggers, plus the
+    pins: building a read runs no job; a lookup of a key the newest
+    layer changed runs exactly 2 jobs (the broadcast and the result);
+    and every layered table's executed plan is `FOLD_PLAN`."""
     rows = testing.generate(n_nodes=100, seed=3)
-    batches = testing.generate_changes(rows, n_batches=4, per_batch=12, seed=5)
+    batches = testing.generate_changes(rows, n_batches=17, per_batch=12, seed=5)
     dfs = testing.to_dataframes(spark, rows)
     dfs.update(edges_mod.derive_all(dfs["ways"], dfs["relations"]))
     store = SnapshotStore.create(
@@ -244,32 +275,233 @@ def test_merge_on_read_fold_schema_and_job_pin(spark, tmp_path):
         sort_by=DEFAULT_SORT,
     )
     state = state_from_rows(rows)
-    probe = rows["locations"][0][0]
 
-    def lookup_jobs():
-        _, jobs = _jobs(spark, lambda: store.read_table("locations").where(
+    def lookup_jobs(batch):
+        probe = min(r[3] for r in batch if r[2] == "node")
+        got, jobs = _jobs(spark, lambda: store.read_table("locations").where(
             F.col("id") == probe).collect())
+        assert [tuple(r) for r in got] == [
+            v for k, v in state["locations"].items() if k == probe]
         return jobs
 
     def layers():
-        entry = store._manifest()["tables"]["locations"]
-        return len(entry["layers"]) if isinstance(entry, dict) else 0
+        return {name: len(e["layers"]) if isinstance(e, dict) else 0
+                for name, e in store._manifest()["tables"].items()}
 
     _check_snapshot(spark, store, state)
-    lookup = {}
+    lookup, plans = {}, {}
     for i, batch in enumerate(batches, start=1):
         result = apply_changes(
             store.read_all(), spark.createDataFrame(batch, schemas.CHANGES_SCHEMA)
         )
         store.merge_commit(
             result.merge_specs, metadata={"seqnum": i}, sort_by=DEFAULT_SORT,
-            # the fourth batch forces a compaction of every 3-layer table
-            max_layers=2 if i == 4 else 16,
         )
         state = python_model_apply(state, batch)
-        assert layers() == (i if i < 4 else 0)
-        if i in (1, 3, 4):
+        # the default max_layers=16: the 17th batch compacts locations
+        assert layers()["locations"] == (i if i <= 16 else 0)
+        if i in (1, 3, 17):
             _check_snapshot(spark, store, state, every_dir=i == 3)
-        if i in (1, 3):
-            lookup[i] = lookup_jobs()
-    assert lookup[1] == lookup[3], lookup
+        if i in (1, 3, 16):
+            lookup[i] = lookup_jobs(batch)
+            plans[i] = {name: _plan_counts(store.read_table(name))
+                        for name, n in layers().items() if n}
+    assert lookup == {1: 2, 3: 2, 16: 2}, lookup
+    assert all(p == FOLD_PLAN for ps in plans.values() for p in ps.values()), plans
+    assert all(len(ps) >= 2 for ps in plans.values()), plans
+
+
+def _parent_fold(spark, store, entry):
+    """Reference fold, as written before the one-join rule: each layer
+    directory read on its own and ranked by manifest position, the
+    newest rank per key found by a max aggregate, and the base
+    anti-joined against the touched keys."""
+    def read(rel):
+        return read_parquet(spark, os.path.join(store.root, rel))
+
+    if isinstance(entry, str):
+        return read(entry)
+    base, key, layers = read(entry["base"]), entry["key"], entry["layers"]
+    if not layers:
+        return base
+    changed = reduce(DataFrame.unionByName, [
+        read(la["changed"]).withColumnRenamed("key", key).withColumn("__layer", F.lit(r))
+        for r, la in enumerate(layers)])
+    upserts = reduce(DataFrame.unionByName, [
+        read(la["upserts"]).withColumn("__layer", F.lit(r))
+        for r, la in enumerate(layers)])
+    winner = changed.groupBy(key).agg(F.max("__layer").alias("__layer"))
+    survivors = upserts.join(winner, [key, "__layer"]).select(base.columns)
+    return (base.join(winner.select(key), key, "left_anti")
+            .select(base.columns).unionByName(survivors))
+
+
+def _canon(value):
+    """A collected value as comparable plain data: maps as sorted item
+    tuples, rows and arrays as tuples."""
+    if isinstance(value, dict):
+        return tuple(sorted((k, _canon(v)) for k, v in value.items()))
+    if isinstance(value, (list, tuple)):
+        return tuple(_canon(v) for v in value)
+    return value
+
+
+def _rows(df):
+    return sorted(map(_canon, df.collect()), key=repr)
+
+
+def _stack_batches(rows):
+    """Five hand-made batches whose layers cover the fold's cases: node
+    ``a`` deleted by layer 1 and re-created by layer 3; node ``b``, way
+    ``w`` and relation ``rid`` touched in several layers (``w`` and the
+    new way own several `node_way` rows each); layer 2 only deletes, so
+    its `upserts` are empty; layer 4 deletes ``w``."""
+    tagged = [r[0] for r in rows["nodes"]]
+    plain = [r[0] for r in rows["locations"] if r[0] not in set(tagged)]
+    a, b, c, d = tagged[0], tagged[1], plain[0], plain[1]
+    w = next(r[0] for r in rows["ways"] if len(r[1]) >= 2)
+    new_way = max(r[0] for r in rows["ways"]) + 1
+    rid = rows["relations"][0][0]
+
+    def meta(v):
+        return (v, datetime.datetime(2026, 2, 1, 0, 0, v % 60), 7, 7, "stack")
+
+    def node(seq, action, nid, v, lon=None, lat=None, tags=None):
+        return (seq, action, "node", nid, action != "delete", lon, lat,
+                None, None, tags, meta(v))
+
+    def way(seq, action, wid, v, refs=None):
+        tags = None if action == "delete" else {"highway": f"v{v}"}
+        return (seq, action, "way", wid, action != "delete", None, None,
+                refs, None, tags, meta(v))
+
+    def rel(seq, action, v, members=None):
+        tags = None if action == "delete" else {"type": f"v{v}"}
+        return (seq, action, "relation", rid, action != "delete", None, None,
+                None, members, tags, meta(v))
+
+    return [
+        [node(1, "delete", a, 301), node(1, "modify", b, 302, 10, 20, {"k": "1"}),
+         way(1, "modify", w, 303, [c, d, b]),
+         rel(1, "modify", 304, [(b, "node", "via"), (w, "way", "outer")])],
+        [node(2, "delete", c, 305), node(2, "delete", d, 306)],
+        [node(3, "create", a, 307, 30, 40, {"k": "back"}),
+         node(3, "modify", b, 308, 11, 21, {}),
+         way(3, "modify", w, 309, [b, a]), way(3, "create", new_way, 310, [a, b, d])],
+        [node(4, "modify", b, 311, 12, 22, {"k": "4"}), way(4, "delete", w, 312),
+         rel(4, "modify", 313, [(a, "node", "via")])],
+        [node(5, "modify", b, 314, 13, 23, {"k": "5"}),
+         way(5, "modify", new_way, 315, [b, a]), rel(5, "delete", 316)],
+    ]
+
+
+@pytest.fixture(scope="module")
+def stack(spark, tmp_path_factory):
+    """A store after `_stack_batches`: batches 1-4 as layers through
+    `replication.apply_batch`; batch 5 through `merge_commit` with
+    ``max_layers=3``, which compacts the tables at 3 or more layers and
+    layers the rest. Returns (store, [(version, model state)])."""
+    rows = testing.generate(n_nodes=60, seed=21)
+    dfs = testing.to_dataframes(spark, rows)
+    dfs.update(edges_mod.derive_all(dfs["ways"], dfs["relations"]))
+    store = SnapshotStore.create(
+        spark, str(tmp_path_factory.mktemp("stack") / "ds"), dfs,
+        metadata={"seqnum": 0}, sort_by=DEFAULT_SORT,
+    )
+    states = [(store.latest_version(), state_from_rows(rows))]
+    *layered, last = _stack_batches(rows)
+    for batch in layered:
+        df = spark.createDataFrame(batch, schemas.CHANGES_SCHEMA)
+        assert replication.apply_batch(store, df, batch[0][0])
+        states.append((store.latest_version(),
+                       python_model_apply(copy.deepcopy(states[-1][1]), batch)))
+    specs, _ = merge_specs_for(spark.createDataFrame(last, schemas.CHANGES_SCHEMA))
+    v = store.merge_commit(specs, metadata={"seqnum": 5}, sort_by=DEFAULT_SORT,
+                           max_layers=3)
+    states.append((v, python_model_apply(copy.deepcopy(states[-1][1]), last)))
+    return store, states
+
+
+def test_fold_matches_model_and_parent_fold(spark, stack):
+    """Every version of the stack, time travel included, reads as the
+    model and as the reference fold; the compacted bases keep the
+    table's columns and their range layout."""
+    store, states = stack
+    before = store._manifest(states[4][0])["tables"]
+    locs = os.path.join(store.root, before["locations"]["layers"][1]["upserts"])
+    assert spark.read.parquet(locs).count() == 0  # the delete-only layer
+    for version, state in states:
+        _check_snapshot(spark, store, state, version=version)
+        for name, entry in store._manifest(version)["tables"].items():
+            assert _rows(store.read_table(name, version)) == _rows(
+                _parent_fold(spark, store, entry)), (name, version)
+
+    after = store._manifest()["tables"]
+    compacted = [n for n, e in after.items() if not e["layers"]]
+    assert {"locations", "nodes", "ways", "node_way"} <= set(compacted)
+    assert after["relations"]["layers"], "relations stays layered"
+    for name in compacted:
+        d = os.path.join(store.root, after[name]["base"])
+        key = DEFAULT_SORT[name]
+        files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        keys = [pq.read_table(os.path.join(d, f), columns=[key])[key].to_pylist()
+                for f in files]
+        assert read_parquet(spark, d).columns == store.read_table(name, 0).columns
+        # repartitionByRange + sortWithinPartitions: each file sorted,
+        # the files in key order
+        flat = [k for part in keys for k in part]
+        assert flat == sorted(flat) and len(files) > 1, name
+
+
+def _copy_store(spark, store, dest):
+    shutil.copytree(store.root, dest)
+    return SnapshotStore(spark, str(dest))
+
+
+def test_fold_layer_order_ignores_store_root(spark, stack, tmp_path):
+    """A layer's rank comes from its own ``v{N}_layer`` directory: a
+    store whose root has a space and a component named like a layer
+    directory reads every version as the model."""
+    store, states = stack
+    moved = _copy_store(spark, store, tmp_path / "v9_layer" / "a store")
+    for version, state in states:
+        _check_snapshot(spark, moved, state, version=version)
+
+
+def _arrow_rewrite(path):
+    """Rewrite a Spark-written parquet file with pyarrow, which stores
+    no Spark schema. Timestamps become UTC microseconds, as Spark
+    writes them: pyarrow reads Spark's INT96 as naive nanoseconds."""
+    def utc(typ):
+        if pa.types.is_timestamp(typ):
+            return pa.timestamp("us", "UTC")
+        if pa.types.is_struct(typ):
+            return pa.struct([f.with_type(utc(f.type)) for f in typ])
+        return typ
+
+    table = pq.read_table(path)
+    schema = pa.schema([f.with_type(utc(f.type)) for f in table.schema])
+    pq.write_table(table.cast(schema), path)
+
+
+def test_fold_reads_layer_without_spark_footer(spark, stack, tmp_path):
+    """A layer whose files carry no Spark schema (written by pyarrow)
+    is read through the inferring fallback, and every version still
+    reads as the model."""
+    store, states = stack
+    copy_ = _copy_store(spark, store, tmp_path / "ds")
+    for entry in copy_._manifest(states[4][0])["tables"].values():
+        for rel in entry["layers"][0].values():
+            d = os.path.join(copy_.root, rel)
+            for f in os.listdir(d):
+                path = os.path.join(d, f)
+                if f.startswith((".", "_")):
+                    os.remove(path)  # Spark's checksums of the old bytes
+                else:
+                    _arrow_rewrite(path)
+            assert _footer_schema(d) is None
+    for version, state in states:
+        frames = copy_.read_all(version)
+        assert {n: f.schema for n, f in frames.items()} == {
+            n: f.schema for n, f in store.read_all(version).items()}
+        _check_rows(frames, state)
