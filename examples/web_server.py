@@ -1,60 +1,25 @@
 """Parity with /root/reference/python/examples/web_server.py — serve
 element GeoJSON over HTTP from a dataset snapshot (stdlib http.server
 in place of Flask, which isn't in this environment; same URL shape:
-/node/ID /way/ID /relation/ID).
+/node/ID /way/ID /relation/ID). Each answer is one GeoJSON Feature from
+the CLI's `serve` server (`make_geojson_server`): 404 for an unknown
+id, 400 for any other path.
 
 Usage: python examples/web_server.py DATASET_DIR [PORT]
 """
 
-import json
 import sys
-from http.server import BaseHTTPRequestHandler, HTTPServer
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
-from pyspark.sql import functions as F
-
-from osmexpress_spark import functions as fn
 from osmexpress_spark import get_spark
-from osmexpress_spark.api import Dataset
+from osmexpress_spark.__main__ import make_geojson_server
 
 
 def main(dataset: str, port: int = 8000) -> None:
-    spark = get_spark(app_name="web_server")
-    ds = Dataset(spark, dataset)
-
-    def geojson(typ: str, eid: int) -> str | None:
-        one = F.col("id") == eid
-        if typ == "node":
-            rows = fn.node_geojson(
-                ds.locations().where(one), ds.nodes().where(one)
-            ).collect()
-        elif typ == "way":
-            rows = fn.way_geojson(ds.ways().where(one), ds.locations()).collect()
-        elif typ == "relation":
-            rows = fn.relation_geojson(
-                ds.relations(), ds.ways(), ds.locations(),
-                roots=ds.relations().where(one).select("id"),
-            ).collect()
-        else:
-            return None
-        return rows[0]["geometry"] if rows else None
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_GET(self):
-            parts = self.path.strip("/").split("/")
-            body = geojson(parts[0], int(parts[1])) if len(parts) == 2 else None
-            if body is None:
-                self.send_response(404)
-                self.end_headers()
-                return
-            self.send_response(200)
-            self.send_header("Content-Type", "application/geo+json")
-            self.end_headers()
-            self.wfile.write(body.encode())
-
-    print(f"serving {dataset} on :{port} — /node/ID /way/ID /relation/ID")
-    HTTPServer(("127.0.0.1", port), Handler).serve_forever()
+    srv = make_geojson_server(get_spark(app_name="web_server"), dataset, port)
+    print(f"serving {dataset} on :{srv.server_port} — /node/ID /way/ID /relation/ID")
+    srv.serve_forever()
 
 
 if __name__ == "__main__":

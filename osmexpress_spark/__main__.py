@@ -14,6 +14,11 @@ Option names follow the reference where it has them: `--bbox` /
 Output format is picked by extension like `osmx extract`: .pbf ->
 ordered PBF sink, .xml/.osm -> XML, anything else -> a re-extractable
 parquet dataset directory.
+
+Every command opens DATASET_DIR through `api.Dataset`, so it reads as
+its latest committed snapshot when `update --commit` has published one,
+else as the plain `expand` layout; `query`, `extract`, `audit` and
+`serve` write nothing into it.
 """
 
 from __future__ import annotations
@@ -55,61 +60,19 @@ def _parse_region(args):
     raise SystemExit(2)
 
 
-def _has_store(dataset: str) -> bool:
-    """True when the dir has committed manifests (post-`update --commit`).
-    Checked without constructing SnapshotStore: its __init__ mkdirs
-    `_versions`, and a read-only dataset mount must stay readable
-    through query/extract."""
-    import os
-
-    vdir = os.path.join(dataset, "_versions")
-    return os.path.isdir(vdir) and any(
-        f.startswith("v") and f.endswith(".json") for f in os.listdir(vdir)
-    )
-
-
-def _tables(spark, dataset: str):
-    """Latest committed store snapshot if present, else the plain
-    expand layout."""
-    if _has_store(dataset):
-        from .store import SnapshotStore
-
-        return SnapshotStore(spark, dataset).read_all()
-    from .api import Dataset
-
-    return Dataset(spark, dataset).tables()
-
-
-def _snapshot_metadata(spark, dataset: str) -> dict:
-    """Replication metadata of the snapshot being extracted. Delegates
-    to Dataset.metadata(), which overlays the latest manifest's live
-    metadata on the static expand-time _metadata.json — so an extract
-    still carries the expand-time replication timestamp when the last
-    committed diff's elements had no timestamps (a store-only read
-    would return {seqnum} and stamp nothing). Reference stamps the
-    CURRENT snapshot's state (src/extract.cpp:282-283)."""
-    from .api import Dataset
-
-    return Dataset(spark, dataset).metadata()
-
-
 def cmd_extract(args) -> int:
-    from .operators.extract import extract
+    from .api import Dataset
     from .sources import sink
 
-    res = extract(
-        _tables(_spark(), args.dataset),
-        _parse_region(args),
-        expand_cells=args.expand,
-        exact=args.exact,
-    )
+    ds = Dataset(_spark(), args.dataset)
+    res = ds.extract(_parse_region(args), expand_cells=args.expand, exact=args.exact)
     out = args.output
     if out.endswith(".pbf"):
         # stamp the snapshot's replication timestamp into the output
         # header like the reference (src/extract.cpp:282-283)
         from datetime import datetime, timezone
 
-        ts = _snapshot_metadata(_spark(), args.dataset).get("timestamp")
+        ts = ds.metadata().get("timestamp")
         epoch = (
             int(datetime.strptime(ts, "%Y-%m-%dT%H:%M:%SZ")
                 .replace(tzinfo=timezone.utc).timestamp())
@@ -129,22 +92,23 @@ def cmd_update(args) -> int:
     import os
 
     from .api import Dataset
-    from .schemas import EDGE_TABLES
     from .sources.osc import read_osc
-    from .store import DEFAULT_SORT, SnapshotStore
-    from .streaming.replication import apply_batch
+    from .store import DEFAULT_SORT
+    from .streaming.replication import apply_batch, committed_seqnum
 
     spark = _spark()
+    ds = Dataset(spark, args.dataset)
+    store = ds.store
     if not args.commit:
         # dry-run must leave the dataset byte-identical (reference
         # update.cpp:287-290): derive each batch's merge plans straight
         # from the .osc — no store bootstrap, no _versions dir, no
-        # rewrite of data/. Constructing a SnapshotStore would mkdir.
-        # It still VALIDATES like the commit path would: the dataset
-        # must exist, and already-committed seqnums report as skipped.
+        # rewrite of data/. It still VALIDATES like the commit path
+        # would: the dataset must exist, and already-committed seqnums
+        # report as skipped.
         from .operators.update import merge_specs_for
 
-        has_store = _has_store(args.dataset)
+        has_store = store.latest_version() is not None
         if not has_store and not os.path.isdir(
             os.path.join(args.dataset, "locations")
         ):
@@ -152,16 +116,7 @@ def cmd_update(args) -> int:
                   "(no locations/ table and no committed store)",
                   file=sys.stderr)
             return 2
-        committed = 0
-        if has_store:
-            # _versions exists, so constructing the (read-only-used)
-            # store cannot mutate anything — and it is the single
-            # owner of the manifest format (no hand-parsed v*.json)
-            committed = int(
-                SnapshotStore(spark, args.dataset)
-                .metadata()
-                .get("seqnum", 0)
-            )
+        committed = committed_seqnum(store) if has_store else 0
         for i, osc in enumerate(args.changes):
             seq = args.seqnum + i
             if seq <= committed:
@@ -173,19 +128,13 @@ def cmd_update(args) -> int:
             print(f"dry-run {osc}: batch derived and discarded "
                   "(pass --commit to publish)")
         return 0
-    store = SnapshotStore(spark, args.dataset)
     if store.latest_version() is None:
         # plain `expand` output (no manifests yet): bootstrap version 0
-        # from the dataset-layout parquet dirs, edges included if present
-        ds = Dataset(spark, args.dataset)
-        tables = {n: ds.table(n) for n in ("locations", "nodes", "ways", "relations")}
-        for n in EDGE_TABLES:
-            if os.path.exists(os.path.join(args.dataset, n, "_SUCCESS")):
-                tables[n] = ds.table(n)
+        # from the dataset-layout parquet dirs, edges included if present;
         # carry the expand metadata forward: its `timestamp` is what the
         # replication bootstrap resolves to a starting seqnum
         store.commit(
-            tables,
+            ds.tables(),
             metadata={"bootstrap": "cli", **ds.metadata()},
             sort_by=DEFAULT_SORT,
         )
@@ -204,7 +153,7 @@ def cmd_update(args) -> int:
 def make_geojson_server(spark, dataset: str, port: int = 0):
     """GeoJSON HTTP API with the reference example's URL contract
     (python/examples/web_server.py): GET /{node|way|relation}/{id} ->
-    one GeoJSON Feature. Tables resolve once at startup (store-aware);
+    one GeoJSON Feature. Tables resolve once at startup (`Dataset`);
     each request is a point-lookup query. Returns an HTTPServer the
     caller serves (serve_forever / a test thread).
 
@@ -218,8 +167,9 @@ def make_geojson_server(spark, dataset: str, port: int = 0):
     from pyspark.sql import functions as F
 
     from . import functions as fn
+    from .api import Dataset
 
-    tables = _tables(spark, dataset)
+    tables = Dataset(spark, dataset).tables()
 
     def feature_for(etype: str, eid: int) -> dict | None:
         if etype == "node":
@@ -296,8 +246,9 @@ def cmd_serve(args) -> int:
 
 
 def cmd_query(args) -> int:
-    from pyspark.sql import functions as F
-
+    if args.element_type and not args.id:
+        print("query: ID required with an element type", file=sys.stderr)
+        return 2
     if args.dataset.endswith(".osmx"):
         # literal-artifact parity: `osmx query planet.osmx [way ID]`
         # (src/cmd.cpp:44-109) served from the LMDB file itself — no
@@ -305,41 +256,25 @@ def cmd_query(args) -> int:
         from .sources.osmx import OsmxFile
 
         with OsmxFile(args.dataset) as f:
-            if args.element_type:
-                if not args.id:
-                    print("query: ID required with an element type",
-                          file=sys.stderr)
-                    return 2
-                if args.element_type == "node":
-                    loc = f.location(args.id)
-                    payload = f.node(args.id)
-                    print({"id": args.id, "location": loc,
-                           "payload": payload})
-                else:
-                    getter = getattr(f, args.element_type)
-                    print({"id": args.id, "payload": getter(args.id)})
+            if args.element_type == "node":
+                print({"id": args.id, "location": f.location(args.id),
+                       "payload": f.node(args.id)})
+            elif args.element_type:
+                getter = getattr(f, args.element_type)
+                print({"id": args.id, "payload": getter(args.id)})
             else:
                 for name, n in sorted(f.stats().items()):
                     print(f"{name}: {n}")
         return 0
 
-    tables = _tables(_spark(), args.dataset)
+    from .api import Dataset
+
+    ds = Dataset(_spark(), args.dataset)
     if args.element_type:
-        if not args.id:
-            print("query: ID required with an element type", file=sys.stderr)
-            return 2
-        if args.element_type == "node":
-            df = (
-                tables["locations"].where(F.col("id") == args.id)
-                .join(tables["nodes"].where(F.col("id") == args.id), "id", "left_outer")
-                .select("id", "lon", "lat", "version", "tags", "metadata")
-            )
-        else:
-            df = tables[args.element_type + "s"].where(F.col("id") == args.id)
-        df.show(truncate=False)
+        ds.lookup(args.element_type, args.id).show(truncate=False)
     else:
-        for name in ("locations", "nodes", "ways", "relations"):
-            print(f"{name}: {tables[name].count()}")
+        for name, n in ds.stats().items():
+            print(f"{name}: {n}")
     return 0
 
 
@@ -347,9 +282,10 @@ def cmd_audit(args) -> int:
     """Referential-integrity report (operators/audit.py): dangling
     reference counts per category. Exit 1 when --strict and anything
     dangles, so CI pipelines can gate on snapshot health."""
+    from .api import Dataset
     from .operators.audit import integrity_audit
 
-    tables = _tables(_spark(), args.dataset)
+    tables = Dataset(_spark(), args.dataset).tables()
     rows = integrity_audit(
         tables["locations"], tables["ways"], tables["relations"]
     ).collect()

@@ -3,9 +3,11 @@ embedding API (`/root/reference/python/osmx/osmx.py`: Environment /
 Transaction / Locations / Nodes / Ways / Relations / Index), SURVEY.md
 §3.3.
 
-A `Dataset` wraps a directory of parquet tables in the production
-layout (locations cell-sorted, payloads id-sorted) and exposes
-DataFrames plus the composed operators: `.extract(region)`,
+A `Dataset` is the one reader of a dataset directory. The directory
+reads as its latest committed `SnapshotStore` snapshot when it has one
+(after `update --commit`), else as the plain `expand` layout (locations
+cell-sorted, payloads id-sorted). Opening one writes nothing. It
+exposes DataFrames plus the composed operators: `.extract(region)`,
 `.lookup(type, id)`, `.edges(name)`.
 """
 
@@ -19,7 +21,7 @@ from pyspark.sql import functions as F
 from .operators import edges as edges_mod
 from .operators.extract import ExtractResult, extract
 from .spatial import Region
-from .store import SnapshotStore, read_parquet
+from .store import SnapshotStore, read_parquet, write_sorted
 
 CORE_TABLES = ("locations", "nodes", "ways", "relations")
 EDGE_TABLES = ("node_way", "node_relation", "way_relation", "relation_relation")
@@ -29,6 +31,7 @@ class Dataset:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self.store = SnapshotStore(spark, path)
 
     @classmethod
     def expand(
@@ -48,8 +51,16 @@ class Dataset:
     def _table_path(self, name: str) -> str:
         return os.path.join(self.path, name)
 
+    def _read(self, *names: str) -> dict[str, DataFrame]:
+        """The named tables, all of one snapshot: the latest committed
+        version when there is one, else the expand layout."""
+        version = self.store.latest_version()
+        if version is None:
+            return {n: read_parquet(self.spark, self._table_path(n)) for n in names}
+        return {n: self.store.read_table(n, version) for n in names}
+
     def table(self, name: str) -> DataFrame:
-        return read_parquet(self.spark, self._table_path(name))
+        return self._read(name)[name]
 
     def locations(self) -> DataFrame:
         return self.table("locations")
@@ -64,53 +75,49 @@ class Dataset:
         return self.table("relations")
 
     def tables(self) -> dict[str, DataFrame]:
-        out = {name: self.table(name) for name in CORE_TABLES}
-        for name in EDGE_TABLES:  # use materialized edges when present
-            if os.path.exists(os.path.join(self._table_path(name), "_SUCCESS")):
-                out[name] = self.table(name)
-        return out
+        """Every table of the snapshot: the four core tables plus the
+        reverse indexes it has materialized."""
+        version = self.store.latest_version()
+        if version is not None:
+            return self.store.read_all(version)
+        edges = [n for n in EDGE_TABLES
+                 if os.path.exists(os.path.join(self._table_path(n), "_SUCCESS"))]
+        return self._read(*CORE_TABLES, *edges)
 
     def edges(self, name: str) -> DataFrame:
         """Materialized reverse index if present, else derived on the fly."""
-        if os.path.exists(os.path.join(self._table_path(name), "_SUCCESS")):
-            return self.table(name)
-        derived = edges_mod.derive_all(self.ways(), self.relations())
-        return derived[name]
+        tables = self.tables()
+        if name in tables:
+            return tables[name]
+        return edges_mod.derive_all(tables["ways"], tables["relations"])[name]
 
     def materialize_edges(self) -> None:
         """Build the four reverse indexes once (ingest-time in the
         reference, src/expand.cpp:180,203-205). Written id-sorted on the
         probe key so point lookups prune."""
         for name, df in edges_mod.derive_all(self.ways(), self.relations()).items():
-            key = df.columns[0]
-            (
-                df.repartitionByRange(8, key)
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .parquet(self._table_path(name))
-            )
+            write_sorted(df, self._table_path(name), name, 8)
 
     # --- S3 point lookup (src/cmd.cpp:44-86, osmx.py:53-98) ---
     def lookup(self, element_type: str, element_id: int) -> DataFrame:
         """Point lookup with the pushed id filter; the id-sorted layout
         makes this a few-row-group read, the Spark analog of the LMDB
         point get."""
+        one = F.col("id") == element_id
         if element_type == "node":
-            loc = self.locations().where(F.col("id") == element_id)
-            payload = self.nodes().where(F.col("id") == element_id)
+            t = self._read("locations", "nodes")
             return (
-                loc.join(payload, "id", "left_outer")
+                t["locations"].where(one)
+                .join(t["nodes"].where(one), "id", "left_outer")
                 .select("id", "lon", "lat", "version", "tags", "metadata")
             )
-        if element_type == "way":
-            return self.ways().where(F.col("id") == element_id)
-        if element_type == "relation":
-            return self.relations().where(F.col("id") == element_id)
+        if element_type in ("way", "relation"):
+            return self.table(element_type + "s").where(one)
         raise ValueError(f"unknown element type: {element_type}")
 
     # --- S6 stats (src/cmd.cpp:96-109) ---
     def stats(self) -> dict[str, int]:
-        return {name: self.table(name).count() for name in CORE_TABLES}
+        return {name: df.count() for name, df in self._read(*CORE_TABLES).items()}
 
     def metadata(self) -> dict:
         """Dataset-level metadata: the expand-time `_metadata.json`
@@ -127,14 +134,9 @@ class Dataset:
         if os.path.exists(p):
             with open(p) as f:
                 static = json.load(f)
-        vdir = os.path.join(self.path, "_versions")
-        if os.path.isdir(vdir) and any(
-            f.startswith("v") and f.endswith(".json") for f in os.listdir(vdir)
-        ):
-            live = SnapshotStore(self.spark, self.path).metadata()
-            live = {k: v for k, v in live.items() if k != "committed_at"}
-            return {**static, **live}
-        return static
+        version = self.store.latest_version()
+        live = {} if version is None else self.store.metadata(version)
+        return {**static, **{k: v for k, v in live.items() if k != "committed_at"}}
 
     def extract(self, region: Region, **kwargs) -> ExtractResult:
         return extract(self.tables(), region, **kwargs)

@@ -15,7 +15,8 @@ O1/O2):
   whole-stage codegen; the reference pays a C++ S2 call per node).
 - the external sort + merge + ordered append is EXACTLY Spark's
   sort-shuffle: `repartitionByRange(key).sortWithinPartitions(key)`
-  then a parquet write — zero custom code, spills managed by Tungsten.
+  then a parquet write (`store.write_sorted`, keys from
+  `store.DEFAULT_SORT`) — zero custom code, spills managed by Tungsten.
 - reverse indexes: explode + the same range-sorted write
   (operators/edges.py).
 
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..spatial import cells
+from ..store import write_sorted
 from . import edges as edges_mod
 
 _SOURCE_FORMATS = {
@@ -241,24 +243,12 @@ def expand(
     n_rows = all_df.count()
     if partitions is None:
         partitions = max(1, min(32768, -(-n_rows // 1_000_000)))
-    tables = tables_from_unified(all_df)
-    sort_key = {"locations": "cell", "nodes": "id", "ways": "id", "relations": "id"}
 
-    def write_sorted(name: str, df: DataFrame, key: str) -> None:
-        (
-            df.repartitionByRange(partitions, key)
-            .sortWithinPartitions(key)
-            .write.mode("overwrite")
-            .parquet(os.path.join(dest, name))
-        )
+    def write(item: tuple[str, DataFrame]) -> None:
+        write_sorted(item[1], os.path.join(dest, item[0]), item[0], partitions)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
-        list(
-            pool.map(
-                lambda name: write_sorted(name, tables[name], sort_key[name]),
-                sort_key,
-            )
-        )
+        list(pool.map(write, tables_from_unified(all_df).items()))
     all_df.unpersist()
     _write_metadata(source_path, dest, fmt)
     if materialize_edges:
@@ -266,11 +256,5 @@ def expand(
         # instead of re-parsing the source file
         ways = spark.read.parquet(os.path.join(dest, "ways"))
         relations = spark.read.parquet(os.path.join(dest, "relations"))
-        edge_tables = edges_mod.derive_all(ways, relations)
         with ThreadPoolExecutor(max_workers=4) as pool:
-            list(
-                pool.map(
-                    lambda kv: write_sorted(kv[0], kv[1], kv[1].columns[0]),
-                    edge_tables.items(),
-                )
-            )
+            list(pool.map(write, edges_mod.derive_all(ways, relations).items()))

@@ -1123,6 +1123,7 @@ def q_store_time_travel(spark, sf_dir):
         store = SnapshotStore(spark, root)
         latest = None
     if latest is None:
+        _os.makedirs(root, exist_ok=True)  # opening a store writes nothing
         with open(fp_file, "w") as f:
             f.write(fp)
         store.commit({"rows": base}, sort_by={"rows": "id"})

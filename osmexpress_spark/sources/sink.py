@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators.extract import ExtractResult
-from ..store import DEFAULT_SORT
+from ..store import write_sorted
 
 
 def _strip_user_data(df):
@@ -64,13 +64,7 @@ def write_dataset(
     for name, df in tables.items():
         if not user_data:
             df = _strip_user_data(df)
-        key = DEFAULT_SORT[name]
-        (
-            df.repartitionByRange(partitions, key)
-            .sortWithinPartitions(key)
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, name))
-        )
+        write_sorted(df, os.path.join(path, name), name, partitions)
 
 
 def _xml_escape(s: str) -> str:

@@ -44,6 +44,17 @@ the driver (pyarrow, under 1 ms per directory) and hands it to
 `spark.read.schema(...)`. Directories whose footers lack the key (a
 non-Spark writer) or disagree fall back to the inferring read.
 
+Layer contract for non-Spark writers: timestamps (`metadata.timestamp`)
+must be written as UTC microseconds, as Spark writes them. A
+`TIMESTAMP(NANOS)` column (pyarrow's default when it rewrites Spark's
+INT96) reads as BIGINT under `spark.sql.legacy.parquet.nanosAsLong`,
+and the fold's `unionByName` with the base then raises
+`INCOMPATIBLE_COLUMN_TYPE`.
+
+Opening a store writes nothing: `_versions/` appears with the first
+commit, so a plain `expand` directory (or a read-only mount) can be
+asked for its `latest_version()` without changing it.
+
 At production scale swap this for Delta/Iceberg — the engine only uses
 `read_table`/`commit`/`merge_commit`/`metadata`, which map 1:1.
 """
@@ -61,6 +72,31 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Each table's pruning sort key: locations by cell, payloads by id,
+# reverse indexes by their probe side.
+DEFAULT_SORT = {
+    "locations": "cell",
+    "nodes": "id",
+    "ways": "id",
+    "relations": "id",
+    "node_way": "node_id",
+    "node_relation": "node_id",
+    "way_relation": "way_id",
+    "relation_relation": "child_id",
+}
+
+def write_sorted(df: DataFrame, path: str, name: str, partitions: int,
+                 sort_by: dict[str, str] = DEFAULT_SORT) -> None:
+    """Write table ``name`` to ``path`` in its pruning layout:
+    range-partitioned into ``partitions`` files on its ``sort_by`` key
+    and sorted on it inside each file, so a key's rows sit in one file
+    and point reads prune. A table without a key is written as it is."""
+    key = sort_by.get(name)
+    if key:
+        df = df.repartitionByRange(partitions, key).sortWithinPartitions(key)
+    df.write.mode("overwrite").parquet(path)
+
 
 # footer key under which Spark's parquet writer stores the row schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -151,7 +187,6 @@ class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        os.makedirs(os.path.join(root, "_versions"), exist_ok=True)
 
     # --- manifest plumbing -------------------------------------------------
     def _manifest_path(self, version: int) -> str:
@@ -159,6 +194,8 @@ class SnapshotStore:
 
     def versions(self) -> list[int]:
         d = os.path.join(self.root, "_versions")
+        if not os.path.isdir(d):
+            return []
         return sorted(
             int(f[1:-5]) for f in os.listdir(d)
             if f.startswith("v") and f.endswith(".json")
@@ -258,9 +295,9 @@ class SnapshotStore:
         return self._publish(manifest, new_version)
 
     def _publish(self, manifest: dict, new_version: int) -> int:
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.join(self.root, "_versions"), suffix=".tmp"
-        )
+        vdir = os.path.join(self.root, "_versions")
+        os.makedirs(vdir, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=vdir, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f)
         try:
@@ -277,11 +314,8 @@ class SnapshotStore:
         when it has one (its pruning layout); returns its store-relative
         path."""
         rel = os.path.join("data", name, f"v{version}")
-        sort_key = (sort_by or {}).get(name)
-        if sort_key:
-            df = df.repartitionByRange(partitions, sort_key)
-            df = df.sortWithinPartitions(sort_key)
-        df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        write_sorted(df, os.path.join(self.root, rel), name, partitions,
+                     sort_by or {})
         return rel
 
     def set_metadata(self, metadata: dict) -> int:
@@ -305,7 +339,6 @@ class SnapshotStore:
         sort_by: dict[str, str] | None = None,
         max_layers: int = 16,
         partitions: int = 8,
-        layer_files: int | None = None,
     ) -> int:
         """Publish one batch of per-table merges as delta layers — the
         O(|batch|)-write path (see module docstring). Every touched
@@ -355,15 +388,13 @@ class SnapshotStore:
             ups_rel = os.path.join(ldir, "upserts")
             chg_rel = os.path.join(ldir, "changed")
             # minutely diffs are tiny -> one file per layer keeps the
-            # merge-on-read fold cheap; a large backfill batch keeps
-            # its write parallel instead of serializing into one task
-            lf = layer_files if layer_files is not None else 1
-            spec.upserts.coalesce(lf).write.mode("overwrite").parquet(
+            # merge-on-read fold cheap
+            spec.upserts.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.root, ups_rel)
             )
             spec.changed_keys.select(
                 F.col(spec.key).alias("key")
-            ).distinct().coalesce(lf).write.mode("overwrite").parquet(
+            ).distinct().coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.root, chg_rel)
             )
             layers.append({"upserts": ups_rel, "changed": chg_rel})
@@ -432,17 +463,6 @@ class SnapshotStore:
             store.commit(tables, metadata=metadata, sort_by=sort_by)
         return store
 
-
-DEFAULT_SORT = {
-    "locations": "cell",
-    "nodes": "id",
-    "ways": "id",
-    "relations": "id",
-    "node_way": "node_id",
-    "node_relation": "node_id",
-    "way_relation": "way_id",
-    "relation_relation": "child_id",
-}
 
 # Merge keys: the column a batch's deletes/upserts target. Element
 # tables merge by element id; edge tables merge by the OWNING side

@@ -262,14 +262,10 @@ def write_fixture_dataset(
     """Materialize a fixture dataset dir in the production layout:
     locations cell-sorted (the spatial-pruning contract), payload tables
     id-sorted."""
-    dfs = to_dataframes(spark, generate(n_nodes=n_nodes, seed=seed))
-    dfs["locations"].repartitionByRange(4, "cell").sortWithinPartitions("cell").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "locations"))
-    for name in ("nodes", "ways", "relations"):
-        dfs[name].repartitionByRange(2, "id").sortWithinPartitions("id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(path, name))
+    from .store import write_sorted
+
+    for name, df in to_dataframes(spark, generate(n_nodes=n_nodes, seed=seed)).items():
+        write_sorted(df, os.path.join(path, name), name, 4 if name == "locations" else 2)
 
 
 def ensure_fixture_dataset(

@@ -41,6 +41,22 @@ def assert_no_key_exchange(
     assert "Exchange" not in stripped, ctx or stripped[:400]
 
 
+def assert_range_sorted(d: str, key: str, several_files: bool = False) -> None:
+    """The parquet files in directory ``d`` hold the layout
+    `store.write_sorted` writes: every file sorted on ``key``, and the
+    files' key ranges, in file order, do not overlap. ``several_files``
+    also requires more than one file (a range write that really split)."""
+    import pyarrow.parquet as pq
+
+    files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+    keys = [pq.read_table(os.path.join(d, f), columns=[key])[key].to_pylist()
+            for f in files]
+    keys = [k for k in keys if k]
+    assert keys and all(k == sorted(k) for k in keys), (d, key)
+    assert all(a[-1] < b[0] for a, b in zip(keys, keys[1:])), (d, key)
+    assert len(files) > 1 or not several_files, d
+
+
 def pytest_addoption(parser):
     parser.addoption(
         "--runslow", action="store_true", default=False,

@@ -29,6 +29,7 @@ from osmexpress_spark.store import (
     read_parquet,
 )
 from osmexpress_spark.streaming import replication
+from conftest import assert_range_sorted
 from tests.test_update import python_model_apply, state_from_rows
 
 
@@ -442,15 +443,8 @@ def test_fold_matches_model_and_parent_fold(spark, stack):
     assert after["relations"]["layers"], "relations stays layered"
     for name in compacted:
         d = os.path.join(store.root, after[name]["base"])
-        key = DEFAULT_SORT[name]
-        files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-        keys = [pq.read_table(os.path.join(d, f), columns=[key])[key].to_pylist()
-                for f in files]
         assert read_parquet(spark, d).columns == store.read_table(name, 0).columns
-        # repartitionByRange + sortWithinPartitions: each file sorted,
-        # the files in key order
-        flat = [k for part in keys for k in part]
-        assert flat == sorted(flat) and len(files) > 1, name
+        assert_range_sorted(d, DEFAULT_SORT[name], several_files=True)
 
 
 def _copy_store(spark, store, dest):
