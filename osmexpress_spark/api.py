@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from .operators import edges as edges_mod
 from .operators.extract import ExtractResult, extract
 from .spatial import Region
-from .store import SnapshotStore, read_parquet, write_sorted
+from .store import DEFAULT_SORT, SnapshotStore, read_meta, read_parquet, write_sorted
 
 CORE_TABLES = ("locations", "nodes", "ways", "relations")
 EDGE_TABLES = ("node_way", "node_relation", "way_relation", "relation_relation")
@@ -93,9 +93,22 @@ class Dataset:
 
     def materialize_edges(self) -> None:
         """Build the four reverse indexes once (ingest-time in the
-        reference, src/expand.cpp:180,203-205). Written id-sorted on the
-        probe key so point lookups prune."""
-        for name, df in edges_mod.derive_all(self.ways(), self.relations()).items():
+        reference, src/expand.cpp:180,203-205), range-sorted on the
+        probe key so point lookups prune. A dataset with a committed
+        snapshot gets them as a new store version that carries the
+        snapshot's replication metadata forward; a plain one gets them
+        in the expand layout."""
+        t = self._read("ways", "relations")
+        edges = edges_mod.derive_all(t["ways"], t["relations"])
+        version = self.store.latest_version()
+        if version is not None:
+            meta = self.store.metadata(version)
+            self.store.commit(
+                edges, {k: v for k, v in meta.items() if k != "committed_at"},
+                sort_by=DEFAULT_SORT,
+            )
+            return
+        for name, df in edges.items():
             write_sorted(df, self._table_path(name), name, 8)
 
     # --- S3 point lookup (src/cmd.cpp:44-86, osmx.py:53-98) ---
@@ -127,13 +140,10 @@ class Dataset:
         `update --commit` the replication seqnum/timestamp reflect the
         CURRENT snapshot (reference stamps extract headers from the live
         db state, src/extract.cpp:282-283), not the stale expand."""
-        import json
-
-        static: dict = {}
-        p = os.path.join(self.path, "_metadata.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                static = json.load(f)
+        try:
+            static = read_meta(self.spark, self.path, name="_metadata.json")
+        except FileNotFoundError:
+            static = {}
         version = self.store.latest_version()
         live = {} if version is None else self.store.metadata(version)
         return {**static, **{k: v for k, v in live.items() if k != "committed_at"}}

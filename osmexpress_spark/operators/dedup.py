@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import lineage
+from ..store import read_meta, read_parquet, write_meta
 
 
 def shingles(text: Column, k: int = 2) -> Column:
@@ -104,24 +105,6 @@ def minhash_signatures_df(
             F.min(F.substring("m", 1 + 4 * p, 4)).alias(f"h{p}")
             for p in range(n_hashes)
         ]
-    )
-
-
-def lsh_bands(
-    df: DataFrame, id_col: str, sig_col: str, bands: int, rows_per_band: int
-) -> DataFrame:
-    """(id, band_idx, band_key) — band key concatenates r signature
-    elements; docs sharing any band key are candidates."""
-    keys = F.array(
-        *[
-            F.concat(
-                *[F.col(sig_col)[b * rows_per_band + r] for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    return df.select(
-        F.col(id_col), F.posexplode(keys).alias("band_idx", "band_key")
     )
 
 
@@ -1339,101 +1322,6 @@ def containment_pairs(
     )
 
 
-def _store_fs(spark, path_str: str):
-    """(Hadoop FileSystem, Path) for a store path. The meta.json
-    sidecar must live on the SAME filesystem as the signature parquet
-    (hdfs://, s3a://, file:/...), so it goes through Spark's Hadoop FS
-    layer rather than local open() — otherwise a remote store would
-    silently split (parquet remote, sidecar on the driver's disk) and
-    the fingerprint-invalidation contract would break."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _store_write_text(spark, path_str: str, text: str,
-                      _force_swap: bool = False) -> None:
-    """Publish a small text file (store metadata) with rename-commit
-    semantics: write the bytes to a sibling temp path, then move the
-    temp over the destination.  The move prefers Hadoop FileContext's
-    overwrite-rename — a single atomic metadata op on HDFS and
-    local://, so a reader sees the old file or the new one, never a
-    torn or missing file (ADVICE r07/r09).  On filesystems whose
-    FileContext lacks atomic overwrite, the old file is parked at a
-    .bak sibling first and restored if the final rename fails, so a
-    failed publish retains the prior metadata instead of deleting it.
-    Stores remain single-writer (two concurrent writers still race on
-    WHICH meta wins)."""
-    import uuid
-
-    jvm = spark._jvm
-    fs, hpath = _store_fs(spark, path_str)
-    tag = uuid.uuid4().hex[:12]
-    _, tmp = _store_fs(spark, path_str + ".tmp." + tag)
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-    if not _force_swap:
-        try:
-            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                hpath.toUri(), spark._jsc.hadoopConfiguration()
-            )
-            gw = spark.sparkContext._gateway
-            opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-            opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-            fc.rename(tmp, hpath, opts)
-            return
-        except Exception:
-            pass  # FS without FileContext overwrite-rename: park-and-swap
-    _, bak = _store_fs(spark, path_str + ".bak." + tag)
-    had_old = bool(fs.exists(hpath))
-    if had_old and not fs.rename(hpath, bak):
-        fs.delete(tmp, False)
-        raise OSError(f"rename-commit of {path_str} failed (park)")
-    if not fs.rename(tmp, hpath):
-        if had_old:
-            fs.rename(bak, hpath)  # restore the prior metadata
-        fs.delete(tmp, False)
-        raise OSError(f"rename-commit of {path_str} failed (swap)")
-    if had_old:
-        fs.delete(bak, False)
-
-
-def _store_read_text(spark, path_str: str) -> str:
-    """Read store metadata.  On a filesystem where _store_write_text
-    fell back to park-and-swap (no FileContext overwrite-rename) there
-    is a sub-millisecond window where the destination does not exist
-    between the park rename and the swap rename, so a not-found is
-    retried once after a short sleep before propagating (ADVICE r09 —
-    closes the reader-visible gap the primary atomic path never has)."""
-    import time
-
-    fs, hpath = _store_fs(spark, path_str)
-    for attempt in (0, 1):
-        try:
-            stream = fs.open(hpath)
-        except Exception:
-            if attempt == 0:
-                time.sleep(0.05)
-                continue
-            raise
-        try:
-            return spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-    raise OSError(f"unreachable: {path_str}")
-
-
-def _store_exists(spark, path_str: str) -> bool:
-    fs, hpath = _store_fs(spark, path_str)
-    return bool(fs.exists(hpath))
-
-
 def save_signature_store(
     corpus: DataFrame,
     path: str,
@@ -1448,21 +1336,14 @@ def save_signature_store(
     sidecar pins (id_col, n_hashes, k) — a load with different
     parameters would silently generate wrong band keys, so it raises —
     and carries the caller's source fingerprint for invalidation (the
-    same contract as the ANN index caches' src.fp). Both the parquet
-    and the sidecar go through the Hadoop FS layer, so remote store
-    paths (hdfs://, s3a://) work."""
-    import json
-
+    same contract as the ANN index caches' src.fp). The store follows
+    `store.py`'s persisted-store contract, so remote store paths
+    (hdfs://, s3a://) work."""
     sig = minhash_signatures_df(corpus, id_col, text_col, n_hashes, k)
     sig.write.mode("overwrite").parquet(path.rstrip("/") + "/signatures")
-    _store_write_text(
-        corpus.sparkSession,
-        path.rstrip("/") + "/meta.json",
-        json.dumps(
-            {"id_col": id_col, "n_hashes": n_hashes, "k": k,
-             "fingerprint": fingerprint}
-        ),
-    )
+    write_meta(corpus.sparkSession, path,
+               {"id_col": id_col, "n_hashes": n_hashes, "k": k,
+                "fingerprint": fingerprint})
 
 
 def load_signature_store(
@@ -1470,17 +1351,9 @@ def load_signature_store(
 ) -> DataFrame:
     """Read a persisted signature table, validating that the requested
     parameters match the ones it was built with."""
-    import json
-
-    meta = json.loads(_store_read_text(spark, path.rstrip("/") + "/meta.json"))
-    want = {"id_col": id_col, "n_hashes": n_hashes, "k": k}
-    have = {kk: meta.get(kk) for kk in want}
-    if have != want:
-        raise ValueError(
-            f"signature store at {path} was built with {have}, "
-            f"requested {want}"
-        )
-    return spark.read.parquet(path.rstrip("/") + "/signatures")
+    read_meta(spark, path, {"id_col": id_col, "n_hashes": n_hashes, "k": k},
+              "signature store")
+    return read_parquet(spark, path.rstrip("/") + "/signatures")
 
 
 def ensure_signature_store(
@@ -1493,29 +1366,18 @@ def ensure_signature_store(
     fingerprint: str = "",
 ) -> DataFrame:
     """Build-or-reuse: rebuild when meta.json is absent or its
-    fingerprint differs from the caller's (corpus content changed);
-    otherwise serve the persisted signatures without touching corpus
-    text."""
-    import json
-
+    parameters or fingerprint differ from the caller's (corpus content
+    changed); otherwise serve the persisted signatures without touching
+    corpus text."""
     spark = corpus.sparkSession
-    meta_path = path.rstrip("/") + "/meta.json"
-    stale = True
-    if _store_exists(spark, meta_path):
-        meta = json.loads(_store_read_text(spark, meta_path))
-        stale = (
-            meta.get("fingerprint") != fingerprint
-            or meta.get("id_col") != id_col
-            or meta.get("n_hashes") != n_hashes
-            or meta.get("k") != k
-        )
-    if stale:
+    try:
+        read_meta(spark, path, {"id_col": id_col, "n_hashes": n_hashes, "k": k,
+                                "fingerprint": fingerprint})
+    except (FileNotFoundError, ValueError):
         save_signature_store(
             corpus, path, id_col, text_col, n_hashes, k, fingerprint
         )
-    return load_signature_store(
-        corpus.sparkSession, path, id_col, n_hashes, k
-    )
+    return load_signature_store(spark, path, id_col, n_hashes, k)
 
 
 def incremental_dedup_pairs(
@@ -1852,7 +1714,7 @@ def ngram_novelty_against_store(
         F.explode(shingles(F.col(text_col), k)).alias("s"),
     ).select(id_col, h.alias("h"))
     ref_sh = (
-        spark.read.parquet(store_path)
+        read_parquet(spark, store_path)
         .select("h")
         .distinct()
         .withColumn("__seen", F.lit(1))

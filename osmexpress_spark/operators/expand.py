@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..spatial import cells
-from ..store import write_sorted
+from ..store import read_parquet, write_meta, write_sorted
 from . import edges as edges_mod
 
 _SOURCE_FORMATS = {
@@ -69,13 +69,15 @@ def _fmt_for(path: str) -> str:
         ) from None
 
 
-def _write_metadata(source_path: str, dest: str, fmt: str | None) -> None:
+def _write_metadata(
+    spark: SparkSession, source_path: str, dest: str, fmt: str | None
+) -> None:
     """Dataset-level metadata, mirroring the reference's metadata table
     writes at expand time (src/expand.cpp:283-287): import filename +
     the PBF header's osmosis replication timestamp/seqnum when present.
     The `timestamp` key is what the replication bootstrap resolves to a
-    starting seqnum (streaming/feedstate.bootstrap_seqnum)."""
-    import json
+    starting seqnum (streaming/feedstate.bootstrap_seqnum). Published
+    with `store.write_meta`'s rename-commit."""
     import time
     from datetime import datetime, timezone
 
@@ -115,8 +117,7 @@ def _write_metadata(source_path: str, dest: str, fmt: str | None) -> None:
                 meta["seqnum"] = int(seq)
             except ValueError:
                 pass
-    with open(os.path.join(dest, "_metadata.json"), "w") as f:
-        json.dump(meta, f)
+    write_meta(spark, dest, meta, name="_metadata.json")
 
 
 def _register(spark: SparkSession, fmt: str) -> None:
@@ -205,13 +206,6 @@ def tables_from_unified(all_df: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def expand_tables(
-    spark: SparkSession, source_path: str, fmt: str | None = None
-) -> dict[str, DataFrame]:
-    """Source file -> the four logical tables (lazy; no write)."""
-    return tables_from_unified(unified_source(spark, source_path, fmt))
-
-
 def expand(
     spark: SparkSession,
     source_path: str,
@@ -250,11 +244,11 @@ def expand(
     with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(write, tables_from_unified(all_df).items()))
     all_df.unpersist()
-    _write_metadata(source_path, dest, fmt)
+    _write_metadata(spark, source_path, dest, fmt)
     if materialize_edges:
         # re-read the written payloads so edge derivation scans parquet
         # instead of re-parsing the source file
-        ways = spark.read.parquet(os.path.join(dest, "ways"))
-        relations = spark.read.parquet(os.path.join(dest, "relations"))
+        ways = read_parquet(spark, os.path.join(dest, "ways"))
+        relations = read_parquet(spark, os.path.join(dest, "relations"))
         with ThreadPoolExecutor(max_workers=4) as pool:
             list(pool.map(write, edges_mod.derive_all(ways, relations).items()))

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import lineage
+from ..store import read_meta, read_parquet, write_meta
 from .bitio import LsbReader, LsbWriter, MsbReader, PrefixCode, reverse_bits
 from .vorbis import (
     _lookup1_values, _vorbis_ilog, ogg_lacing, ogg_page, ogg_pages,
@@ -3319,24 +3320,16 @@ def save_band_store(
     store and the drift reference sketch.  The meta sidecar pins
     (id_col, n_bands): a load with different parameters would silently
     join wrong band columns, so it raises; the fingerprint field
-    carries the caller's source version for invalidation.  Paths go
-    through the Hadoop FS layer (hdfs:// and s3a:// work)."""
-    import json
-
-    from . import dedup as _dedup
-
+    carries the caller's source version for invalidation.  The store
+    follows `store.py`'s persisted-store contract (hdfs:// and s3a://
+    paths work)."""
     cols = [id_col] + [f"band_{b}" for b in range(n_bands)]
     bands_df.select(*cols).write.mode("overwrite").parquet(
         path.rstrip("/") + "/bands"
     )
-    _dedup._store_write_text(
-        bands_df.sparkSession,
-        path.rstrip("/") + "/meta.json",
-        json.dumps(
-            {"id_col": id_col, "n_bands": n_bands,
-             "fingerprint": fingerprint}
-        ),
-    )
+    write_meta(bands_df.sparkSession, path,
+               {"id_col": id_col, "n_bands": n_bands,
+                "fingerprint": fingerprint})
 
 
 def load_band_store(
@@ -3344,21 +3337,8 @@ def load_band_store(
 ) -> DataFrame:
     """Read a persisted band store, validating that the requested
     parameters match the ones it was built with."""
-    import json
-
-    from . import dedup as _dedup
-
-    meta = json.loads(
-        _dedup._store_read_text(spark, path.rstrip("/") + "/meta.json")
-    )
-    want = {"id_col": id_col, "n_bands": n_bands}
-    have = {k: meta.get(k) for k in want}
-    if have != want:
-        raise ValueError(
-            f"band store at {path} was built with {have}, "
-            f"requested {want}"
-        )
-    return spark.read.parquet(path.rstrip("/") + "/bands")
+    read_meta(spark, path, {"id_col": id_col, "n_bands": n_bands}, "band store")
+    return read_parquet(spark, path.rstrip("/") + "/bands")
 
 
 def near_dup_against_store(

@@ -36,6 +36,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..store import read_meta, read_parquet, write_meta
+
 K1 = 1.2
 B = 0.75
 
@@ -471,10 +473,6 @@ def save_bm25_index(
     bm25_topk); a meta.json pinning (id_col, the split-on-space
     tokenizer) so a drifted reader raises instead of silently scoring
     against wrong conventions."""
-    import json
-
-    from . import dedup as _dedup
-
     base = path.rstrip("/")
     # the same NULL-folds-to-empty convention as bm25_topk, so null-
     # text docs still land one ('' token) posting row and the stats
@@ -500,7 +498,7 @@ def save_bm25_index(
     # so (n_docs, sum_dl) reconstruct exactly from one (doc, dl) row
     # per doc.
     spark = docs.sparkSession
-    on_disk = spark.read.parquet(base + "/postings")
+    on_disk = read_parquet(spark, base + "/postings")
     on_disk.groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     ).write.mode("overwrite").parquet(base + "/df")
@@ -508,11 +506,7 @@ def save_bm25_index(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("sum_dl"),
     ).write.mode("overwrite").parquet(base + "/stats")
-    _dedup._store_write_text(
-        spark,
-        base + "/meta.json",
-        json.dumps({"id_col": id_col, "tokenizer": "split-space"}),
-    )
+    write_meta(spark, base, {"id_col": id_col, "tokenizer": "split-space"})
 
 
 def bm25_topk_from_index(
@@ -531,20 +525,11 @@ def bm25_topk_from_index(
     shared expression as bm25_topk — bit-identical results without
     touching the corpus.  Terms map to positional indices BEFORE the
     pivot, so arbitrary term strings never become column names."""
-    import json
-
-    from . import dedup as _dedup
-
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     base = path.rstrip("/")
-    meta = json.loads(_dedup._store_read_text(spark, base + "/meta.json"))
-    want = {"id_col": id_col, "tokenizer": "split-space"}
-    have = {k_: meta.get(k_) for k_ in want}
-    if have != want:
-        raise ValueError(
-            f"bm25 index at {path} was built with {have}, requested {want}"
-        )
+    read_meta(spark, base, {"id_col": id_col, "tokenizer": "split-space"},
+              "bm25 index")
     terms = list(query_terms)
     # duplicate query terms are legal in bm25_topk (the term scores
     # twice); map every term to its FIRST occurrence's index so
@@ -560,7 +545,7 @@ def bm25_topk_from_index(
         *[x for t_, i in first_idx.items() for x in (F.lit(t_), F.lit(i))]
     )
     posts = (
-        spark.read.parquet(base + "/postings")
+        read_parquet(spark, base + "/postings")
         .where(F.col("term").isin(terms))
         .withColumn("ti", tmap[F.col("term")])
     )
@@ -578,7 +563,7 @@ def bm25_topk_from_index(
         )
     )
     dfs = (
-        spark.read.parquet(base + "/df")
+        read_parquet(spark, base + "/df")
         .where(F.col("term").isin(terms))
         .withColumn("ti", tmap[F.col("term")])
         .groupBy()
@@ -591,6 +576,6 @@ def bm25_topk_from_index(
             ]
         )
     )
-    stats = spark.read.parquet(base + "/stats")
+    stats = read_parquet(spark, base + "/stats")
     scored = piv.crossJoin(F.broadcast(stats)).crossJoin(F.broadcast(dfs))
     return _bm25_rank(scored, len(terms), id_col, k, k1, b)

@@ -33,14 +33,13 @@ hash-stable in both engines.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..store import read_meta, read_parquet, write_meta
+
 GRAINS = {"hour": "hour", "day": "day", "week": "week"}
 
-_META = "meta.json"
 _PARTIALS = "partials"
 _QSKETCH = "qsketch"
 _DSKETCH = "dsketch"
@@ -121,8 +120,6 @@ def save_rollup_store(
     below k distinct values, the standard KMV estimate above —
     completing the dashboard measure set (count/sum/min/max,
     quantiles, distinct) with every measure mergeable."""
-    from . import dedup as _dedup
-
     key_cols = list(key_cols or [])
     base = path.rstrip("/")
     partials = rollup_partials(events, time_col, key_cols, value_col, grain)
@@ -150,28 +147,22 @@ def save_rollup_store(
             .partitionBy("bucket_part")
             .parquet(base + "/" + _DSKETCH)
         )
-    _dedup._store_write_text(
+    write_meta(
         events.sparkSession,
-        base + "/" + _META,
-        json.dumps(
-            {
-                "time_col": time_col,
-                "key_cols": key_cols,
-                "value_col": value_col,
-                "grain": grain,
-                "scale": 100,
-                **(
-                    {"sketch_bits": sketch_bits}
-                    if sketch_bits is not None
-                    else {}
-                ),
-                **(
-                    {"distinct_col": distinct_col, "distinct_k": distinct_k}
-                    if distinct_col is not None
-                    else {}
-                ),
-            }
-        ),
+        base,
+        {
+            "time_col": time_col,
+            "key_cols": key_cols,
+            "value_col": value_col,
+            "grain": grain,
+            "scale": 100,
+            **({"sketch_bits": sketch_bits} if sketch_bits is not None else {}),
+            **(
+                {"distinct_col": distinct_col, "distinct_k": distinct_k}
+                if distinct_col is not None
+                else {}
+            ),
+        },
     )
 
 
@@ -267,7 +258,7 @@ def rollup_distinct(
         )
     k = meta["distinct_k"]
     pruned = (
-        spark.read.parquet(base + "/" + _DSKETCH)
+        read_parquet(spark, base + "/" + _DSKETCH)
         .where(
             (F.col("bucket_part") >= _bound(start))
             & _end_pred(F.col("bucket_part"), end)
@@ -332,7 +323,7 @@ def rollup_quantiles(
     from . import sketch as _sketch
 
     pruned = (
-        spark.read.parquet(base + "/" + _QSKETCH)
+        read_parquet(spark, base + "/" + _QSKETCH)
         .where(
             (F.col("bucket_part") >= _bound(start))
             & _end_pred(F.col("bucket_part"), end)
@@ -361,15 +352,8 @@ def rollup_quantiles(
 
 
 def _check_meta(spark: SparkSession, base: str, grain: str | None) -> dict:
-    from . import dedup as _dedup
-
-    meta = json.loads(_dedup._store_read_text(spark, base + "/" + _META))
-    if grain is not None and meta.get("grain") != grain:
-        raise ValueError(
-            f"rollup store at {base} has grain {meta.get('grain')!r}, "
-            f"requested {grain!r}"
-        )
-    return meta
+    return read_meta(spark, base, {} if grain is None else {"grain": grain},
+                     "rollup store")
 
 
 def load_rollup_partials(
@@ -382,7 +366,7 @@ def load_rollup_partials(
     base = path.rstrip("/")
     _check_meta(spark, base, grain)
     return (
-        spark.read.parquet(base + "/" + _PARTIALS)
+        read_parquet(spark, base + "/" + _PARTIALS)
         .drop("bucket_part", "epoch")
     )
 
@@ -429,7 +413,7 @@ def _pruned_read(
     the suite); the epoch partition of streamed stores is dropped
     after pruning."""
     return (
-        spark.read.parquet(base + "/" + _PARTIALS)
+        read_parquet(spark, base + "/" + _PARTIALS)
         .where(
             (F.col("bucket_part") >= _bound(start))
             & _end_pred(F.col("bucket_part"), end)
@@ -621,7 +605,7 @@ def rollup_regrain(
     )
     if meta.get("sketch_bits") is not None:
         qs = (
-            spark.read.parquet(base + "/" + _QSKETCH)
+            read_parquet(spark, base + "/" + _QSKETCH)
             .drop("bucket_part", "epoch")
             .withColumn("bucket", recoarse)
             .groupBy("bucket", *key_cols, "qbucket")
@@ -639,7 +623,7 @@ def rollup_regrain(
         k = meta["distinct_k"]
         dwin = Window.partitionBy("bucket", *key_cols).orderBy("h")
         ds = (
-            spark.read.parquet(base + "/" + _DSKETCH)
+            read_parquet(spark, base + "/" + _DSKETCH)
             .drop("bucket_part", "epoch")
             .withColumn("bucket", recoarse)
             .select("bucket", *key_cols, "h")
@@ -654,15 +638,9 @@ def rollup_regrain(
             .partitionBy("bucket_part")
             .parquet(dest + "/" + _DSKETCH)
         )
-    from . import dedup as _dedup
-
-    _dedup._store_write_text(
-        spark,
-        dest + "/" + _META,
-        json.dumps({**{k: meta[k] for k in meta
-                       if k not in ("grain", "layout")},
-                    "grain": grain}),
-    )
+    write_meta(spark, dest, {**{k: meta[k] for k in meta
+                                if k not in ("grain", "layout")},
+                             "grain": grain})
 
 
 def rollup_stream(
@@ -707,23 +685,15 @@ def rollup_stream(
         ),
     }
 
+    # every key any rollup sidecar holds, so the check is exact: a
+    # save_rollup_store store (no "layout") cannot be streamed into
+    pinned = dict.fromkeys(("sketch_bits", "distinct_col", "distinct_k")) | want
+
     def _sink(batch_df: DataFrame, epoch: int) -> None:
-        import json as _json
-
-        from . import dedup as _dedup
-
-        if not _dedup._store_exists(spark, base + "/" + _META):
-            _dedup._store_write_text(
-                spark, base + "/" + _META, _json.dumps(want)
-            )
-        else:
-            meta = _check_meta(spark, base, None)
-            if meta != want:
-                raise ValueError(
-                    f"rollup store at {base} was built with {meta}, "
-                    f"stream requested {want} (save_rollup_store stores "
-                    f"cannot be streamed into — use a fresh path)"
-                )
+        try:
+            read_meta(spark, base, pinned, "rollup store")
+        except FileNotFoundError:
+            write_meta(spark, base, want)
         partials = rollup_partials(
             batch_df, time_col, key_cols, value_col, grain
         )

@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..store import epoch_dirs, read_parquet
 from .sample import hash_bucket
 
 __all__ = [
@@ -166,11 +167,11 @@ def write_training_shards(
     must pass the same format (verify_training_shards(data_format=)).
 
     Both writes go through Spark's Hadoop FS layer, so the layout is
-    whole on hdfs:// and s3a:// paths (the ADVICE r05 meta.json lesson:
-    never split a store between driver-local open() and the cluster
-    filesystem). ``mode("overwrite")`` makes a re-run idempotent — the
-    retry story is "overwrite the epoch", the same shape as the
-    streaming sinks (watermark_ops epoch writes).
+    whole on hdfs:// and s3a:// paths (`store.py`'s persisted-store
+    contract: never split a store between driver-local open() and the
+    cluster filesystem). ``mode("overwrite")`` makes a re-run
+    idempotent — the retry story is "overwrite the epoch", the same
+    shape as the streaming sinks (watermark_ops epoch writes).
 
     The manifest is computed FROM THE FILES JUST WRITTEN (grouping by
     the on-disk ``shard`` partition column), never from a second scan
@@ -196,7 +197,7 @@ def write_training_shards(
         written, id_col, content_col, weight_col
     )
     manifest.write.mode("overwrite").parquet(os.path.join(path, "manifest"))
-    return spark.read.parquet(os.path.join(path, "manifest"))
+    return read_parquet(spark, os.path.join(path, "manifest"))
 
 
 def verify_training_shards(
@@ -238,7 +239,7 @@ def verify_training_shards(
         F.col("n_tokens").alias("a_tokens"),
         F.col("checksum").alias("a_checksum"),
     )
-    expected = spark.read.parquet(os.path.join(path, "manifest")).select(
+    expected = read_parquet(spark, os.path.join(path, "manifest")).select(
         F.col("shard").cast("long").alias("shard"),
         F.col("n_docs").alias("e_docs"),
         F.col("n_tokens").alias("e_tokens"),
@@ -354,25 +355,12 @@ def compact_epochs(
     The rewrite itself is the one unavoidable corpus read (small epoch
     files -> consolidated shard files, the classic small-file
     compaction); rows re-hash deterministically under the new count."""
-    from .dedup import _store_fs
-
-    fs, hpath = _store_fs(spark, sink_path.rstrip("/"))
-    epoch_dirs = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(hpath)
-        if st.isDirectory() and st.getPath().getName().startswith("epoch=")
-    )
-    if not epoch_dirs:
-        raise FileNotFoundError(
-            f"compact_epochs: no epoch=* directories under {sink_path}"
-        )
     base = sink_path.rstrip("/")
-    epoch_manifests = [
-        spark.read.parquet(f"{base}/{e}/manifest") for e in epoch_dirs
-    ]
+    epochs = [f"{base}/epoch={e}" for e in epoch_dirs(spark, base)]
+    epoch_manifests = [read_parquet(spark, f"{e}/manifest") for e in epochs]
     data = None
-    for e in epoch_dirs:
-        part = spark.read.parquet(f"{base}/{e}/shards").drop("shard")
+    for e in epochs:
+        part = read_parquet(spark, f"{e}/shards").drop("shard")
         data = part if data is None else data.unionByName(part)
     compacted = write_training_shards(
         data, out_path, id_col, content_col, weight_col, shards
@@ -403,4 +391,4 @@ def compact_epochs(
                 "compact_epochs: per-shard manifest disagreement on "
                 f"shards {[r['shard'] for r in bad]}"
             )
-    return spark.read.parquet(os.path.join(out_path, "manifest"))
+    return read_parquet(spark, os.path.join(out_path, "manifest"))

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import lineage
+from ..store import read_meta, read_parquet, write_meta
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -622,7 +623,6 @@ def ivf_build_index(
     quantizer tolerates stale centroids (recall degrades gradually;
     assignments stay consistent because probes use the SAVED centroids,
     never retrained ones)."""
-    import json
     import os
 
     cents = ivf_train(candidates, dim, n_centroids, iters, id_col, vec_col)
@@ -636,8 +636,9 @@ def ivf_build_index(
         .mode("overwrite")
         .parquet(os.path.join(path, "lists"))
     )
-    with open(os.path.join(path, "centroids.json"), "w") as f:
-        json.dump({"dim": dim, "n_centroids": n_centroids, "centroids": cents}, f)
+    write_meta(candidates.sparkSession, path,
+               {"dim": dim, "n_centroids": n_centroids, "centroids": cents},
+               name="centroids.json")
     return cents
 
 
@@ -663,12 +664,9 @@ def topk_ivf_indexed(
     (the hard_negatives composition on the PHYSICAL index layout):
     the band filter composes with the partition pruning, so banded
     mining over a built index reads only the probed list files."""
-    import json
     import os
 
-    with open(os.path.join(path, "centroids.json")) as f:
-        meta = json.load(f)
-    cents = meta["centroids"]
+    cents = read_meta(spark, path, name="centroids.json")["centroids"]
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -677,7 +675,7 @@ def topk_ivf_indexed(
     ).localCheckpoint(eager=True)  # probed twice: cid collect + join
 
     probe_cids = sorted({r["cid"] for r in q.select("cid").distinct().collect()})
-    lists = spark.read.parquet(os.path.join(path, "lists")).where(
+    lists = read_parquet(spark, os.path.join(path, "lists")).where(
         F.col("cid").isin(probe_cids)
     )
     scored = (
@@ -1333,7 +1331,6 @@ def ivfpq_build_index(
     the coarse centroids and the PQ codebooks. One corpus scan assigns
     and encodes; probes partition-prune AND read 1/32 of the bytes per
     surviving row. This is the index a 100 TB deployment ships."""
-    import json
     import os
 
     sample = train_sample(
@@ -1355,19 +1352,20 @@ def ivfpq_build_index(
         .mode("overwrite")
         .parquet(os.path.join(path, "lists"))
     )
-    with open(os.path.join(path, "model.json"), "w") as f:
-        json.dump(
-            {
-                "dim": dim,
-                "n_centroids": n_centroids,
-                "nprobe_default": nprobe_default,
-                "m": m,
-                "ksub": ksub,
-                "centroids": cents,
-                "books": books,
-            },
-            f,
-        )
+    write_meta(
+        candidates.sparkSession,
+        path,
+        {
+            "dim": dim,
+            "n_centroids": n_centroids,
+            "nprobe_default": nprobe_default,
+            "m": m,
+            "ksub": ksub,
+            "centroids": cents,
+            "books": books,
+        },
+        name="model.json",
+    )
 
 
 def topk_ivfpq_indexed(
@@ -1384,11 +1382,9 @@ def topk_ivfpq_indexed(
     scores the surviving code rows against the saved codebooks.
     Produces exactly topk_ivfpq's rows given the same build
     parameters."""
-    import json
     import os
 
-    with open(os.path.join(path, "model.json")) as f:
-        meta = json.load(f)
+    meta = read_meta(spark, path, name="model.json")
     cents = meta["centroids"]
     books = meta["books"]
     m = meta["m"]
@@ -1402,7 +1398,7 @@ def topk_ivfpq_indexed(
     ).localCheckpoint(eager=True)  # probed twice: cid collect + join
 
     probe_cids = sorted({r["cid"] for r in q.select("cid").distinct().collect()})
-    lists = spark.read.parquet(os.path.join(path, "lists")).where(
+    lists = read_parquet(spark, os.path.join(path, "lists")).where(
         F.col("cid").isin(probe_cids)
     )
     adc = _adc_score(F.col("codes"), F.col("qv"), books)
@@ -1500,11 +1496,9 @@ def ivfpq_append(
     scheduled rebuild. Append cost is one scan of the NEW rows only;
     probes see the union immediately because partition listing is
     dynamic."""
-    import json
     import os
 
-    with open(os.path.join(path, "model.json")) as f:
-        meta = json.load(f)
+    meta = read_meta(new_candidates.sparkSession, path, name="model.json")
     cents = meta["centroids"]
     books = meta["books"]
     (

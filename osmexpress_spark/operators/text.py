@@ -44,15 +44,6 @@ def stopword_count(text: Column) -> Column:
     return F.size(F.filter(tokens(text), lambda w: w.isin(*STOPWORDS)))
 
 
-def avg_token_len(text: Column) -> Column:
-    """Mean token length, rounded to 4 (int/int ratio — deterministic)."""
-    ws = tokens(text)
-    total = F.aggregate(
-        F.transform(ws, F.length), F.lit(0), lambda acc, x: acc + x
-    )
-    return F.round(total.cast("double") / F.size(ws), 4)
-
-
 def quality_score(text: Column) -> Column:
     """Toy quality heuristic: long-enough docs with moderate stopword
     ratio score higher. All-rational arithmetic, rounded to 4."""

@@ -25,6 +25,7 @@ from .operators import (
 )
 from .queries import t
 from .registry import defq
+from .store import read_parquet
 from .streaming import stateful, watermark_ops
 
 EMB_DIM = 64
@@ -4413,7 +4414,7 @@ def _stream_drift_impl(spark, sf_dir, max_files_per_trigger):
         value_col="n_chars",
         epoch_col="epoch",
     ).awaitTermination()
-    return spark.read.parquet(base + "/out").select(
+    return read_parquet(spark, base + "/out").select(
         F.col("epoch").cast("long").alias("epoch"),
         "bucket",
         "old_n",

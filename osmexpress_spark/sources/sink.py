@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators.extract import ExtractResult
-from ..store import write_sorted
+from ..store import read_parquet, write_sorted
 
 
 def _strip_user_data(df):
@@ -390,4 +390,4 @@ def read_training_shards(spark, path: str):
     both axes) while letting trainer workers each stream ONE shard
     file sequentially; this reader is for validation and small jobs,
     not the trainer hot path."""
-    return spark.read.parquet(path).orderBy("pos", "shard")
+    return read_parquet(spark, path).orderBy("pos", "shard")

@@ -57,6 +57,33 @@ asked for its `latest_version()` without changing it.
 
 At production scale swap this for Delta/Iceberg — the engine only uses
 `read_table`/`commit`/`merge_commit`/`metadata`, which map 1:1.
+
+The corpus stores that `operators/` persist (MinHash signatures, image
+and audio hash bands, BM25 postings, rollup partials and IVF / IVF-PQ
+indexes) share one contract, and this module is its only implementation:
+
+- A store is a directory of parquet data plus one JSON sidecar
+  (`meta.json`; `centroids.json` or `model.json` for the IVF indexes)
+  holding the parameters it was built with.
+- Sidecars go through Spark's Hadoop FileSystem layer (`store_fs`),
+  never the driver's `open()`, so on hdfs:// or s3a:// a store's
+  sidecar lives on the same filesystem as its data.
+- `write_meta` runs after the data is written and publishes the
+  sidecar with a rename-commit (`write_text`): a reader sees the old
+  sidecar or the new one, never a torn or missing one.
+- `read_meta` is the one pinned-parameter check: a load whose
+  parameters differ from the sidecar's raises `ValueError` ("... was
+  built with ..., requested ...") instead of silently reading data laid
+  out under other parameters.
+- Data directories are read with `read_parquet`, so building a store
+  read runs no Spark job; partitioned layouts fall back to inference.
+- `epoch_dirs` lists the `epoch=N` directories of a stream sink.
+
+A dataset directory's `_metadata.json` goes the same way: `expand`
+publishes it with `write_meta` and `Dataset.metadata` reads it with
+`read_meta`. `tests/test_store_seam.py` pins the sidecar bytes
+of every store kind and guards that no other module keeps its own copy
+of these helpers or reads package-written parquet another way.
 """
 
 from __future__ import annotations
@@ -127,6 +154,123 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     if schema is not None and all(_footer_schema(p) == schema for p in paths[1:]):
         return spark.read.schema(schema).parquet(*paths)
     return spark.read.option("mergeSchema", len(paths) > 1).parquet(*paths)
+
+
+def store_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``, on the filesystem its
+    scheme names (hdfs://, s3a://, file:, or the default one)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def write_text(spark: SparkSession, path: str, text: str,
+               _force_swap: bool = False) -> None:
+    """Publish a small text file with rename-commit semantics: write
+    the bytes to a sibling temp path, then move the temp over ``path``.
+    The move prefers Hadoop FileContext's overwrite-rename, one atomic
+    metadata operation on HDFS and the local filesystem, so a reader
+    sees the old file or the new one, never a torn or missing file. On
+    a filesystem whose FileContext lacks atomic overwrite, the old file
+    is parked at a ``.bak`` sibling first and restored if the final
+    rename fails, so a failed publish keeps the prior file. Stores are
+    single-writer: two concurrent writers still race on which file
+    wins."""
+    import uuid
+
+    jvm = spark._jvm
+    fs, hpath = store_fs(spark, path)
+    tag = uuid.uuid4().hex[:12]
+    _, tmp = store_fs(spark, path + ".tmp." + tag)
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+    if not _force_swap:
+        try:
+            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+                hpath.toUri(), spark._jsc.hadoopConfiguration()
+            )
+            opts = spark.sparkContext._gateway.new_array(
+                jvm.org.apache.hadoop.fs.Options.Rename, 1)
+            opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+            fc.rename(tmp, hpath, opts)
+            return
+        except Exception:
+            pass  # no FileContext overwrite-rename: park-and-swap
+    _, bak = store_fs(spark, path + ".bak." + tag)
+    had_old = bool(fs.exists(hpath))
+    if had_old and not fs.rename(hpath, bak):
+        fs.delete(tmp, False)
+        raise OSError(f"rename-commit of {path} failed (park)")
+    if not fs.rename(tmp, hpath):
+        if had_old:
+            fs.rename(bak, hpath)  # restore the prior file
+        fs.delete(tmp, False)
+        raise OSError(f"rename-commit of {path} failed (swap)")
+    if had_old:
+        fs.delete(bak, False)
+
+
+def read_text(spark: SparkSession, path: str) -> str:
+    """Read a file `write_text` published. After its park-and-swap
+    fallback there is a sub-millisecond window in which ``path`` does
+    not exist, so a failed open is retried once after a short sleep.
+    A file that is still absent raises FileNotFoundError."""
+    fs, hpath = store_fs(spark, path)
+    for attempt in (0, 1):
+        try:
+            stream = fs.open(hpath)
+            break
+        except Exception:
+            if attempt == 0:
+                time.sleep(0.05)
+            elif not fs.exists(hpath):
+                raise FileNotFoundError(path) from None
+            else:
+                raise
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def write_meta(spark: SparkSession, path: str, meta: dict,
+               name: str = "meta.json") -> None:
+    """Publish store ``path``'s JSON sidecar ``name`` (`write_text`).
+    Call it after the store's data is written."""
+    write_text(spark, path.rstrip("/") + "/" + name, json.dumps(meta))
+
+
+def read_meta(spark: SparkSession, path: str, want: dict | None = None,
+              what: str = "store", name: str = "meta.json") -> dict:
+    """Store ``path``'s JSON sidecar ``name``, checked against the
+    pinned parameters ``want``: a key whose sidecar value differs
+    (an absent key reads as None) raises ValueError naming the store
+    as ``what``."""
+    meta = json.loads(read_text(spark, path.rstrip("/") + "/" + name))
+    want = want or {}
+    have = {k: meta.get(k) for k in want}
+    if have != want:
+        raise ValueError(f"{what} at {path} was built with {have}, requested {want}")
+    return meta
+
+
+def epoch_dirs(spark: SparkSession, path: str) -> list[int]:
+    """The ``N`` of every ``epoch=N`` directory of the stream sink at
+    ``path``, ascending. An absent sink or one without epochs raises
+    FileNotFoundError: an empty sink looks the same as a wrong path."""
+    fs, hpath = store_fs(spark, path.rstrip("/"))
+    if not fs.exists(hpath):
+        raise FileNotFoundError(f"no sink at {path}")
+    epochs = sorted(
+        int(st.getPath().getName()[len("epoch="):])
+        for st in fs.listStatus(hpath)
+        if st.isDirectory() and st.getPath().getName().startswith("epoch=")
+    )
+    if not epochs:
+        raise FileNotFoundError(f"no epoch=* directories under {path}")
+    return epochs
 
 
 def _layer_of_file() -> Column:

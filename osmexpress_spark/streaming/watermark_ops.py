@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..store import epoch_dirs, read_parquet
+
 
 def file_stream(
     spark,
@@ -347,28 +349,15 @@ def verify_shard_epochs(
     unioned with an ``epoch`` column. Empty result == every shard of
     every epoch intact; a row names (epoch, shard, both sides).
 
-    The epoch listing goes through the Hadoop FS layer (cluster-path
-    safe, the dedup-store lesson); the driver loop is bounded at one
-    directory per trigger ever fired — epochs are few by construction.
-    Raises FileNotFoundError when no epoch has been written (an empty
-    sink is indistinguishable from a wrong path — fail loudly)."""
-    from ..operators.dedup import _store_fs
+    The epoch listing is `store.epoch_dirs` (Hadoop FS layer, so
+    cluster paths work); the driver loop is bounded at one directory
+    per trigger ever fired — epochs are few by construction. Raises
+    FileNotFoundError when no epoch has been written (an empty sink is
+    indistinguishable from a wrong path — fail loudly)."""
     from ..operators import shards as shards_ops
 
-    fs, hpath = _store_fs(spark, path.rstrip("/"))
-    if not fs.exists(hpath):
-        raise FileNotFoundError(f"verify_shard_epochs: no sink at {path}")
-    epochs = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hpath)
-        if st.isDirectory() and st.getPath().getName().startswith("epoch=")
-    )
-    if not epochs:
-        raise FileNotFoundError(
-            f"verify_shard_epochs: no epoch=* directories under {path}"
-        )
     out = None
-    for e in epochs:
+    for e in epoch_dirs(spark, path):
         bad = shards_ops.verify_training_shards(
             spark,
             f"{path.rstrip('/')}/epoch={e}",
@@ -414,7 +403,7 @@ def drift_monitor_stream(
         n = bdf.count()
         if n == 0:
             return
-        ref = spark.read.parquet(ref_sketch_path)
+        ref = read_parquet(spark, ref_sketch_path)
         census = sketch_ops.drift_census_from_sketches(
             ref, sketch_ops.quantile_sketch_build(bdf, F.col(value_col))
         )
@@ -468,7 +457,7 @@ def drift_census_stream(
         epochs = [r[0] for r in bdf.select(epoch_col).distinct().collect()]
         if not epochs:
             return
-        ref = spark.read.parquet(ref_sketch_path)
+        ref = read_parquet(spark, ref_sketch_path)
         for e in epochs:
             census = sketch_ops.drift_census_from_sketches(
                 ref,

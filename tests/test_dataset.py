@@ -58,6 +58,19 @@ def committed(spark, tmp_path_factory):
     return d
 
 
+@pytest.fixture(scope="module")
+def committed_no_edges(spark, tmp_path_factory):
+    """The fixture written without reverse indexes, after `update
+    --commit` of OSC: its snapshot holds only the four core tables."""
+    work = tmp_path_factory.mktemp("committed_no_edges")
+    d = testing.ensure_fixture_dataset(spark, str(work / "ds"), n_nodes=100,
+                                       seed=3, materialize_edges=False)
+    osc = work / "c.osc"
+    osc.write_text(OSC)
+    assert main(["update", d, str(osc), "--commit"]) == 0
+    return d
+
+
 def test_dataset_reads_committed_lookup(spark, committed):
     (row,) = Dataset(spark, committed).lookup("node", 1).collect()
     assert (row["version"], row["lon"], row["lat"]) == (9, 202500000, 105000000)
@@ -112,3 +125,27 @@ def test_sorted_writers_share_one_layout(spark, plain, tmp_path):
     expand_mod.expand(spark, pbf, dest)
     for name in CORE_TABLES + EDGE_TABLES:
         assert_range_sorted(os.path.join(dest, name), DEFAULT_SORT[name])
+
+
+def test_materialize_edges_commits_to_the_store(spark, committed_no_edges):
+    """On a dataset with a committed snapshot, `materialize_edges`
+    commits the reverse indexes as a new store version (range-sorted,
+    replication metadata carried forward) instead of writing them into
+    the expand layout, which no reader opens once a snapshot exists."""
+    d = committed_no_edges
+    store = SnapshotStore(spark, d)
+    assert set(store.tables()) == set(CORE_TABLES)
+    before = store.metadata()
+    Dataset(spark, d).materialize_edges()
+    assert not any(os.path.exists(os.path.join(d, n)) for n in EDGE_TABLES)
+    assert set(Dataset(spark, d).tables()) == set(CORE_TABLES + EDGE_TABLES)
+    after = store.metadata()
+    assert after["seqnum"] == before["seqnum"]
+    assert {k: v for k, v in after.items() if k != "committed_at"} == {
+        k: v for k, v in before.items() if k != "committed_at"}
+    entries = store._manifest()["tables"]
+    for name in EDGE_TABLES:
+        assert_range_sorted(os.path.join(d, entries[name]), DEFAULT_SORT[name])
+    got = Dataset(spark, d).edges("node_way")
+    assert got.where(F.col("way_id") == 999002).count() == 2
+    assert _rows(got) == _rows(store.read_table("node_way"))

@@ -145,24 +145,24 @@ def test_rollup_distinct_global_branch_has_no_window(spark, tmp_path):
 
 
 def test_meta_publish_is_rename_commit(spark, tmp_path):
-    """_store_write_text lands meta via temp+rename: re-publication
+    """store.write_text lands meta via temp+rename: re-publication
     replaces the content and leaves no .tmp. siblings behind."""
     import os
 
-    from osmexpress_spark.operators import dedup as D
+    from osmexpress_spark import store as S
 
     path = str(tmp_path / "meta.json")
-    D._store_write_text(spark, path, '{"v": 1}')
-    D._store_write_text(spark, path, '{"v": 2}')
-    assert D._store_read_text(spark, path) == '{"v": 2}'
+    S.write_text(spark, path, '{"v": 1}')
+    S.write_text(spark, path, '{"v": 2}')
+    assert S.read_text(spark, path) == '{"v": 2}'
     leftovers = [
         f for f in os.listdir(tmp_path) if ".tmp." in f or ".bak." in f
     ]
     assert not leftovers, leftovers
     # round-9 ADVICE: the fallback (park-and-swap) path must also
     # publish correctly and retain no siblings
-    D._store_write_text(spark, path, '{"v": 3}', _force_swap=True)
-    assert D._store_read_text(spark, path) == '{"v": 3}'
+    S.write_text(spark, path, '{"v": 3}', _force_swap=True)
+    assert S.read_text(spark, path) == '{"v": 3}'
     leftovers = [
         f for f in os.listdir(tmp_path) if ".tmp." in f or ".bak." in f
     ]
